@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # Compile gate: refuse to commit a tree whose Scala sources do not
-# compile (main + test). Round 8 shipped an end-of-round snapshot that
-# failed `sbt compile`, which blanked the entire driver signal for the
-# round — this hook makes that impossible. Bypass (emergencies only):
-# git commit --no-verify.
+# compile (main + test), or that the benchmark in perfbench/ no longer
+# builds against (`perfbench/build.py --test`). Round 8 shipped an
+# end-of-round snapshot that failed `sbt compile`, which blanked the
+# entire driver signal for the round — this hook makes that impossible.
+# Bypass (emergencies only): git commit --no-verify.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 
@@ -16,4 +17,13 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$'; then
     exit 1
   fi
   echo "[precommit] compile green" >&2
+  # the benchmark compiles src/main/scala together with perfbench/src:
+  # a signature it calls that changed fails here, not at benchmark time
+  echo "[precommit] building the benchmark against the staged sources" >&2
+  if ! python3 perfbench/build.py --test >/tmp/precommit-perfbench.log 2>&1; then
+    echo "[precommit] BENCHMARK BUILD/TEST FAILED - commit refused. Tail of log:" >&2
+    tail -30 /tmp/precommit-perfbench.log >&2
+    exit 1
+  fi
+  echo "[precommit] benchmark build green" >&2
 fi

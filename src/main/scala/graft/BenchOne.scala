@@ -9,8 +9,8 @@ object BenchOne {
     val name = args(0)
     val n = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val spark = SparkSession.builder().master(s"local[${LocalCpus.n}]")
+      .config("spark.sql.shuffle.partitions", LocalCpus.n)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()

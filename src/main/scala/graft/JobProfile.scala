@@ -15,12 +15,11 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names0 = args(0)
     val explainDir = if (args.length > 1) Some(args(1)) else None
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[${LocalCpus.n}]")
+      .config("spark.sql.shuffle.partitions", LocalCpus.n)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)

@@ -22,8 +22,8 @@ object ScaleCheck {
     // optional 2nd arg: run only probes whose name contains this substring
     val only = args.lift(1)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
+      .master(s"local[${LocalCpus.n}]")
+      .config("spark.sql.shuffle.partitions", 2 * LocalCpus.n)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -52,8 +52,8 @@ object ServeFootprint {
     val nBatches = args.headOption.map(_.toInt).getOrElse(10)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[${LocalCpus.n}]")
+      .config("spark.sql.shuffle.partitions", LocalCpus.n)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -12,8 +12,8 @@ import graft.operators.Similarity
 object StepProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val spark = SparkSession.builder().master(s"local[${LocalCpus.n}]")
+      .config("spark.sql.shuffle.partitions", LocalCpus.n)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)

@@ -13,8 +13,8 @@ object VerifyOne {
     val sfDir  = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "/tmp/verify_one"
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
+      .master(s"local[${LocalCpus.n}]")
+      .config("spark.sql.shuffle.partitions", LocalCpus.n)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -508,9 +508,7 @@ object Sink {
       // tombstone — carry their ids in the generation's `folded` ledger
       // so post-rebuild replays are skipped (the compactIvfIndex rule)
       writeFoldedLedger(spark, genDir,
-        foldedBatchIds(spark, oldRoot) ++
-          ingestedBatchIdsAt(spark, oldRoot) ++
-          committedTombstoneBatchIds(spark, oldRoot))
+        absorbedBatchIds(spark, oldRoot, "ingested"))
       // COMMIT: one marker-file creation — from here on readers resolve
       // the new generation; everything below is recoverable cleanup
       fs.create(
@@ -597,27 +595,24 @@ object Sink {
       // rebuildIvfIndex (a coarse-flavor half-write must not leak
       // subdirs into this committed PQ generation, or vice versa)
       fs.delete(new org.apache.hadoop.fs.Path(genDir), true)
-      // unit-space quantizer — see rebuildIvfIndex. The written row
-      // count rides the write job (Dataset.observe — r18): the former
-      // read-back count re-scanned the just-written generation (a full
-      // index pass at scale) to learn a number the write already flows
-      val nObs = Observation()
+      // unit-space quantizer — see rebuildIvfIndex
       writeIvfPqIndex(
         graft.operators.Similarity.IvfIndex(
           fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
-        model.cents, model.codes, genDir, celledRowCount = Some(nObs))
+        model.cents, model.codes, genDir)
       fresh.unpersist()
       model.unpersist()
-      val nNew = nObs.get("n").asInstanceOf[Long]
+      // the written row count from the generation's parquet footers:
+      // exact and job-free, where a count observed on the write job
+      // would double on a retried map stage and abort a valid rebuild
+      val nNew = TinyParquet.rowCount(conf, s"$genDir/celled")
       require(nNew == nCur,
         s"rebuild corpus covers only $nNew of $nCur index rows - corpus " +
           "must contain every indexed vec_id (half-written generation " +
           "left uncommitted)")
       // absorbed batch ids → the generation's ledger, as rebuildIvfIndex
       writeFoldedLedger(spark, genDir,
-        foldedBatchIds(spark, oldRoot) ++
-          ingestedBatchIdsAt(spark, oldRoot) ++
-          committedTombstoneBatchIds(spark, oldRoot))
+        absorbedBatchIds(spark, oldRoot, "ingested"))
       // COMMIT: one marker-file creation, then recoverable cleanup
       fs.create(
         new org.apache.hadoop.fs.Path(s"$genDir/_SUCCESS"), true).close()
@@ -759,22 +754,13 @@ object Sink {
     if (!fs.exists(ingestedDir) && !fs.exists(tombsDir)) {
       (spark.read.parquet(s"$path/celled").count(), 0L)
     } else {
-      var nf = 0L
-      if (fs.exists(ingestedDir)) {
-        val nIngestedFiles = fs.listFiles(ingestedDir, true)
-        while (nIngestedFiles.hasNext) {
-          if (nIngestedFiles.next().getPath.getName.endsWith(".parquet"))
-            nf += 1
-        }
-      }
+      val nf = TinyParquet.visibleFiles(fs, ingestedDir).size.toLong
       // batch ids this fold absorbs — collected BEFORE the layouts
       // drop, written to the `folded` ledger so post-compaction replays
       // of an absorbed append/delete are skipped (a replayed tombstone
       // would otherwise mask the folded — possibly re-appended — base
       // rows; see [[deleteFromIvfIndex]])
-      val absorbed = foldedBatchIds(spark, path) ++
-        ingestedBatchIdsAt(spark, path) ++
-        committedTombstoneBatchIds(spark, path)
+      val absorbed = absorbedBatchIds(spark, path, "ingested")
       val merged = readIvfIndex(spark, path).celled
       // the returned row count rides the rewrite job itself
       // (Dataset.observe — r18): the former separate merged.count() was
@@ -982,22 +968,6 @@ object Sink {
     if (arg >= 0L) arg else persisted.getOrElse(builtIn)
   }
 
-  /** Count the `.parquet` files under a layout dir — the small-file
-    * census every `compact*IfNeeded` valve reads (a file LISTING, never
-    * a data scan; at scale this is the table format's file manifest).
-    */
-  private def countParquetFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Long = {
-    if (!fs.exists(dir)) return 0L
-    var n = 0L
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
-  }
-
   /** The hands-off maintenance valve for the IVF / IVF-PQ families under
     * INGEST AND DELETE pressure — [[compactTextIndexIfNeeded]]'s vector
     * twin, closing the r14 gap where only the text index self-maintained
@@ -1009,11 +979,11 @@ object Sink {
     * ever-growing mask on every serve until someone hand-called
     * [[compactIvfIndex]].
     *
-    * Below every threshold this is a census read ONLY (a file listing +
-    * two tiny meta collects — never a data scan, never a write). Above
-    * any of them it folds via [[compactIvfIndex]]: ingested batches
-    * merge into `celled`, tombstones apply physically and their layouts
-    * drop, the `folded` ledger absorbs both — probe answers are
+    * Below every threshold this is a census read ONLY (never a data
+    * scan, never a write). Above any of them it folds via
+    * [[compactIvfIndex]]: ingested batches merge into `celled`,
+    * tombstones apply physically and their layouts drop, the `folded`
+    * ledger absorbs both — probe answers are
     * bit-identical before/after (spec-asserted), only the file census
     * and the mask cost change.
     *
@@ -1043,19 +1013,9 @@ object Sink {
     val path = resolveIndexRoot(spark, rawPath)
     val ingested = new org.apache.hadoop.fs.Path(s"$path/ingested")
     val fs = ingested.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = countParquetFiles(fs, ingested)
+    val nFiles = TinyParquet.visibleFiles(fs, ingested).size.toLong
     val (nTombBatches, maskedIds) = tombstonePressure(spark, path)
-    // distinct ingest batch ids from the partition DIRECTORY names —
-    // a pure listing (the layout is ingested/cell=X/batch_id=Y), so the
-    // below-threshold path never launches a job
-    val ingBatches: Long =
-      if (!fs.exists(ingested)) 0L
-      else fs.listStatus(ingested).toSeq.filter(_.isDirectory)
-        .flatMap(c => fs.listStatus(c.getPath).toSeq)
-        .collect { case s if s.isDirectory &&
-          s.getPath.getName.startsWith("batch_id=") => s.getPath.getName }
-        .distinct.size.toLong
-    val nBatches = ingBatches + nTombBatches
+    val nBatches = batchIdsAt(spark, path, "ingested").size + nTombBatches
     if (nFiles <= limFiles && nBatches <= limBatches &&
         maskedIds <= limMasked)
       (false, nFiles, nBatches, maskedIds)
@@ -1159,11 +1119,7 @@ object Sink {
       codes: DataFrame,
       path: String,
       mode: String = "overwrite",
-      policy: Option[ValvePolicy] = None,
-      // when set, receives the written celled row count off the write
-      // job itself (Dataset.observe) — [[rebuildIvfPqIndex]]'s coverage
-      // check formerly re-scanned the just-written table for it (r18)
-      celledRowCount: Option[Observation] = None): Unit = {
+      policy: Option[ValvePolicy] = None): Unit = {
     val spark = index.celled.sparkSession
     import spark.implicits._
     policy.foreach(writeValvePolicy(spark, path, _)) // see writeIvfIndex
@@ -1176,12 +1132,9 @@ object Sink {
         Seq("ingested", "tombstones", "tombstones_meta", "qcentroids",
           "folded"))
     }
-    val celledOut = index.celled
-      .join(codes, "vec_id")
-      .select(col("vec_id"), col("unit"), col("codes"), col("cell"))
     writeDistribution(
-      celledRowCount.fold(celledOut)(o =>
-        celledOut.observe(o, count(lit(1)).as("n"))),
+      index.celled.join(codes, "vec_id")
+        .select(col("vec_id"), col("unit"), col("codes"), col("cell")),
       col("cell"))
       .write.mode(mode).partitionBy("cell").parquet(s"$path/celled")
     index.centroids.toSeq.zipWithIndex
@@ -1410,18 +1363,9 @@ object Sink {
         !fs.exists(tombsIn)) {
       (spark.read.parquet(s"$path/signed").count(), 0L)
     } else {
-      var nf = 0L
-      if (fs.exists(postIn)) {
-        val it = fs.listFiles(postIn, true)
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) nf += 1
-        }
-      }
+      val nf = TinyParquet.visibleFiles(fs, postIn).size.toLong
       // absorbed batch ids → `folded` ledger, the compactIvfIndex twin
-      val absorbed = foldedBatchIds(spark, path) ++
-        // batch_id is a partition dir name — listing, not a data scan
-        listedBatchIds(spark, s"$path/signed_ingested") ++
-        committedTombstoneBatchIds(spark, path)
+      val absorbed = absorbedBatchIds(spark, path, "signed_ingested")
       val merged = readLshIndex(spark, path)
       def swap(tmpName: String, liveName: String): Unit = {
         val live = new org.apache.hadoop.fs.Path(s"$path/$liveName")
@@ -1460,10 +1404,10 @@ object Sink {
     * last vector valve, so ALL FOUR index families now self-maintain
     * under ingest AND delete pressure (text: compaction valve; IVF /
     * IVF-PQ: drift rebuild + this valve's IVF twin; LSH: this).
-    * Below every threshold: a census read only (file listing + the
-    * batch-count meta collects). Above any: [[compactLshIndex]] folds
-    * ingested batches into `signed`/`postings` and applies tombstones
-    * physically — probe answers bit-identical before/after.
+    * Below every threshold: a census read only. Above any:
+    * [[compactLshIndex]] folds ingested batches into `signed`/`postings`
+    * and applies tombstones physically — probe answers bit-identical
+    * before/after.
     * Thresholds as on the IVF valve — EXCEPT the file default: one LSH
     * append legitimately touches up to bands × 2^bitsPerBand posting
     * directories (the posexplode fans every vector into all its band
@@ -1492,17 +1436,10 @@ object Sink {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val postIn = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
-    val signedIn = new org.apache.hadoop.fs.Path(s"$path/signed_ingested")
-    val nFiles = countParquetFiles(fs, postIn)
+    val nFiles = TinyParquet.visibleFiles(fs, postIn).size.toLong
     val (nTombBatches, maskedIds) = tombstonePressure(spark, path)
-    // signed_ingested is partitioned by batch_id at the top level —
-    // the batch census is a directory listing
-    val ingBatches: Long =
-      if (!fs.exists(signedIn)) 0L
-      else fs.listStatus(signedIn).toSeq
-        .count(s => s.isDirectory &&
-          s.getPath.getName.startsWith("batch_id=")).toLong
-    val nBatches = ingBatches + nTombBatches
+    val nBatches =
+      batchIdsAt(spark, path, "signed_ingested").size + nTombBatches
     if (nFiles <= limFiles && nBatches <= limBatches &&
         maskedIds <= limMasked)
       (false, nFiles, nBatches, maskedIds)
@@ -1992,7 +1929,7 @@ object Sink {
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tombstones")))
       return None
     // commit records are one tiny row per batch: driver-side read, no
-    // Spark job (TinyParquet — r18; batch_id is the partition dir name)
+    // Spark job (TinyParquet — r18)
     val committed = TinyParquet
       .readDir(spark.sparkContext.hadoopConfiguration,
         s"$root/tombstones_meta")
@@ -2196,7 +2133,7 @@ object Sink {
     if (!exists("doc_stats_ingested")) base
     else {
       val folded = foldedBatchIds(spark, path)
-      val committed = committedIngestBatchIds(spark, path)
+      val committed = batchIdsAt(spark, path, "meta_ingested")
         .diff(folded)
         .filter(b => beforeBatch.forall(b < _)).toSeq
       base.unionByName(
@@ -2305,66 +2242,29 @@ object Sink {
       nObs.get("n").asInstanceOf[Long], 0L, batchId)
   }
 
-  /** Batch ids with a landed commit record (`meta_ingested` row) at the
-    * RESOLVED root — the batches [[readTextIndex]] unions in.
-    */
-  /** Distinct `batch_id=<id>` partition values that hold at least one
-    * parquet file under `dir` — a pure FileSystem listing (no Spark
-    * job; r18). The ≥1-file guard keeps the semantics of the former
-    * data-side reads: a directory a torn write left empty contributes
-    * no rows to a scan, so it must contribute no id here either.
-    */
-  private def listedBatchIds(
+  /** Batch ids of the visible files in layout `sub` at `root`. */
+  private def batchIdsAt(
       spark: org.apache.spark.sql.SparkSession,
-      dir: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Set.empty
-    val ids = collection.mutable.Set.empty[Long]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        var d = f.getParent
-        while (d != null && d.toString.length >= dir.length) {
-          val n = d.getName
-          if (n.startsWith("batch_id=")) {
-            ids += n.stripPrefix("batch_id=").toLong
-            d = null
-          } else d = d.getParent
-        }
-      }
-    }
-    ids.toSet
+      root: String,
+      sub: String): Set[Long] = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
+    TinyParquet.batchIds(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def committedIngestBatchIds(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String): Set[Long] =
-    // commit records land one file per batch_id=K dir — the listing IS
-    // the committed set (the former one-collect read, job-free)
-    listedBatchIds(spark, s"$root/meta_ingested")
-
-  /** Distinct batch ids present in a vector index's `ingested/` layout
-    * (from the partition directory names) — what an in-place compaction
-    * or a rebuild absorbs into the folded ledger.
+  /** Every batch id a fold of the RESOLVED `root` absorbs into its
+    * `folded` ledger: the ledger so far, the batches of the family's
+    * ingest layout (`meta_ingested` commit records for text, the
+    * `ingested` / `signed_ingested` data for IVF / LSH) and the
+    * committed tombstone batches — so a post-fold replay of any of them
+    * is skipped, not re-applied.
     */
-  private def ingestedBatchIdsAt(
+  private def absorbedBatchIds(
       spark: org.apache.spark.sql.SparkSession,
-      root: String): Set[Long] =
-    // batch_id is a partition directory name — the listing replaces
-    // the former distinct() scan of the ingested DATA (job-free; r18)
-    listedBatchIds(spark, s"$root/ingested")
-
-  /** Batch ids with a landed tombstone commit record at the RESOLVED
-    * root — what compaction adds to the `folded` ledger so a
-    * post-compaction delete replay is skipped, not re-applied.
-    */
-  private def committedTombstoneBatchIds(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String): Set[Long] =
-    // one commit-record file per batch_id=K dir — listing, not a job
-    listedBatchIds(spark, s"$root/tombstones_meta")
+      root: String,
+      ingestLayout: String): Set[Long] =
+    foldedBatchIds(spark, root) ++ batchIdsAt(spark, root, ingestLayout) ++
+      batchIdsAt(spark, root, "tombstones_meta")
 
   def compactTextIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -2381,13 +2281,7 @@ object Sink {
     if (!fs.exists(ingested) && !fs.exists(tombs)) {
       (spark.read.parquet(s"$path/postings").count(), 0L)
     } else {
-      var nf = 0L
-      if (fs.exists(ingested)) {
-        val it = fs.listFiles(ingested, true)
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) nf += 1
-        }
-      }
+      val nf = TinyParquet.visibleFiles(fs, ingested).size.toLong
       val idx = readTextIndex(spark, rawPath)
       val gen = committedGenerations(fs, rootPath)
         .maxOption.getOrElse(0L) + 1
@@ -2427,8 +2321,7 @@ object Sink {
       // folded — possibly re-appended — base rows and double-subtract
       // constants). One 8-byte row per batch ever folded: ledger size
       // is batches-folded, never corpus-sized
-      (foldedBatchIds(spark, path) ++ committedIngestBatchIds(spark, path)
-        ++ committedTombstoneBatchIds(spark, path))
+      absorbedBatchIds(spark, path, "meta_ingested")
         .toSeq.sorted
         .toDF("batch_id")
         .coalesce(1).write.mode("overwrite").parquet(s"$genDir/folded")
@@ -2471,12 +2364,12 @@ object Sink {
     * [[rebuildIvfIndex]]/[[rebuildIvfPqIndex]] gate applied to
     * compaction: fold the ingested layout back into base postings when
     * the small-file count or the committed-batch count exceeds its
-    * threshold; below both thresholds this is a no-op census read (a
-    * file listing + the batch-id collect — never a data scan). With
-    * this, all four index families run their maintenance unattended:
-    * IVF and IVF-PQ rebuild on occupancy drift, LSH reports
-    * bucket-balance drift, and the text index compacts on ingest
-    * pressure — the operator sets thresholds, not cron entries.
+    * threshold; below both thresholds this is a no-op census read
+    * (never a data scan, never a Spark job). With this, all four index
+    * families run their maintenance unattended: IVF and IVF-PQ rebuild
+    * on occupancy drift, LSH reports bucket-balance drift, and the text
+    * index compacts on ingest pressure — the operator sets thresholds,
+    * not cron entries.
     *
     * The thresholds target the actual failure mode: each appended batch
     * leaves one file per touched (bucket, batch) directory, and probe
@@ -2498,18 +2391,11 @@ object Sink {
     val path = resolveIndexRoot(spark, rawPath)
     val ingested = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
     val fs = ingested.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = countParquetFiles(fs, ingested)
-    // committed ingest batches from the meta_ingested partition
-    // DIRECTORY names — the commit records land one `batch_id=K` dir
-    // each, so the census is a listing and the below-threshold path is
-    // job-free (the valves' idle cost on a micro-batch cadence must be
-    // zero Spark jobs — r15 verdict; tombstonePressure's marker files
-    // do the same for the delete side)
-    val metaIn = new org.apache.hadoop.fs.Path(s"$path/meta_ingested")
-    val nBatches: Long =
-      if (!fs.exists(metaIn)) 0L
-      else fs.listStatus(metaIn).toSeq.count(s => s.isDirectory &&
-        s.getPath.getName.startsWith("batch_id=")).toLong
+    val nFiles = TinyParquet.visibleFiles(fs, ingested).size.toLong
+    // committed ingest batches = commit records; the below-threshold
+    // path stays job-free (the valves' idle cost on a micro-batch
+    // cadence must be zero Spark jobs — r15 verdict)
+    val nBatches = batchIdsAt(spark, path, "meta_ingested").size.toLong
     // tombstone batches count against the SAME valve: each one is a
     // broadcast anti-join + meta adjustment on every read until a
     // compaction folds it physically
@@ -2616,9 +2502,7 @@ object Sink {
         // minus any batch the folded ledger says already lives in the
         // base postings (an append that raced a compaction; see
         // [[appendTextIndex]]'s single-maintainer note). Commit records
-        // are tiny: driver-side read, no Spark job (TinyParquet — r18;
-        // batch_id comes from the partition directory name, same LONG
-        // the former cast("long") produced)
+        // are tiny: driver-side read, no Spark job (TinyParquet — r18)
         val folded = foldedBatchIds(spark, path)
         val committed = TinyParquet.readDir(conf, s"$path/meta_ingested")
           .map(r => (TinyParquet.long(r, "batch_id"),
@@ -3007,7 +2891,7 @@ object Sink {
       // are deletion-batch-sized; the check runs only on replay.
       def landed(path: String): Boolean = {
         val r = resolveIndexRoot(spark, path)
-        val inTombs = committedTombstoneBatchIds(spark, r).contains(batchId)
+        val inTombs = batchIdsAt(spark, r, "tombstones_meta").contains(batchId)
         // a stranded commit record (ids table gone — the physically-
         // folded strand [[committedTombstones]] tolerates) has nothing
         // left to verify against: the record itself proves the batch

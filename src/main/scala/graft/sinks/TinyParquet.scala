@@ -5,14 +5,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
 /** Driver-side reader for TINY parquet METADATA tables (index commit
   * records, corpus constants, centroid/codebook tables, ledgers —
-  * never data).
+  * never data), and the one place that decides which files under a
+  * persisted index layout are visible.
   *
   * Why it exists (r17 verdict #1): every `readTextIndex`/`readIvfIndex`
   * call paid 2–4 driver `collect()` jobs on parquet tables of a few
@@ -22,12 +24,21 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * is pure overhead at EVERY scale: these tables are metadata (nlist
   * rows, one commit record per batch), and metadata belongs to the
   * driver exactly like a table format's manifest files. Reading them
-  * in-process removes the job without touching the on-disk format —
-  * the same bytes, the same visibility rules, zero Spark jobs.
+  * in-process removes the job without touching the on-disk format.
   *
-  * Scope guard: callers must only point this at tables that are tiny
-  * BY CONSTRUCTION (bounded by nlist / m·k / batch count — never by
-  * corpus size). Data tables (postings, celled, tombstone ID lists)
+  * VISIBILITY RULE (the only one; every reader, valve census and
+  * compaction file count goes through [[visibleFiles]]): a file under a
+  * layout root is visible iff its name ends in `.parquet` and no path
+  * segment below the root starts with `_` or `.` — Spark's
+  * `InMemoryFileIndex` hidden-path rule, so the `_temporary/` and
+  * `.spark-staging-*` leftovers of a crashed write, `_SUCCESS` and
+  * `.crc` files never count. Segments above the root are not examined:
+  * an index living under a `batch_id=9/` or `_scratch/` directory is
+  * read like any other. Uncommitted is invisible.
+  *
+  * Scope guard: callers must only point [[readDir]] at tables that are
+  * tiny BY CONSTRUCTION (bounded by nlist / m·k / batch count — never
+  * by corpus size). Data tables (postings, celled, tombstone ID lists)
   * keep their distributed reads.
   *
   * Supported schema: flat rows of INT32 / INT64 / DOUBLE / FLOAT /
@@ -45,37 +56,73 @@ private[graft] object TinyParquet {
     */
   type Row = Map[String, Any]
 
-  /** Every row of every `*.parquet` file under `dir` (recursive),
-    * partition-directory columns included. Empty when the directory is
-    * missing or holds no parquet files. File visit order is
-    * path-sorted for determinism; callers needing a row order sort by
-    * key columns (the former `.orderBy(...).collect()` contract).
+  /** Every visible `*.parquet` file under `root` (the rule in the
+    * object scaladoc), qualified and path-sorted. Empty when `root` is
+    * missing. A `listStatus` walk that never enters a hidden directory,
+    * as `InMemoryFileIndex` lists: the recursive `listFiles` builds a
+    * `LocatedFileStatus` per file, and on the local file system without
+    * native Hadoop that forks a process per file to read permissions
+    * (about 11 ms per file, measured on a 4-vCPU VM).
+    */
+  def visibleFiles(fs: FileSystem, root: Path): Seq[Path] = {
+    def walk(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (s.isDirectory) walk(s.getPath)
+      else if (name.endsWith(".parquet")) Seq(s.getPath)
+      else Nil
+    }
+    val qualifiedRoot = fs.makeQualified(root)
+    if (!fs.exists(qualifiedRoot)) Nil
+    else walk(qualifiedRoot).sortBy(_.toString)
+  }
+
+  /** Distinct `batch_id=K` partition values of the [[visibleFiles]]
+    * under `root` — a batch directory holding no visible file is no
+    * batch.
+    */
+  def batchIds(fs: FileSystem, root: Path): Set[Long] = {
+    val qualifiedRoot = fs.makeQualified(root)
+    visibleFiles(fs, qualifiedRoot).iterator
+      .flatMap(f => partitionValues(qualifiedRoot, f).get("batch_id"))
+      .collect { case id: Long => id }.toSet
+  }
+
+  /** Σ footer row counts of the [[visibleFiles]] under `dir` — an exact
+    * row count of a just-written table without a Spark job.
+    */
+  def rowCount(conf: Configuration, dir: String): Long = {
+    val root = new Path(dir)
+    visibleFiles(root.getFileSystem(conf), root).iterator.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** Every row of every [[visibleFiles]] file under `dir`, partition-
+    * directory columns included. Empty when the directory is missing or
+    * holds no visible parquet files. Files are visited path-sorted for
+    * determinism; callers needing a row order sort by key columns (the
+    * former `.orderBy(...).collect()` contract).
     */
   def readDir(conf: Configuration, dir: String): Seq[Row] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Nil
-    val files = collection.mutable.ArrayBuffer.empty[Path]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      val n = p.getName
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        files += p
-    }
     val qualifiedRoot = fs.makeQualified(root)
-    files.sortBy(_.toString).iterator.flatMap { f =>
-      val partCols = partitionValues(qualifiedRoot, fs.makeQualified(f))
+    visibleFiles(fs, qualifiedRoot).iterator.flatMap { f =>
+      val partCols = partitionValues(qualifiedRoot, f)
       readFile(conf, f).map(_ ++ partCols)
     }.toSeq
   }
 
-  /** Hive-style `k=v` path segments between `root` and `file`. */
-  private def partitionValues(root: Path, file: Path): Map[String, Any] = {
-    val rootStr = root.toString
-    val rel = file.getParent.toString.stripPrefix(rootStr).stripPrefix("/")
-    if (rel.isEmpty) Map.empty
-    else rel.split('/').iterator
+  /** Hive-style `k=v` directory names between `root` and `file` (both
+    * qualified), found by walking up to `root` by path equality, so
+    * nothing above the root is ever read as a partition value.
+    */
+  private def partitionValues(root: Path, file: Path): Map[String, Any] =
+    Iterator.iterate(file.getParent)(_.getParent)
+      .takeWhile(d => d != null && d != root)
+      .map(_.getName)
       .filter(_.contains('='))
       .map { seg =>
         val Array(k, v) = seg.split("=", 2)
@@ -83,7 +130,6 @@ private[graft] object TinyParquet {
           if (v.nonEmpty && v.matches("-?\\d+")) v.toLong else v
         k -> value
       }.toMap
-  }
 
   private def readFile(conf: Configuration, file: Path): Seq[Row] = {
     val reader: ParquetReader[Group] = ParquetReader
