@@ -4,6 +4,7 @@
 # builds against (`perfbench/build.py --test`). Round 8 shipped an
 # end-of-round snapshot that failed `sbt compile`, which blanked the
 # entire driver signal for the round — this hook makes that impossible.
+# A staged change under graft/sinks also runs the index crash-state specs.
 # Bypass (emergencies only): git commit --no-verify.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -26,4 +27,17 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$'; then
     exit 1
   fi
   echo "[precommit] benchmark build green" >&2
+fi
+
+# The persisted-index commit and visibility rules live in graft/sinks:
+# a staged change there also runs their crash-state specs.
+if git diff --cached --name-only | grep -q '^src/main/scala/graft/sinks/'; then
+  echo "[precommit] index sinks staged - running the crash-state specs" >&2
+  if ! sbt -batch "testOnly graft.StagedFileVisibilitySpec graft.IvfRebuildSpec" \
+      >/tmp/precommit-sinks.log 2>&1; then
+    echo "[precommit] CRASH-STATE SPECS FAILED - commit refused. Tail of log:" >&2
+    tail -30 /tmp/precommit-sinks.log >&2
+    exit 1
+  fi
+  echo "[precommit] crash-state specs green" >&2
 fi

@@ -940,7 +940,8 @@ object ScaleCheck {
       if (!new java.io.File(textIdxDir).exists()) {
         graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
       }
-      if (!new java.io.File(s"$archLshDir/signed").exists()) {
+      val lshRoot = graft.sinks.Sink.resolveIndexRoot(spark, archLshDir)
+      if (!new java.io.File(s"$lshRoot/signed").exists()) {
         val lb = Similarity.buildLshIndex(bigEmb, nBits = 32, bands = 8)
         graft.sinks.Sink.writeLshIndex(lb, archLshDir)
         lb.unpersist()

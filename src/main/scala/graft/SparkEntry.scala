@@ -1401,7 +1401,7 @@ object SparkEntry {
     // census off disk and pin: exactly `bands` (band, bucket) entries
     // grew, growth clears the floor, and compaction folds the ingested
     // postings back WITHOUT changing the census (live counts and build
-    // baseline both survive the swap)
+    // baseline both survive the fold)
     "embedding_lsh_bucket_drift" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 500)
       val path = new java.io.File(System.getProperty("java.io.tmpdir"),

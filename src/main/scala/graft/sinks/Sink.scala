@@ -192,24 +192,14 @@ object Sink {
       .write.mode(mode).parquet(path)
   }
 
-  /** C6+ / similarity — persist an IVF index in its 100 TB layout: the
-    * celled corpus written PARTITIONED BY cell id (so a query probing
-    * nprobe cells touches nprobe partition directories, never the whole
-    * corpus — the on-disk twin of `Similarity`'s "celled table
-    * partitioned by cell" design note) plus the tiny centroid table
-    * (nlist rows). This is the offline-build output a cluster job would
-    * ship; [[readIvfIndex]] + `Similarity.ivfQueryPruned` are the
-    * consuming query path (SimilarityIndexPersistSpec round-trips it and
-    * asserts the partition pruning).
-    */
   /** Resolve the LIVE root of a persisted index at `path`: the newest
-    * committed rebuild generation (`gen-N/` carrying a root-level
-    * `_SUCCESS`) if any [[rebuildIvfIndex]]-style rebuild has committed,
-    * else `path` itself (the flat layout a fresh [[writeIvfIndex]]
-    * produces). The `_SUCCESS` marker IS the commit record — a crash
-    * mid-rebuild leaves a half-written gen dir invisible and the prior
-    * generation live, so readers can never observe a torn swap (a new
-    * celled table paired with an old quantizer). Same
+    * committed generation (`gen-N/` carrying a root-level `_SUCCESS`,
+    * written by a rebuild or a compaction through [[commitGeneration]])
+    * if any has committed, else `path` itself (the flat layout a fresh
+    * [[writeIvfIndex]] produces). The `_SUCCESS` marker IS the commit
+    * record — a crash mid-fold leaves a half-written gen dir invisible
+    * and the prior generation live, so readers can never observe a torn
+    * swap (a new celled table paired with an old quantizer). Same
     * commit-by-generation idiom as [[mergeCensusTable]]; the marker
     * file stands in for a table-format/metastore pointer flip at scale.
     */
@@ -223,39 +213,6 @@ object Sink {
       .map(g => s"$path/gen-$g").getOrElse(path)
   }
 
-  /** Drop every rebuild generation AND every ingested layer at `path` —
-    * a fresh overwrite-mode build supersedes them all and must be the
-    * ONLY layout readers resolve. The ingested layers matter as much as
-    * the generations: a prior run's appended-but-uncompacted batches
-    * (e.g. a crashed incremental ingest at a reused path) would
-    * otherwise silently union into the new index through the readers'
-    * ingested-layout detection, corrupting N/T/df and scores.
-    */
-  private def clearGenerations(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) {
-      fs.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith("gen-"))
-        .foreach(p => fs.delete(p, true))
-      Seq("ingested", "postings_ingested", "meta_ingested",
-        "signed_ingested").foreach { sub =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-      }
-    }
-  }
-
-  /** Post-commit cleanup shared by the generational maintenance valves
-    * ([[rebuildIvfIndex]] / [[rebuildIvfPqIndex]] / [[compactTextIndex]]):
-    * once `gen-<newGen>/_SUCCESS` is live, delete EVERY committed
-    * generation below it plus the named flat-layout subdirs. Deleting
-    * only the immediately-previous root would leak any generation
-    * orphaned by a crash-after-commit-before-cleanup — readers resolve
-    * the max generation so orphans are invisible, but they accumulate
-    * disk forever. All deletions here are recoverable no-ops if repeated
-    * (crash mid-cleanup just leaves fewer orphans for the next pass).
-    */
   /** Distribution for every index build/append/compaction write:
     * AQE REBALANCE on the directory key(s). `repartition(col(dirKey))`
     * capped write tasks at the bucket/cell/band count AND serialized
@@ -279,36 +236,104 @@ object Sink {
       keys: org.apache.spark.sql.Column*): DataFrame =
     df.hint("rebalance", keys: _*)
 
-  /** Drop the named incremental-layer subdirs under `path` — the
-    * fresh-overwrite-build companion of [[clearGenerations]] (all
-    * deletions are idempotent no-ops when absent).
+  /** The one commit path of every generational write — the index
+    * rebuilds ([[rebuildIvfIndex]], [[rebuildIvfPqIndex]]), the index
+    * folds ([[compactIvfIndex]], [[compactLshIndex]],
+    * [[compactTextIndex]]) and the census merges
+    * ([[mergeGenerational]]): clear a torn `gen-<gen>/` a crashed
+    * attempt left (its stale subdirs must not be committed with the
+    * fresh layout), run `write` into the directory (index folds
+    * include their `folded` ledger), create the one `_SUCCESS` marker
+    * that commits it, then drop what it supersedes ([[dropSuperseded]]).
+    * A crash before the marker leaves the prior state live and the
+    * half-written generation invisible; a crash after it, before the
+    * cleanup, leaves superseded layouts no reader resolves, and the
+    * next commit drops them. Returns the committed directory.
     */
-  private def clearIncrementalLayers(
+  private def commitGeneration(
       spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      subs: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
+      rawPath: String,
+      gen: Long)(
+      write: String => Unit): String = {
+    val fs = new org.apache.hadoop.fs.Path(rawPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    subs.foreach { sub =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
+    val genDir = s"$rawPath/gen-$gen"
+    fs.delete(new org.apache.hadoop.fs.Path(genDir), true)
+    write(genDir)
+    fs.create(new org.apache.hadoop.fs.Path(s"$genDir/_SUCCESS"), true)
+      .close()
+    dropSuperseded(spark, rawPath, gen)
+    genDir
+  }
+
+  /** The generation an index rebuild or fold at `rawPath` commits: one
+    * past the newest committed generation, 1 over a flat layout.
+    */
+  private def nextGeneration(
+      spark: org.apache.spark.sql.SparkSession, rawPath: String): Long = {
+    val root = new org.apache.hadoop.fs.Path(rawPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    committedGenerations(fs, root).maxOption.getOrElse(0L) + 1
+  }
+
+  /** Drop everything a generation `gen` at `rawPath` supersedes, by one
+    * rule: every `gen-N/` below it, committed or torn, and every child
+    * that is not a generation, except the lineage's
+    * `_valve_policy.json` ([[writeValvePolicy]]). The flat layout, its
+    * incremental layers (ingested batches, tombstones, the folded
+    * ledger) and the crash-after-commit leftovers of an earlier fold
+    * all go. A fresh overwrite build passes `Long.MaxValue`: it
+    * supersedes every generation, and a stale tombstone or ledger
+    * surviving it would silently delete or swallow fresh rows.
+    * Deleting only the immediately-previous root would leak any
+    * generation orphaned by a crash-after-commit-before-cleanup —
+    * readers resolve the max generation so orphans are invisible, but
+    * they would accumulate on disk forever. Every deletion is a
+    * recoverable no-op if repeated.
+    */
+  private def dropSuperseded(
+      spark: org.apache.spark.sql.SparkSession,
+      rawPath: String,
+      gen: Long): Unit = {
+    val root = new org.apache.hadoop.fs.Path(rawPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root))
+      fs.listStatus(root).map(_.getPath).filter { p =>
+        val name = p.getName
+        if (name.startsWith("gen-"))
+          name.stripPrefix("gen-").toLongOption.exists(_ < gen)
+        else name != ValvePolicyFile
+      }.foreach(fs.delete(_, true))
+  }
+
+  /** Copy the small tables a fold does not rewrite from the old index
+    * root into its new generation — those of `tables` that exist.
+    */
+  private def carryTables(
+      spark: org.apache.spark.sql.SparkSession,
+      from: String,
+      to: String,
+      tables: String*): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(from).getFileSystem(conf)
+    tables.foreach { t =>
+      val src = new org.apache.hadoop.fs.Path(s"$from/$t")
+      if (fs.exists(src))
+        org.apache.hadoop.fs.FileUtil.copy(fs, src,
+          fs, new org.apache.hadoop.fs.Path(s"$to/$t"), false, conf)
     }
   }
 
-  private def dropSupersededLayouts(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String,
-      newGen: Long,
-      flatSubdirs: Seq[String]): Unit = {
-    flatSubdirs.foreach { sub =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-    }
-    committedGenerations(fs, new org.apache.hadoop.fs.Path(path))
-      .filter(_ < newGen)
-      .foreach { g =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/gen-$g"), true)
-      }
-  }
-
+  /** C6+ / similarity — persist an IVF index in its 100 TB layout: the
+    * celled corpus written PARTITIONED BY cell id (so a query probing
+    * nprobe cells touches nprobe partition directories, never the whole
+    * corpus — the on-disk twin of `Similarity`'s "celled table
+    * partitioned by cell" design note) plus the tiny centroid table
+    * (nlist rows). This is the offline-build output a cluster job would
+    * ship; [[readIvfIndex]] + `Similarity.ivfQueryPruned` are the
+    * consuming query path (SimilarityIndexPersistSpec round-trips it and
+    * asserts the partition pruning).
+    */
   def writeIvfIndex(
       index: graft.operators.Similarity.IvfIndex,
       path: String,
@@ -321,24 +346,17 @@ object Sink {
     // policy is operator configuration, not data, so an overwrite
     // build does not reset it
     policy.foreach(writeValvePolicy(spark, path, _))
-    // a FRESH build supersedes every rebuild generation at this path —
-    // clear them first so the flat layout written below is the one
-    // readers resolve (crash mid-write re-exposes at worst a torn flat
-    // build, the exposure any overwrite-mode write always had) — and
-    // every incremental layer (ingested batches, tombstones) a prior
-    // lifecycle left: a stale tombstone surviving an overwrite build
-    // would silently delete freshly-indexed vectors. qcentroids clears
-    // with them: a float-trained build over a path that previously held
-    // an exact-Lloyd layout must not leave the OLD integer quantizer
-    // behind — readIvfIndex would pair the new celled/centroids with a
-    // stale (possibly different-nlist) lattice and
-    // ivfQueryVectorsIntProbe would silently probe wrong cells
-    if (mode == "overwrite") {
-      clearGenerations(spark, path)
-      clearIncrementalLayers(spark, path,
-        Seq("ingested", "tombstones", "tombstones_meta", "qcentroids",
-          "folded"))
-    }
+    // a FRESH build supersedes every generation and every layer a prior
+    // lifecycle left at this path ([[dropSuperseded]]), so the flat
+    // layout written below is the one readers resolve (crash mid-write
+    // re-exposes at worst a torn flat build, the exposure any
+    // overwrite-mode write always had). qcentroids and pq_codebooks go
+    // with the rest: a float-trained build over a path that previously
+    // held an exact-Lloyd layout must not leave the OLD integer
+    // quantizer behind — readIvfIndex would pair the new
+    // celled/centroids with a stale (possibly different-nlist) lattice
+    // and ivfQueryVectorsIntProbe would silently probe wrong cells
+    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
     // n-way write distribution (see writeDistribution): hot cells
     // parallelize instead of serializing into one task each
     writeDistribution(index.celled, col("cell"))
@@ -396,30 +414,54 @@ object Sink {
       spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val root = resolveIndexRoot(spark, path)
-    val censusPath = new org.apache.hadoop.fs.Path(s"$root/build_census")
-    val fs = censusPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // indexes persisted before the drift census existed ship no
-    // build_census — ADOPT the current celled occupancy as the baseline
-    // and persist it (drift is then measured from "now" onward, and the
-    // ingested layout — post-build traffic by definition — still counts
-    // against it), instead of throwing path-not-found on the first
-    // drift/rebuild call against a legacy index
-    if (!fs.exists(censusPath)) {
-      spark.read.parquet(s"$root/celled")
-        .groupBy(col("cell")).agg(count(lit(1)).as("n_build"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/build_census")
-    }
-    val live = readIvfIndex(spark, path).celled
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_now"))
-    spark.read.parquet(s"$root/build_census")
-      .join(live, Seq("cell"), "full_outer")
-      .select(col("cell"),
+    occupancyDrift(spark, root, Seq("cell"),
+      spark.read.parquet(s"$root/celled"),
+      readIvfIndex(spark, path).celled)
+  }
+
+  /** The drift census body shared by [[ivfOccupancyDrift]],
+    * [[lshOccupancyDrift]] and [[textOccupancyDrift]]: per `keys`
+    * directory, the build-time row count persisted at
+    * `root/build_census` vs the live count, and the growth in ppm.
+    * Indexes persisted before the drift census existed ship no
+    * build_census — ADOPT `base` (the index's base-layout rows) as the
+    * baseline and persist it (drift is then measured from "now" onward,
+    * and the ingested layout — post-build traffic by definition — still
+    * counts against it), instead of throwing path-not-found on the
+    * first drift/rebuild call against a legacy index.
+    */
+  private def occupancyDrift(
+      spark: org.apache.spark.sql.SparkSession,
+      root: String,
+      keys: Seq[String],
+      base: => DataFrame,
+      live: DataFrame): DataFrame = {
+    val keyCols = keys.map(col)
+    spark.read.parquet(adoptBuildCensus(spark, root, keys, base))
+      .join(live.groupBy(keyCols: _*).agg(count(lit(1)).as("n_now")),
+        keys, "full_outer")
+      .select(keyCols ++ Seq(
         coalesce(col("n_build"), lit(0L)).as("n_build"),
-        coalesce(col("n_now"), lit(0L)).as("n_now"))
+        coalesce(col("n_now"), lit(0L)).as("n_now")): _*)
       .withColumn("growth_ppm", expr(
         "(n_now - n_build) * 1000000 div greatest(n_build, 1)"))
-      .orderBy(col("cell"))
+      .orderBy(keyCols: _*)
+  }
+
+  /** The path of `root/build_census`, first written from `base` when
+    * the layout predates the census (see [[occupancyDrift]]).
+    */
+  private def adoptBuildCensus(
+      spark: org.apache.spark.sql.SparkSession,
+      root: String,
+      keys: Seq[String],
+      base: => DataFrame): String = {
+    val census = s"$root/build_census"
+    val p = new org.apache.hadoop.fs.Path(census)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      base.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_build"))
+        .coalesce(1).write.mode("overwrite").parquet(census)
+    census
   }
 
   /** The maintenance valve itself: retrain + rewrite the persisted IVF
@@ -467,9 +509,6 @@ object Sink {
       .agg(max(abs(col("growth_ppm")))).head.getLong(0)
     if (maxPpm < thresholdPpm) (false, maxPpm)
     else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val rootPath = new org.apache.hadoop.fs.Path(path)
-      val fs = rootPath.getFileSystem(conf)
       val oldRoot = resolveIndexRoot(spark, path)
       require(!indexHasPq(spark, oldRoot),
         "IVF-PQ layout: use rebuildIvfPqIndex - a coarse-only rebuild " +
@@ -487,37 +526,25 @@ object Sink {
       val preserved = fresh.celled.select(col("vec_id"), col("cell"))
         .join(cur, "vec_id")
         .select(col("vec_id"), col("unit"), col("cell"))
-      val gen = committedGenerations(fs, rootPath)
-        .maxOption.getOrElse(0L) + 1
-      val genDir = s"$path/gen-$gen"
-      // a torn rebuild (possibly of the OTHER index flavor) may have
-      // left an uncommitted gen dir here — clear it, or stale subdirs
-      // (e.g. orphaned pq_codebooks) would be committed into this
-      // generation alongside the fresh layout
-      fs.delete(new org.apache.hadoop.fs.Path(genDir), true)
-      // qcentsSpace = "unit": this quantizer trained on the stored unit
-      // vectors (the raw embeddings are gone) — the persisted space tag
-      // makes ivfQueryVectorsIntProbe normalize queries before lattice
-      // quantization, keeping probe selection in the training space
-      writeIvfIndex(
-        graft.operators.Similarity.IvfIndex(
-          fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
-        genDir)
-      fresh.unpersist()
-      // the rebuild absorbed every ingested batch and folded every
-      // tombstone — carry their ids in the generation's `folded` ledger
-      // so post-rebuild replays are skipped (the compactIvfIndex rule)
-      writeFoldedLedger(spark, genDir,
-        absorbedBatchIds(spark, oldRoot, "ingested"))
-      // COMMIT: one marker-file creation — from here on readers resolve
-      // the new generation; everything below is recoverable cleanup
-      fs.create(
-        new org.apache.hadoop.fs.Path(s"$genDir/_SUCCESS"), true).close()
       // the rebuild read the tombstone-applied view, so deletes fold
-      // physically with it and the layouts drop here
-      dropSupersededLayouts(fs, path, gen,
-        Seq("celled", "centroids", "qcentroids", "build_census",
-          "ingested", "tombstones", "tombstones_meta"))
+      // physically with it and the superseded layouts drop on commit
+      commitGeneration(spark, path, nextGeneration(spark, path)) { genDir =>
+        // qcentsSpace = "unit": this quantizer trained on the stored
+        // unit vectors (the raw embeddings are gone) — the persisted
+        // space tag makes ivfQueryVectorsIntProbe normalize queries
+        // before lattice quantization, keeping probe selection in the
+        // training space
+        writeIvfIndex(
+          graft.operators.Similarity.IvfIndex(
+            fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
+          genDir)
+        fresh.unpersist()
+        // the rebuild absorbed every ingested batch and folded every
+        // tombstone — carry their ids in the generation's `folded`
+        // ledger so post-rebuild replays are skipped (the fold rule)
+        writeFoldedLedger(spark, genDir,
+          absorbedBatchIds(spark, oldRoot, "ingested"))
+      }
       (true, maxPpm)
     }
   }
@@ -573,9 +600,6 @@ object Sink {
     val (maxPpm, nCur) = (gate.getLong(0), gate.getLong(1))
     if (maxPpm < thresholdPpm) (false, maxPpm)
     else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val rootPath = new org.apache.hadoop.fs.Path(path)
-      val fs = rootPath.getFileSystem(conf)
       val oldRoot = resolveIndexRoot(spark, path)
       val cur = readIvfIndex(spark, path).celled
         .select(col("vec_id"), col("unit"))
@@ -588,38 +612,28 @@ object Sink {
         .select(col("vec_id"), col("unit"), col("cell"))
       val model = graft.operators.Similarity
         .buildPqModel(corpus, m, k, pqIters)
-      val gen = committedGenerations(fs, rootPath)
-        .maxOption.getOrElse(0L) + 1
-      val genDir = s"$path/gen-$gen"
-      // clear any torn, uncommitted generation at this number — see
-      // rebuildIvfIndex (a coarse-flavor half-write must not leak
-      // subdirs into this committed PQ generation, or vice versa)
-      fs.delete(new org.apache.hadoop.fs.Path(genDir), true)
-      // unit-space quantizer — see rebuildIvfIndex
-      writeIvfPqIndex(
-        graft.operators.Similarity.IvfIndex(
-          fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
-        model.cents, model.codes, genDir)
-      fresh.unpersist()
-      model.unpersist()
-      // the written row count from the generation's parquet footers:
-      // exact and job-free, where a count observed on the write job
-      // would double on a retried map stage and abort a valid rebuild
-      val nNew = TinyParquet.rowCount(conf, s"$genDir/celled")
-      require(nNew == nCur,
-        s"rebuild corpus covers only $nNew of $nCur index rows - corpus " +
-          "must contain every indexed vec_id (half-written generation " +
-          "left uncommitted)")
-      // absorbed batch ids → the generation's ledger, as rebuildIvfIndex
-      writeFoldedLedger(spark, genDir,
-        absorbedBatchIds(spark, oldRoot, "ingested"))
-      // COMMIT: one marker-file creation, then recoverable cleanup
-      fs.create(
-        new org.apache.hadoop.fs.Path(s"$genDir/_SUCCESS"), true).close()
-      // tombstones folded with the rebuild, as in [[rebuildIvfIndex]]
-      dropSupersededLayouts(fs, path, gen,
-        Seq("celled", "centroids", "qcentroids", "pq_codebooks",
-          "build_census", "ingested", "tombstones", "tombstones_meta"))
+      // tombstones fold with the rebuild, as in [[rebuildIvfIndex]]
+      commitGeneration(spark, path, nextGeneration(spark, path)) { genDir =>
+        // unit-space quantizer — see rebuildIvfIndex
+        writeIvfPqIndex(
+          graft.operators.Similarity.IvfIndex(
+            fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
+          model.cents, model.codes, genDir)
+        fresh.unpersist()
+        model.unpersist()
+        // the written row count from the generation's parquet footers:
+        // exact and job-free, where a count observed on the write job
+        // would double on a retried map stage and abort a valid rebuild
+        val nNew = TinyParquet.rowCount(
+          spark.sparkContext.hadoopConfiguration, s"$genDir/celled")
+        require(nNew == nCur,
+          s"rebuild corpus covers only $nNew of $nCur index rows - " +
+            "corpus must contain every indexed vec_id (half-written " +
+            "generation left uncommitted)")
+        // absorbed batch ids → the generation's ledger, as rebuildIvfIndex
+        writeFoldedLedger(spark, genDir,
+          absorbedBatchIds(spark, oldRoot, "ingested"))
+      }
       (true, maxPpm)
     }
   }
@@ -733,66 +747,51 @@ object Sink {
     * write-optimized index: streamed micro-batches leave one file per
     * touched (cell, batch) directory, and at high ingest rates those
     * small files dominate probe I/O exactly like any LSM tree's L0.
-    * Rewrites celled ∪ ingested partitioned by cell (one file per cell),
-    * swaps it in via rename, and drops `ingested/` — queries before and
-    * after are bit-identical (spec-asserted), only the file census
-    * changes. The rename swap is the local-FS demonstration; at scale
-    * the swap is a table-format/metastore commit, same as [[compact]].
+    * Rewrites celled ∪ ingested, tombstones applied, partitioned by
+    * cell into a fresh `gen-N/` generation, copies in the tables the
+    * fold does not change (centroids, qcentroids, pq_codebooks,
+    * build_census) and the `folded` ledger, and commits it the one way
+    * every fold commits ([[commitGeneration]]): one `_SUCCESS` marker,
+    * then the superseded root and its incremental layers drop. Queries
+    * before and after are bit-identical (spec-asserted), only the file
+    * census changes. A crash before the marker leaves the prior root
+    * live; a crash after it leaves leftovers no reader resolves — never
+    * a root without `celled/`, and never an absorbed batch served twice.
     *
-    * Returns (rows compacted, ingested files folded in).
+    * Returns (rows compacted, ingested files folded in), the row count
+    * from the new generation's parquet footers (exact under a retried
+    * write stage, and job-free).
     */
   def compactIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String): (Long, Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val path = resolveIndexRoot(spark, rawPath)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val ingestedDir = new org.apache.hadoop.fs.Path(s"$path/ingested")
     val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombstones_meta")
     // a delete-only state still folds; only the clean state is a no-op
     if (!fs.exists(ingestedDir) && !fs.exists(tombsDir)) {
-      (spark.read.parquet(s"$path/celled").count(), 0L)
+      (TinyParquet.rowCount(conf, s"$path/celled"), 0L)
     } else {
       val nf = TinyParquet.visibleFiles(fs, ingestedDir).size.toLong
-      // batch ids this fold absorbs — collected BEFORE the layouts
-      // drop, written to the `folded` ledger so post-compaction replays
-      // of an absorbed append/delete are skipped (a replayed tombstone
-      // would otherwise mask the folded — possibly re-appended — base
-      // rows; see [[deleteFromIvfIndex]])
+      // batch ids this fold absorbs, into the new generation's `folded`
+      // ledger so post-compaction replays of an absorbed append/delete
+      // are skipped (a replayed tombstone would otherwise mask the
+      // folded — possibly re-appended — base rows; see
+      // [[deleteFromIvfIndex]])
       val absorbed = absorbedBatchIds(spark, path, "ingested")
-      val merged = readIvfIndex(spark, path).celled
-      // the returned row count rides the rewrite job itself
-      // (Dataset.observe — r18): the former separate merged.count() was
-      // a SECOND full pass over the merged view just to report a number
-      // the write already flows
-      val nObs = Observation()
-      writeDistribution(merged.observe(nObs, count(lit(1)).as("n")),
-          col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/celled_compact")
-      val n = nObs.get("n").asInstanceOf[Long]
-      val celled = new org.apache.hadoop.fs.Path(s"$path/celled")
-      val old = new org.apache.hadoop.fs.Path(s"$path/celled_old")
-      require(fs.rename(celled, old), s"swap failed: $celled -> $old")
-      require(fs.rename(
-        new org.apache.hadoop.fs.Path(s"$path/celled_compact"), celled),
-        "swap failed: celled_compact -> celled")
-      fs.delete(old, true)
-      writeFoldedLedger(spark, path, absorbed)
-      fs.delete(ingestedDir, true)
-      // merged came from the tombstone-applied view: deletes are now
-      // physically folded, so drop their layouts (a later replayed
-      // delete re-tombstones already-absent ids — a harmless no-op).
-      // COMMIT RECORD FIRST: a crash between the two deletes must leave
-      // the orphaned state readable (ids without meta = uncommitted =
-      // invisible; meta without ids would need the reader's
-      // missing-table tolerance — both directions are now safe, but
-      // deleting the record first keeps the invariant structural)
-      fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/tombstones_meta"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      (n, nf)
+      val merged = readIvfIndex(spark, rawPath).celled
+      val genDir = commitGeneration(spark, rawPath,
+          nextGeneration(spark, rawPath)) { genDir =>
+        writeDistribution(merged, col("cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$genDir/celled")
+        carryTables(spark, path, genDir,
+          "centroids", "qcentroids", "pq_codebooks", "build_census")
+        writeFoldedLedger(spark, genDir, absorbed)
+      }
+      (TinyParquet.rowCount(conf, s"$genDir/celled"), nf)
     }
   }
 
@@ -860,6 +859,9 @@ object Sink {
     */
   val UsePersistedPolicy: Long = -1L
 
+  /** The [[ValvePolicy]] side-file's name at an index's raw path. */
+  private val ValvePolicyFile = "_valve_policy.json"
+
   /** Persist `policy` as the index's `_valve_policy.json` — a one-line
     * JSON side-file at the RAW path (NOT the resolved generation root:
     * rebuilds and compactions swap generations under the raw path, and
@@ -882,8 +884,7 @@ object Sink {
     val dir = new org.apache.hadoop.fs.Path(rawPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$rawPath/._valve_policy.json.tmp")
+    val tmp = new org.apache.hadoop.fs.Path(s"$rawPath/.$ValvePolicyFile.tmp")
     val out = fs.create(tmp, true)
     out.write(
       (s"""{"max_ingested_files":${policy.maxIngestedFiles},""" +
@@ -891,7 +892,7 @@ object Sink {
         s""""max_masked_ids":${policy.maxMaskedIds}}""")
         .getBytes("UTF-8"))
     out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$rawPath/_valve_policy.json")
+    val dst = new org.apache.hadoop.fs.Path(s"$rawPath/$ValvePolicyFile")
     // ATOMIC rename-over where the FS supports it (FileContext with
     // Rename.OVERWRITE — local FS and HDFS do): the pre-r17
     // delete-then-rename pair left a window where a concurrently
@@ -932,7 +933,7 @@ object Sink {
   def readValvePolicy(
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String): Option[ValvePolicy] = {
-    val p = new org.apache.hadoop.fs.Path(s"$rawPath/_valve_policy.json")
+    val p = new org.apache.hadoop.fs.Path(s"$rawPath/$ValvePolicyFile")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
     val in = fs.open(p)
@@ -1123,15 +1124,7 @@ object Sink {
     val spark = index.celled.sparkSession
     import spark.implicits._
     policy.foreach(writeValvePolicy(spark, path, _)) // see writeIvfIndex
-    if (mode == "overwrite") {
-      clearGenerations(spark, path)
-      // qcentroids included for the same stale-quantizer reason as
-      // writeIvfIndex: a float-trained PQ build must not inherit a
-      // prior exact-Lloyd layout's integer lattice
-      clearIncrementalLayers(spark, path,
-        Seq("ingested", "tombstones", "tombstones_meta", "qcentroids",
-          "folded"))
-    }
+    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
     writeDistribution(
       index.celled.join(codes, "vec_id")
         .select(col("vec_id"), col("unit"), col("codes"), col("cell")),
@@ -1185,16 +1178,7 @@ object Sink {
     val spark = index.signed.sparkSession
     import spark.implicits._
     policy.foreach(writeValvePolicy(spark, path, _)) // see writeIvfIndex
-    // a fresh build supersedes any prior run's appended-but-uncompacted
-    // batches at this path — clear the ingested layers or readLshIndex
-    // would silently union stale vectors into the new index (and stale
-    // tombstones would silently delete fresh ones)
-    if (mode == "overwrite") {
-      clearGenerations(spark, path)
-      clearIncrementalLayers(spark, path,
-        Seq("signed_ingested", "postings_ingested",
-          "tombstones", "tombstones_meta", "folded"))
-    }
+    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
     val bitsPerBand = index.bitsPerBand
     val mask = (1L << bitsPerBand) - 1
     // ALL signed columns persist — an index built with carryCols keeps
@@ -1250,28 +1234,11 @@ object Sink {
   def lshOccupancyDrift(
       spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val censusPath = new org.apache.hadoop.fs.Path(s"$path/build_census")
-    val fs = censusPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(censusPath)) {
-      spark.read
-        .schema("vec_id BIGINT, band INT, bucket BIGINT")
-        .parquet(s"$path/postings")
-        .groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("n_build"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/build_census")
-    }
-    val live = readLshIndex(spark, path).postings
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n_now"))
-    spark.read.parquet(s"$path/build_census")
-      .join(live, Seq("band", "bucket"), "full_outer")
-      .select(col("band"), col("bucket"),
-        coalesce(col("n_build"), lit(0L)).as("n_build"),
-        coalesce(col("n_now"), lit(0L)).as("n_now"))
-      .withColumn("growth_ppm", expr(
-        "(n_now - n_build) * 1000000 div greatest(n_build, 1)"))
-      .orderBy(col("band"), col("bucket"))
+    val root = resolveIndexRoot(spark, path)
+    occupancyDrift(spark, root, Seq("band", "bucket"),
+      spark.read.schema("vec_id BIGINT, band INT, bucket BIGINT")
+        .parquet(s"$root/postings"),
+      readLshIndex(spark, path).postings)
   }
 
   /** Incrementally ADD vectors to a persisted LSH index — the
@@ -1299,17 +1266,10 @@ object Sink {
       vectors: DataFrame,
       batchId: Long): Unit = {
     import graft.operators.Similarity
+    val root = resolveIndexRoot(spark, path)
     // folded-ledger replay guard, as appendIvfIndex
-    if (foldedBatchIds(spark, path).contains(batchId)) return
-    // planes (nBits tiny rows) + one-row meta: driver-side reads, no
-    // Spark jobs (TinyParquet — r18)
-    val planes = TinyParquet
-      .readDir(spark.sparkContext.hadoopConfiguration, s"$path/planes")
-      .sortBy(TinyParquet.long(_, "bit"))
-      .map(TinyParquet.doubles(_, "plane")).toArray
-    val bands = TinyParquet.int(
-      TinyParquet.readDir(spark.sparkContext.hadoopConfiguration,
-        s"$path/meta").head, "bands")
+    if (foldedBatchIds(spark, root).contains(batchId)) return
+    val (planes, bands) = readLshPlanes(spark, root)
     val bitsPerBand = planes.length / bands
     val mask = (1L << bitsPerBand) - 1
     val signed = vectors
@@ -1323,7 +1283,7 @@ object Sink {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
-      .parquet(s"$path/signed_ingested")
+      .parquet(s"$root/signed_ingested")
     def bandBucket(b: Int) =
       shiftright(col("sig"), b * bitsPerBand).bitwiseAND(mask)
     signed
@@ -1335,7 +1295,7 @@ object Sink {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("band", "bucket", "batch_id")
-      .parquet(s"$path/postings_ingested")
+      .parquet(s"$root/postings_ingested")
   }
 
   /** Fold the [[appendLshIndex]] ingested layouts back into the base
@@ -1343,60 +1303,43 @@ object Sink {
     * streamed micro-batches leave one file per touched (band, bucket,
     * batch) directory and those small files dominate probe I/O at high
     * ingest rates. Rewrites signed ∪ signed_ingested and postings ∪
-    * postings_ingested, swaps both in via rename, drops the ingested
-    * dirs — queries before and after are bit-identical (spec-asserted),
-    * only the file census changes. Rename swap = local-FS stand-in for a
-    * table-format commit, as everywhere in this file.
+    * postings_ingested, tombstones applied, into a fresh `gen-N/`
+    * generation, copies in the tables the fold does not change
+    * (planes, meta, build_census) and the `folded` ledger, and commits
+    * it through [[commitGeneration]], exactly as [[compactIvfIndex]]
+    * does — queries before and after are bit-identical
+    * (spec-asserted), only the file census changes.
     *
-    * Returns (signed rows after compaction, ingested posting files
-    * folded in).
+    * Returns (signed rows after compaction, from the new generation's
+    * parquet footers; ingested posting files folded in).
     */
   def compactLshIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val signedIn = new org.apache.hadoop.fs.Path(s"$path/signed_ingested")
-    val postIn = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
-    val tombsIn = new org.apache.hadoop.fs.Path(s"$path/tombstones_meta")
+    val root = resolveIndexRoot(spark, path)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val signedIn = new org.apache.hadoop.fs.Path(s"$root/signed_ingested")
+    val postIn = new org.apache.hadoop.fs.Path(s"$root/postings_ingested")
+    val tombsIn = new org.apache.hadoop.fs.Path(s"$root/tombstones_meta")
     if (!fs.exists(signedIn) && !fs.exists(postIn) &&
         !fs.exists(tombsIn)) {
-      (spark.read.parquet(s"$path/signed").count(), 0L)
+      (TinyParquet.rowCount(conf, s"$root/signed"), 0L)
     } else {
       val nf = TinyParquet.visibleFiles(fs, postIn).size.toLong
       // absorbed batch ids → `folded` ledger, the compactIvfIndex twin
-      val absorbed = absorbedBatchIds(spark, path, "signed_ingested")
+      val absorbed = absorbedBatchIds(spark, root, "signed_ingested")
       val merged = readLshIndex(spark, path)
-      def swap(tmpName: String, liveName: String): Unit = {
-        val live = new org.apache.hadoop.fs.Path(s"$path/$liveName")
-        val old = new org.apache.hadoop.fs.Path(s"$path/${liveName}_old")
-        require(fs.rename(live, old), s"swap failed: $live -> $old")
-        require(fs.rename(
-          new org.apache.hadoop.fs.Path(s"$path/$tmpName"), live),
-          s"swap failed: $tmpName -> $liveName")
-        fs.delete(old, true)
+      val genDir = commitGeneration(spark, path,
+          nextGeneration(spark, path)) { genDir =>
+        merged.signed.write.mode("overwrite").parquet(s"$genDir/signed")
+        writeDistribution(merged.postings, col("band"), col("bucket"))
+          .write.mode("overwrite").partitionBy("band", "bucket")
+          .parquet(s"$genDir/postings")
+        carryTables(spark, root, genDir, "planes", "meta", "build_census")
+        writeFoldedLedger(spark, genDir, absorbed)
       }
-      // row count observed on the rewrite job (r18) — the former
-      // read-back count re-scanned the just-written table
-      val nObs = Observation()
-      merged.signed.observe(nObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$path/signed_compact")
-      val n = nObs.get("n").asInstanceOf[Long]
-      writeDistribution(merged.postings, col("band"), col("bucket"))
-        .write.mode("overwrite").partitionBy("band", "bucket")
-        .parquet(s"$path/postings_compact")
-      swap("signed_compact", "signed")
-      swap("postings_compact", "postings")
-      writeFoldedLedger(spark, path, absorbed)
-      fs.delete(signedIn, true)
-      fs.delete(postIn, true)
-      // both rewrites came from the tombstone-applied view — deletes
-      // are physically folded, drop their layouts (commit record first,
-      // same crash-ordering stance as compactIvfIndex)
-      fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/tombstones_meta"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      (n, nf)
+      (TinyParquet.rowCount(conf, s"$genDir/signed"), nf)
     }
   }
 
@@ -1433,13 +1376,13 @@ object Sink {
     val limBatches = resolveThreshold(maxBatches, pol.map(_.maxBatches), 16L)
     val limMasked = resolveThreshold(
       maxMaskedIds, pol.map(_.maxMaskedIds), 100000L)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val postIn = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
+    val root = resolveIndexRoot(spark, path)
+    val postIn = new org.apache.hadoop.fs.Path(s"$root/postings_ingested")
+    val fs = postIn.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nFiles = TinyParquet.visibleFiles(fs, postIn).size.toLong
-    val (nTombBatches, maskedIds) = tombstonePressure(spark, path)
+    val (nTombBatches, maskedIds) = tombstonePressure(spark, root)
     val nBatches =
-      batchIdsAt(spark, path, "signed_ingested").size + nTombBatches
+      batchIdsAt(spark, root, "signed_ingested").size + nTombBatches
     if (nFiles <= limFiles && nBatches <= limBatches &&
         maskedIds <= limMasked)
       (false, nFiles, nBatches, maskedIds)
@@ -1462,20 +1405,13 @@ object Sink {
       spark: org.apache.spark.sql.SparkSession,
       path: String): graft.operators.Similarity.PersistedLshIndex = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val root = resolveIndexRoot(spark, path)
     def exists(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
+      val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
       p.getFileSystem(conf).exists(p)
     }
-    // planes (nBits tiny rows) + one-row meta: driver-side reads, no
-    // Spark jobs (TinyParquet — r18)
-    val planes = TinyParquet
-      .readDir(spark.sparkContext.hadoopConfiguration, s"$path/planes")
-      .sortBy(TinyParquet.long(_, "bit"))
-      .map(TinyParquet.doubles(_, "plane")).toArray
-    val bands = TinyParquet.int(
-      TinyParquet.readDir(spark.sparkContext.hadoopConfiguration,
-        s"$path/meta").head, "bands")
-    val signedBase = spark.read.parquet(s"$path/signed")
+    val (planes, bands) = readLshPlanes(spark, root)
+    val signedBase = spark.read.parquet(s"$root/signed")
       .withColumn("row_batch", lit(-1L))
     // vectors added after the build ([[appendLshIndex]]) union in from
     // the ingested layouts; declared schemas keep the partition columns
@@ -1487,20 +1423,20 @@ object Sink {
         spark.read
           .schema("vec_id BIGINT, unit ARRAY<DOUBLE>, sig BIGINT, " +
             "batch_id BIGINT")
-          .parquet(s"$path/signed_ingested")
+          .parquet(s"$root/signed_ingested")
           .select(col("vec_id"), col("unit"), col("sig"),
             col("batch_id").as("row_batch")),
         allowMissingColumns = true)
     val postingsBase = spark.read
       .schema("vec_id BIGINT, band INT, bucket BIGINT")
-      .parquet(s"$path/postings")
+      .parquet(s"$root/postings")
       .withColumn("row_batch", lit(-1L))
     val postings =
       if (!exists("postings_ingested")) postingsBase
       else postingsBase.unionByName(
         spark.read
           .schema("vec_id BIGINT, band INT, bucket BIGINT, batch_id BIGINT")
-          .parquet(s"$path/postings_ingested")
+          .parquet(s"$root/postings_ingested")
           .select(col("vec_id"), col("band"), col("bucket"),
             col("batch_id").as("row_batch")))
     // committed tombstones ([[deleteFromLshIndex]]) mask BOTH sides,
@@ -1509,7 +1445,7 @@ object Sink {
     // (the rerank must not resurrect them) — broadcast,
     // deletion-rate-sized
     val (liveSigned, livePostings) =
-      committedTombstones(spark, path, "vec_id") match {
+      committedTombstones(spark, root, "vec_id") match {
         case None => (signed.drop("row_batch"), postings.drop("row_batch"))
         case Some((tombs, _, _)) => (
           maskTombstones(signed, "vec_id", tombs),
@@ -1517,6 +1453,21 @@ object Sink {
       }
     graft.operators.Similarity.PersistedLshIndex(
       planes, bands, liveSigned, livePostings)
+  }
+
+  /** The persisted hyperplanes (nBits tiny rows) and band count
+    * (one-row meta) of the LSH index at a resolved `root`: driver-side
+    * reads, no Spark jobs (TinyParquet — r18).
+    */
+  private def readLshPlanes(
+      spark: org.apache.spark.sql.SparkSession,
+      root: String): (Array[Array[Double]], Int) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val planes = TinyParquet.readDir(conf, s"$root/planes")
+      .sortBy(TinyParquet.long(_, "bit"))
+      .map(TinyParquet.doubles(_, "plane")).toArray
+    (planes, TinyParquet.int(TinyParquet.readDir(conf, s"$root/meta").head,
+      "bands"))
   }
 
   /** C6+ / text — persist an INVERTED INDEX in its 100 TB layout (the
@@ -1607,28 +1558,16 @@ object Sink {
           "the index keys docs by id; dedupe before building")
       (r.getLong(0), r.getLong(1))
     }
-    // a fresh build supersedes every compaction generation at this path
-    // AND every incremental layer (ingested batches, tombstones) a prior
-    // lifecycle left behind — a stale tombstone surviving an overwrite
-    // build would silently delete freshly-indexed docs. This runs only
-    // AFTER the input is pinned and its contract checks passed: every
-    // read of `docs` (which may even derive from this index) and every
-    // `require` above precedes the first destructive action.
-    if (mode == "overwrite") {
-      clearGenerations(spark, path)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // "folded" included (r16 — the vector builds always cleared it):
-      // a stale folded ledger surviving a fresh build would silently
-      // SWALLOW every future delete/append whose batch id it already
-      // contains (the ledger replay-skip fires on ids from the previous
-      // lineage), leaving deleted docs servable with no error anywhere
-      Seq("postings_ingested", "meta_ingested",
-        "tombstones", "tombstones_meta",
-        "doc_stats", "doc_stats_ingested", "folded").foreach { sub =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-      }
-    }
+    // a fresh build supersedes every generation and every layer a
+    // prior lifecycle left at this path ([[dropSuperseded]]) — a stale
+    // tombstone surviving an overwrite build would silently delete
+    // freshly-indexed docs, and a stale folded ledger would SWALLOW
+    // every future delete/append whose batch id it already contains.
+    // This runs only AFTER the input is pinned and its contract checks
+    // passed: every read of `docs` (which may even derive from this
+    // index) and every `require` above precedes the first destructive
+    // action.
+    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
     counts
       // dl from the PINNED sidecar rows rather than a second
       // groupBy(doc_id) aggregate over counts (r17): docStats carries
@@ -1682,29 +1621,20 @@ object Sink {
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String): DataFrame = {
     val root = resolveIndexRoot(spark, rawPath)
-    val censusPath = new org.apache.hadoop.fs.Path(s"$root/build_census")
-    val fs = censusPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(censusPath)) {
-      spark.read
-        .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-          "positions ARRAY<INT>, bucket INT")
-        .parquet(s"$root/postings")
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_build"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/build_census")
-    }
-    val live = readTextIndex(spark, rawPath).postings
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n_now"))
-    spark.read.parquet(s"$root/build_census")
-      .join(live, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        coalesce(col("n_build"), lit(0L)).as("n_build"),
-        coalesce(col("n_now"), lit(0L)).as("n_now"))
-      .withColumn("growth_ppm", expr(
-        "(n_now - n_build) * 1000000 div greatest(n_build, 1)"))
-      .orderBy(col("bucket"))
+    occupancyDrift(spark, root, Seq("bucket"),
+      readTextPostings(spark, root),
+      readTextIndex(spark, rawPath).postings)
   }
+
+  /** The base postings of the text index at `root`, schema declared so
+    * the partition column comes back type-exact.
+    */
+  private def readTextPostings(
+      spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
+    spark.read
+      .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
+        "positions ARRAY<INT>, bucket INT")
+      .parquet(s"$root/postings")
 
   /** Incrementally ADD documents to a persisted inverted index — the
     * [[appendIvfIndex]] of the text leg: NEW docs (ids not currently
@@ -1831,35 +1761,13 @@ object Sink {
       .parquet(s"$path/meta_ingested")
   }
 
-  /** Fold the [[appendTextIndex]] ingested layout back into the base
-    * postings — the maintenance pass of the text leg: high ingest rates
-    * leave one file per touched (bucket, batch) directory and those
-    * small files dominate probe I/O. The fold commits GENERATIONALLY
-    * ([[resolveIndexRoot]]): the full compacted index (postings + meta
-    * with the summed corpus constants) lands in a fresh `gen-N/` and one
-    * `_SUCCESS` marker publishes it — never a multi-rename window (an
-    * earlier version swapped postings and meta via sequential renames
-    * and deleted the ingested layouts after; a crash mid-sequence left
-    * the folded postings AND the ingested batches both live, silently
-    * double-counting df/tf — the exact torn-swap class the rebuild
-    * valves were hardened against). Queries before and after are
-    * bit-identical (spec-asserted). The committed generation carries a
-    * cumulative `folded` ledger of every batch id absorbed into base
-    * postings, so a post-compaction replay of an old micro-batch is
-    * skipped by [[appendTextIndex]] instead of double-counting; cleanup
-    * after the marker drops ALL superseded committed generations (not
-    * just the immediately previous root — a crash between commit and
-    * cleanup must not leak generations forever). Single-maintainer
-    * assumption as documented on [[appendTextIndex]]. Returns (posting
-    * rows after compaction, ingested files folded).
-    */
   /** Batch ids already folded into an index's base layout — read from
     * the `folded` ledger at the RESOLVED root (empty for a
-    * never-compacted index or a pre-ledger layout). Text compactions
-    * write it into each generation; the in-place IVF/LSH compactions
-    * keep it at the flat root ([[writeFoldedLedger]]). Appends AND
-    * deletes consult it: a replayed batch whose effects a compaction
-    * already folded must be skipped, not re-applied.
+    * never-compacted index or a pre-ledger layout). Every rebuild and
+    * compaction writes it into the generation it commits
+    * ([[writeFoldedLedger]]). Appends AND deletes consult it: a
+    * replayed batch whose effects a compaction already folded must be
+    * skipped, not re-applied.
     */
   private def foldedBatchIds(
       spark: org.apache.spark.sql.SparkSession,
@@ -1921,10 +1829,10 @@ object Sink {
     val metaPath = new org.apache.hadoop.fs.Path(s"$root/tombstones_meta")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(metaPath)) return None
-    // a compaction crash can strand the commit record without its id
-    // table (the fold deletes both layouts after the rewrite): the ids
-    // are already PHYSICALLY absent from the rewritten index, so the
-    // stale record means "nothing left to mask" — treat it as empty
+    // an index folded by an in-place compaction (before folds committed
+    // generations) can carry the commit record without its id table:
+    // the ids are already PHYSICALLY absent from the rewritten index, so
+    // the stale record means "nothing left to mask" — treat it as empty
     // rather than letting every subsequent read throw path-not-found
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tombstones")))
       return None
@@ -2166,10 +2074,7 @@ object Sink {
     val dbucket = pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
       .as("dbucket")
     writeDistribution(
-      spark.read
-        .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-          "positions ARRAY<INT>, bucket INT")
-        .parquet(s"$path/postings")
+      readTextPostings(spark, path)
         .select(col("doc_id"), col("dl")).distinct()
         .select(col("doc_id"), col("dl"), dbucket),
       col("dbucket"))
@@ -2232,13 +2137,14 @@ object Sink {
       path: String,
       vecIds: DataFrame,
       batchId: Long): Unit = {
-    if (foldedBatchIds(spark, path).contains(batchId)) return
+    val root = resolveIndexRoot(spark, path)
+    if (foldedBatchIds(spark, root).contains(batchId)) return
     // batch size observed on the pin job — see [[deleteFromIvfIndex]]
     val nObs = Observation()
     val ids = vecIds.select(col("vec_id").cast("long").as("vec_id"))
       .distinct().observe(nObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    writeTombstoneBatch(spark, path, ids,
+    writeTombstoneBatch(spark, root, ids,
       nObs.get("n").asInstanceOf[Long], 0L, batchId)
   }
 
@@ -2266,97 +2172,89 @@ object Sink {
     foldedBatchIds(spark, root) ++ batchIdsAt(spark, root, ingestLayout) ++
       batchIdsAt(spark, root, "tombstones_meta")
 
+  /** Fold the [[appendTextIndex]] ingested layout back into the base
+    * postings — the maintenance pass of the text leg: high ingest rates
+    * leave one file per touched (bucket, batch) directory and those
+    * small files dominate probe I/O. The fold commits GENERATIONALLY
+    * ([[commitGeneration]], as every fold does): the full compacted
+    * index (postings + meta with the summed corpus constants + the
+    * doc-stats sidecar) lands in a fresh `gen-N/` and one `_SUCCESS`
+    * marker publishes it — never a multi-rename window (an earlier
+    * version swapped postings and meta via sequential renames and
+    * deleted the ingested layouts after; a crash mid-sequence left the
+    * folded postings AND the ingested batches both live, silently
+    * double-counting df/tf). Queries before and after are bit-identical
+    * (spec-asserted). The committed generation carries a cumulative
+    * `folded` ledger of every batch id absorbed into base postings, so a
+    * post-compaction replay of an old micro-batch is skipped by
+    * [[appendTextIndex]] instead of double-counting. Single-maintainer
+    * assumption as documented on [[appendTextIndex]]. Returns (posting
+    * rows after compaction, from the new generation's parquet footers;
+    * ingested files folded).
+    */
   def compactTextIndex(
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String): (Long, Long) = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = rootPath.getFileSystem(conf)
     val path = resolveIndexRoot(spark, rawPath)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val ingested = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
     val tombs = new org.apache.hadoop.fs.Path(s"$path/tombstones_meta")
     // a delete-only state (tombstones, no appended batches) still has
     // physical work to fold — only the fully-clean state is a no-op
     if (!fs.exists(ingested) && !fs.exists(tombs)) {
-      (spark.read.parquet(s"$path/postings").count(), 0L)
+      (TinyParquet.rowCount(conf, s"$path/postings"), 0L)
     } else {
       val nf = TinyParquet.visibleFiles(fs, ingested).size.toLong
       val idx = readTextIndex(spark, rawPath)
-      val gen = committedGenerations(fs, rootPath)
-        .maxOption.getOrElse(0L) + 1
-      val genDir = s"$rawPath/gen-$gen"
-      // clear any torn, uncommitted generation at this number
-      fs.delete(new org.apache.hadoop.fs.Path(genDir), true)
-      // surviving-postings count observed on the rewrite job (r18) —
-      // the former read-back count re-scanned the just-written table
-      val nObs = Observation()
-      writeDistribution(idx.postings.observe(nObs, count(lit(1)).as("n")),
-          col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$genDir/postings")
-      val n = nObs.get("n").asInstanceOf[Long]
-      Seq((idx.nDocs, idx.totalTokens, idx.buckets))
-        .toDF("n_docs", "total_tokens", "buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$genDir/meta")
-      // fold the doc-stats sidecar the same way as the postings: the
-      // surviving layers under the batch-scoped tombstone mask, laid
-      // out doc-bucketed again. Folded from the SIDECAR layers (docs-
-      // sized), not re-derived from postings — zero-token docs survive
-      val statsView = docStatsLayers(spark, path, idx.buckets)
-      val genStats = committedTombstones(spark, path, "doc_id") match {
-        case None => statsView.drop("row_batch")
-        case Some((tombs, _, _)) =>
-          maskTombstones(statsView, "doc_id", tombs)
-      }
-      writeDistribution(genStats, col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket")
-        .parquet(s"$genDir/doc_stats")
-      // the FOLDED-BATCH ledger: ids whose effects now live in this
-      // generation's base layout (cumulative across compactions) — a
-      // micro-batch REPLAYED after its compaction (restart from an old
-      // checkpoint) must be recognized and skipped by [[appendTextIndex]]
-      // (docs would re-enter and double-count N/T/df) and by
-      // [[deleteFromTextIndex]] (the replayed tombstone would mask the
-      // folded — possibly re-appended — base rows and double-subtract
-      // constants). One 8-byte row per batch ever folded: ledger size
-      // is batches-folded, never corpus-sized
-      absorbedBatchIds(spark, path, "meta_ingested")
-        .toSeq.sorted
-        .toDF("batch_id")
-        .coalesce(1).write.mode("overwrite").parquet(s"$genDir/folded")
       // the BUILD-time occupancy baseline survives the fold — drift is
       // measured from build, and compaction relocates files, not rows
       // (the [[lshOccupancyDrift]] stance: census identical across
       // compaction, spec-asserted). Pre-census layouts adopt their base
       // occupancy first
-      val oldCensus = new org.apache.hadoop.fs.Path(s"$path/build_census")
-      if (fs.exists(oldCensus)) {
-        spark.read.parquet(s"$path/build_census")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$genDir/build_census")
-      } else {
-        spark.read
-          .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-            "positions ARRAY<INT>, bucket INT")
-          .parquet(s"$path/postings")
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n_build"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$genDir/build_census")
+      adoptBuildCensus(spark, path, Seq("bucket"),
+        readTextPostings(spark, path))
+      val genDir = commitGeneration(spark, rawPath,
+          nextGeneration(spark, rawPath)) { genDir =>
+        writeDistribution(idx.postings, col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$genDir/postings")
+        Seq((idx.nDocs, idx.totalTokens, idx.buckets))
+          .toDF("n_docs", "total_tokens", "buckets")
+          .coalesce(1).write.mode("overwrite").parquet(s"$genDir/meta")
+        // fold the doc-stats sidecar the same way as the postings: the
+        // surviving layers under the batch-scoped tombstone mask, laid
+        // out doc-bucketed again. Folded from the SIDECAR layers (docs-
+        // sized), not re-derived from postings — zero-token docs survive
+        val statsView = docStatsLayers(spark, path, idx.buckets)
+        val genStats = committedTombstones(spark, path, "doc_id") match {
+          case None => statsView.drop("row_batch")
+          case Some((tombs, _, _)) =>
+            maskTombstones(statsView, "doc_id", tombs)
+        }
+        writeDistribution(genStats, col("dbucket"))
+          .write.mode("overwrite").partitionBy("dbucket")
+          .parquet(s"$genDir/doc_stats")
+        carryTables(spark, path, genDir, "build_census")
+        // the FOLDED-BATCH ledger: ids whose effects now live in this
+        // generation's base layout (cumulative across compactions) — a
+        // micro-batch REPLAYED after its compaction (restart from an old
+        // checkpoint) must be recognized and skipped by
+        // [[appendTextIndex]] (docs would re-enter and double-count
+        // N/T/df) and by [[deleteFromTextIndex]] (the replayed tombstone
+        // would mask the folded — possibly re-appended — base rows and
+        // double-subtract constants). One 8-byte row per batch ever
+        // folded: ledger size is batches-folded, never corpus-sized.
+        // Tombstones fold PHYSICALLY here: the postings come from the
+        // tombstone-applied view and the meta carries the adjusted
+        // constants, so their layouts drop with the superseded root — a
+        // replayed delete finds its docs absent and contributes zero
+        // ([[deleteFromTextIndex]]'s replay rule)
+        writeFoldedLedger(spark, genDir,
+          absorbedBatchIds(spark, path, "meta_ingested"))
       }
-      // COMMIT: one marker-file creation, then recoverable cleanup
-      fs.create(
-        new org.apache.hadoop.fs.Path(s"$genDir/_SUCCESS"), true).close()
-      // tombstones fold PHYSICALLY here: the generation's postings were
-      // written from the tombstone-applied view and its meta carries the
-      // adjusted constants, so the layouts drop with the rest — a
-      // replayed delete finds its docs absent and contributes zero
-      // ([[deleteFromTextIndex]]'s replay rule)
-      dropSupersededLayouts(fs, rawPath, gen,
-        Seq("postings", "meta", "postings_ingested", "meta_ingested",
-          "build_census", "doc_stats", "doc_stats_ingested",
-          "tombstones", "tombstones_meta"))
-      (n, nf)
+      (TinyParquet.rowCount(conf, s"$genDir/postings"), nf)
     }
   }
 
@@ -2486,10 +2384,7 @@ object Sink {
     // batch id): the batch-scoped tombstone mask ([[maskTombstones]])
     // keys on it, and [[readTextIndex]] drops it before handing the
     // postings out
-    val base = spark.read
-      .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-        "positions ARRAY<INT>, bucket INT")
-      .parquet(s"$path/postings")
+    val base = readTextPostings(spark, path)
       .withColumn("row_batch", lit(-1L))
     val (postings, nDocs, totalTokens, positional) =
       if (!exists("postings_ingested") || !exists("meta_ingested"))
@@ -2656,11 +2551,12 @@ object Sink {
         graft.operators.Census.mergeFreqCensus(base, d, groupCols, maxMapSize))
 
   /** Shared generation-commit engine of the census sinks: write the full
-    * merged table to a fresh `gen-<batchId>/` (the `_SUCCESS` marker IS
-    * the commit record), then GC EVERY committed generation with a lower
-    * id — not just the one read as current, so a crash that previously
-    * orphaned an older generation (write new → die before delete) is
-    * healed by the next merge instead of leaking forever.
+    * merged table to a fresh `gen-<batchId>/` through
+    * [[commitGeneration]] (the `_SUCCESS` marker IS the commit record),
+    * which then drops EVERY generation with a lower id — not just the
+    * one read as current, so a crash that previously orphaned an older
+    * generation (write new → die before delete) is healed by the next
+    * merge instead of leaking forever.
     */
   private def mergeGenerational(
       spark: org.apache.spark.sql.SparkSession,
@@ -2676,14 +2572,8 @@ object Sink {
           case Some((base, _)) => mergeFn(base, delta)
           case None => delta
         }
-        merged.write.mode("overwrite").parquet(s"$path/gen-$batchId")
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        committedGenerations(fs, root)
-          .filter(_ < batchId)
-          .foreach { id =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/gen-$id"), true)
-          }
+        commitGeneration(spark, path, batchId)(
+          merged.write.mode("overwrite").parquet(_))
         true
     }
   }

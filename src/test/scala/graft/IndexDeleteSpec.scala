@@ -168,7 +168,8 @@ class IndexDeleteSpec extends SparkSpec {
       // compaction folds: rows physically gone, layouts dropped
       Sink.compactIvfIndex(spark, dir)
       assert(!new java.io.File(s"$dir/tombstones").exists())
-      val survivors = spark.read.parquet(s"$dir/celled")
+      val survivors = spark.read
+        .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/celled")
         .select(col("vec_id")).as[Long].collect().toSet
       assert(survivors.intersect(doomedIds).isEmpty)
       assert(servedIds(Sink.readIvfIndex(spark, dir)) === got,
@@ -202,7 +203,8 @@ class IndexDeleteSpec extends SparkSpec {
 
       Sink.compactLshIndex(spark, dir)
       assert(!new java.io.File(s"$dir/tombstones").exists())
-      assert(spark.read.parquet(s"$dir/signed")
+      assert(spark.read
+        .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/signed")
         .filter(col("vec_id").isin(doomedIds.toSeq: _*)).count() === 0,
         "deleted ids physically absent after the fold")
       assert(servedIds(Sink.readLshIndex(spark, dir)) === got)

@@ -128,7 +128,8 @@ class IndexReaddSpec extends SparkSpec {
       Sink.compactIvfIndex(spark, dir)
       assert(servedIds(Sink.readIvfIndex(spark, dir)) === got,
         "fold parity over a resurrected vector")
-      assert(spark.read.parquet(s"$dir/celled")
+      assert(spark.read
+        .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/celled")
         .filter(col("vec_id") === 2).count() === 1L)
 
       // post-fold replay of the delete: ledger-skipped — it would

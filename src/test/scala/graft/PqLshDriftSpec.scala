@@ -182,11 +182,12 @@ class PqLshDriftSpec extends SparkSpec {
         "census must be identical across compaction")
 
       // legacy index without build_census: adopt live occupancy
+      val root = Sink.resolveIndexRoot(spark, dir)
       org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$dir/build_census"))
+        new java.io.File(s"$root/build_census"))
       val adopted = Sink.lshOccupancyDrift(spark, dir).collect()
       assert(adopted.forall(_.getAs[Long]("growth_ppm") === 0L))
-      assert(new java.io.File(s"$dir/build_census").exists())
+      assert(new java.io.File(s"$root/build_census").exists())
     } finally {
       idx.unpersist()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

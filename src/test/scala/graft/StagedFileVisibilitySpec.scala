@@ -21,6 +21,12 @@ import graft.sinks.{Sink, TinyParquet}
   * The crashed batch id `K` is one no real write ever used. The planted
   * files are copies of real part files of the same layout, so a reader
   * that does descend into the hidden directories decodes them as rows.
+  *
+  * The same contract for a fold: a generation without its `_SUCCESS`
+  * marker stays invisible and the next fold reuses its number, and a
+  * fold that crashed after its marker but before its cleanup leaves
+  * the layouts it absorbed on disk, where no reader, valve or later
+  * fold may see them again.
   */
 class StagedFileVisibilitySpec extends SparkSpec {
   import spark.implicits._
@@ -129,8 +135,9 @@ class StagedFileVisibilitySpec extends SparkSpec {
     assert(Sink.compactIvfIndexIfNeeded(spark, vdir, maxIngestedFiles = 0L)._1)
     assert(Sink.compactLshIndexIfNeeded(spark, ldir, maxIngestedFiles = 0L)._1)
     assert(foldedLedger(Sink.resolveIndexRoot(spark, tdir)) === Set(0L, 1L, 2L))
-    assert(foldedLedger(vdir) === Set(0L, 1L, 2L))
-    assert(foldedLedger(ldir) === Set(0L, 1L))
+    assert(foldedLedger(Sink.resolveIndexRoot(spark, vdir)) ===
+      Set(0L, 1L, 2L))
+    assert(foldedLedger(Sink.resolveIndexRoot(spark, ldir)) === Set(0L, 1L))
     assert(textNT() === nt0, "compaction preserves the committed state")
     assert(ivfRows() === ivf0)
     assert(lshRows()._1 === lsh0._1)
@@ -162,6 +169,156 @@ class StagedFileVisibilitySpec extends SparkSpec {
       Files.createDirectories(Paths.get(base))
       crashedAttemptStaysInvisible(base)
     } finally rm(outer)
+  }
+
+  /** One index family under the crash-after-commit checks: its flat
+    * root `dir`, the base table a torn generation is planted from, the
+    * compaction, everything a reader or valve observes, and whether the
+    * re-added id 2 is served.
+    */
+  private case class Family(
+      dir: String,
+      baseTable: String,
+      fold: () => (Long, Long),
+      state: () => Any,
+      readdServed: () => Boolean)
+
+  /** The incremental layouts a fold absorbs, in any family. */
+  private val incrementalLayouts = Seq("ingested", "signed_ingested",
+    "postings_ingested", "meta_ingested", "doc_stats_ingested",
+    "tombstones", "tombstones_meta")
+
+  private def copyTree(from: String, to: String): Unit =
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(from), new java.io.File(to))
+
+  /** Plant a torn `gen-1/` (data, no `_SUCCESS`), then crash a fold
+    * after its commit and before its cleanup: the pre-fold incremental
+    * layouts reappear beside the new generation. Readers, valves and a
+    * second fold must all see the clean post-fold state.
+    */
+  private def crashAfterCommitIsInvisible(f: Family): Unit = {
+    val aside = s"${f.dir}_aside"
+    val present = incrementalLayouts
+      .filter(l => new java.io.File(s"${f.dir}/$l").exists())
+    assert(present.nonEmpty)
+    present.foreach(l => copyTree(s"${f.dir}/$l", s"$aside/$l"))
+
+    val before = f.state()
+    copyTree(s"${f.dir}/${f.baseTable}", s"${f.dir}/gen-1/${f.baseTable}")
+    Files.createDirectories(Paths.get(f.dir, "gen-1", "stale"))
+    assert(Sink.resolveIndexRoot(spark, f.dir) === f.dir,
+      "a torn generation must not resolve")
+    assert(f.state() === before, "a torn generation must stay invisible")
+
+    val (n, _) = f.fold()
+    assert(Sink.resolveIndexRoot(spark, f.dir) === s"${f.dir}/gen-1",
+      "the fold must reuse the torn generation's number")
+    assert(!Files.exists(Paths.get(f.dir, "gen-1", "stale")),
+      "the torn generation's leftovers must not be committed")
+    val clean = f.state()
+    assert(f.readdServed(), "the re-added id is served")
+
+    present.foreach(l => copyTree(s"$aside/$l", s"${f.dir}/$l"))
+    assert(f.state() === clean,
+      "layouts a fold absorbed must stay invisible after its commit")
+    assert(f.readdServed(), "a stale tombstone must not mask the re-add")
+    assert(f.fold() === ((n, 0L)), "a second fold finds nothing to fold")
+    assert(f.state() === clean)
+  }
+
+  private val never = Long.MaxValue
+
+  private def queries = Tables.embeddings(spark, sf)
+    .filter(col("vec_id") < 3)
+    .select((col("vec_id") + 900000L).as("query_id"), col("embedding"))
+
+  private def ranked(
+      answers: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int)] =
+    answers.select(col("query_id"), col("vec_id"), col("rank"))
+      .as[(Long, Long, Int)].collect().toSeq.sorted
+
+  /** Each family's flat layout at `dir` after build, append (batch 0),
+    * delete of ids 2 and 4 (batch 1) and re-append of id 2 (batch 2).
+    */
+  private def textFamily(dir: String): Family = {
+    val docs = Tables.documents(spark, sf)
+    Sink.writeTextIndex(docs.filter(col("doc_id") % 2 === 0), dir,
+      buckets = 8)
+    Sink.appendTextIndex(spark, dir,
+      docs.filter(col("doc_id") % 4 === 1), batchId = 0L)
+    Sink.deleteFromTextIndex(spark, dir, Seq(2L, 4L).toDF("doc_id"), 1L)
+    Sink.appendTextIndex(spark, dir, docs.filter(col("doc_id") === 2), 2L)
+    Family(dir, "postings",
+      () => Sink.compactTextIndex(spark, dir),
+      () => {
+        val t = Sink.readTextIndex(spark, dir)
+        (t.nDocs, t.totalTokens, t.postings.count(),
+          t.postings.select(col("doc_id")).distinct().as[Long]
+            .collect().toSet,
+          Sink.compactTextIndexIfNeeded(spark, dir, never, never),
+          Sink.textOccupancyDrift(spark, dir).collect().toSeq)
+      },
+      () => !Sink.readTextIndex(spark, dir).postings
+        .filter(col("doc_id") === 2L).isEmpty)
+  }
+
+  private def ivfFamily(dir: String): Family = {
+    val emb = Tables.embeddings(spark, sf)
+    val ivf = Similarity.buildIvfIndexExact(
+      emb.filter(col("vec_id") % 2 === 0), nlist = 4, iters = 1)
+    Sink.writeIvfIndex(ivf, dir)
+    ivf.unpersist()
+    Sink.appendIvfIndex(spark, dir,
+      emb.filter(col("vec_id") % 4 === 1), batchId = 0L)
+    Sink.deleteFromIvfIndex(spark, dir, Seq(2L, 4L).toDF("vec_id"), 1L)
+    Sink.appendIvfIndex(spark, dir, emb.filter(col("vec_id") === 2), 2L)
+    Family(dir, "celled",
+      () => Sink.compactIvfIndex(spark, dir),
+      () => {
+        val i = Sink.readIvfIndex(spark, dir)
+        (i.celled.count(),
+          ranked(Similarity.ivfQueryVectors(i, queries, k = 10, nprobe = 4)),
+          Sink.compactIvfIndexIfNeeded(spark, dir, never, never, never),
+          Sink.ivfOccupancyDrift(spark, dir).collect().toSeq)
+      },
+      () => Sink.readIvfIndex(spark, dir).celled
+        .filter(col("vec_id") === 2L).count() === 1L)
+  }
+
+  private def lshFamily(dir: String): Family = {
+    val emb = Tables.embeddings(spark, sf)
+    val lsh = Similarity.buildLshIndex(
+      emb.filter(col("vec_id") % 2 === 0), nBits = 32, bands = 8)
+    Sink.writeLshIndex(lsh, dir)
+    lsh.unpersist()
+    Sink.appendLshIndex(spark, dir,
+      emb.filter(col("vec_id") % 4 === 1), batchId = 0L)
+    Sink.deleteFromLshIndex(spark, dir, Seq(2L, 4L).toDF("vec_id"), 1L)
+    Sink.appendLshIndex(spark, dir, emb.filter(col("vec_id") === 2), 2L)
+    Family(dir, "signed",
+      () => Sink.compactLshIndex(spark, dir),
+      () => {
+        val l = Sink.readLshIndex(spark, dir)
+        (l.signed.count(), l.postings.count(),
+          ranked(Similarity.lshQueryVectors(l, queries, k = 10)),
+          Sink.compactLshIndexIfNeeded(spark, dir, never, never, never),
+          Sink.lshOccupancyDrift(spark, dir).collect().toSeq)
+      },
+      () => Sink.readLshIndex(spark, dir).signed
+        .filter(col("vec_id") === 2L).count() === 1L)
+  }
+
+  Seq[(String, String => Family)](
+    "text" -> textFamily, "IVF" -> ivfFamily, "LSH" -> lshFamily
+  ).foreach { case (name, family) =>
+    test(s"$name: a crash after a fold's commit, before its cleanup, " +
+        "leaves the absorbed layouts invisible; a torn generation stays " +
+        "invisible and the fold reuses its number") {
+      val base = Files.createTempDirectory("crash_after_commit").toString
+      try crashAfterCommitIsInvisible(family(s"$base/index"))
+      finally rm(base)
+    }
   }
 
   test("visibility is decided below the root only: a layout under a " +

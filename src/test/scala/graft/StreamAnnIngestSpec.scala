@@ -141,7 +141,8 @@ class StreamAnnIngestSpec extends SparkSpec {
       // task), so a dir holds up to numShufflePartitions files, never
       // one per (cell × input file)
       val maxFiles = spark.sessionState.conf.numShufflePartitions
-      new java.io.File(s"$idxDir/celled").listFiles()
+      new java.io.File(s"${Sink.resolveIndexRoot(spark, idxDir)}/celled")
+        .listFiles()
         .filter(_.getName.startsWith("cell=")).foreach { d =>
           val files = d.listFiles().count(_.getName.endsWith(".parquet"))
           assert(files >= 1 && files <= maxFiles,

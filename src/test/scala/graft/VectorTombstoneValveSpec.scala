@@ -111,7 +111,8 @@ class VectorTombstoneValveSpec extends SparkSpec {
       assert(!new java.io.File(s"$dir/tombstones").exists())
       assert(adc() === before, "ADC parity across the coded-layout fold")
       // deleted ids physically absent from the folded celled table
-      val survivors = spark.read.parquet(s"$dir/celled")
+      val survivors = spark.read
+        .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/celled")
         .select(col("vec_id")).as[Long].collect().toSet
       assert(survivors.intersect(Set(0L, 1L, 2L, 3L, 4L, 5L)).isEmpty)
     } finally rm(dir)
@@ -190,7 +191,8 @@ class VectorTombstoneValveSpec extends SparkSpec {
         "tight-shortlist ADC bit-parity across the coded valve fold — " +
           "base codes and re-encoded ingested codes both survived")
       // the re-added ids serve; the never-re-added deleted ids do not
-      val served = spark.read.parquet(s"$dir/celled")
+      val served = spark.read
+        .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/celled")
         .select(col("vec_id")).as[Long].collect().toSet
       val readded = emb.filter(col("vec_id") % 14 === 3)
         .select(col("vec_id")).as[Long].collect().toSet
@@ -232,7 +234,8 @@ class VectorTombstoneValveSpec extends SparkSpec {
       val (c2, _, _, _) = Sink.compactIvfIndexIfNeeded(spark, dir,
         maxMaskedIds = 1000000L)
       assert(!c2, "an explicit arg wins over the persisted policy")
-      assert(new java.io.File(s"$dir/tombstones").exists())
+      assert(new java.io.File(
+        s"${Sink.resolveIndexRoot(spark, dir)}/tombstones").exists())
     } finally rm(dir)
   }
 
@@ -297,7 +300,8 @@ class VectorTombstoneValveSpec extends SparkSpec {
       built.unpersist()
       // delete EVERY vector of one cell: growth_ppm = -1e6 there — the
       // signed gate never saw this (deletes don't grow cells)
-      val cell0 = spark.read.parquet(s"$dir/celled")
+      val cell0 = spark.read
+        .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/celled")
         .filter(col("cell") === 0).select(col("vec_id"))
       Sink.deleteFromIvfIndex(spark, dir, cell0, batchId = 0L)
       val drift = Sink.ivfOccupancyDrift(spark, dir)
