@@ -4,7 +4,8 @@
 # builds against (`perfbench/build.py --test`). Round 8 shipped an
 # end-of-round snapshot that failed `sbt compile`, which blanked the
 # entire driver signal for the round — this hook makes that impossible.
-# A staged change under graft/sinks also runs the index crash-state specs.
+# A staged change under graft/sinks also runs the index crash-state specs,
+# and one to Bench, ScaleCheck or graft/metrics the measurement specs.
 # Bypass (emergencies only): git commit --no-verify.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -40,4 +41,18 @@ if git diff --cached --name-only | grep -q '^src/main/scala/graft/sinks/'; then
     exit 1
   fi
   echo "[precommit] crash-state specs green" >&2
+fi
+
+# The measurement layer and its two readers: a staged change there also
+# runs the specs of its counters and of the bench_full.json format.
+if git diff --cached --name-only | grep -qE \
+    '^src/main/scala/graft/(Bench\.scala|ScaleCheck\.scala|metrics/)'; then
+  echo "[precommit] measurement layer staged - running its specs" >&2
+  if ! sbt -batch "testOnly graft.BenchSpec graft.MetricsSpec graft.IndexLayerHygieneSpec" \
+      >/tmp/precommit-metrics.log 2>&1; then
+    echo "[precommit] MEASUREMENT SPECS FAILED - commit refused. Tail of log:" >&2
+    tail -30 /tmp/precommit-metrics.log >&2
+    exit 1
+  fi
+  echo "[precommit] measurement specs green" >&2
 fi

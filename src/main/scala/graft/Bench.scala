@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.metrics.{Counters, Metrics}
 
 /** Benchmark main. Prints ONE machine-readable JSON line (plus a short tail
   * line that survives output-tail truncation) and writes the COMPLETE
@@ -32,23 +33,18 @@ import org.apache.spark.sql.SparkSession
   *     in bench_full.json: the min is the noise-floor estimate (a stall
   *     can only inflate a run), so median-up + min-down = noise,
   *     median-up + min-up = a real plan change.
+  *   - every run goes through [[graft.metrics.Metrics.measure]], and each
+  *     bench_full.json entry carries the median over reps of each Spark
+  *     counter (jobs, stages, tasks, executor CPU ms, shuffle and spill
+  *     bytes, codegen compiles and ms): counts that do not move with host
+  *     load, so a verdict can rest on them where seconds cannot.
+  *
+  * Usage: `Bench [q1,q2,...]` measures the named queries only (same form
+  * as `Verify`'s third argument) and then writes bench_subset.json unless
+  * SPARK_GRAFT_BENCH_OUT is set; `Bench --against <git-rev>` runs the A/B
+  * mode below. The driver calls it with no arguments.
   */
 object Bench {
-
-  /** Time one thunk: (seconds, error). A failing query must surface in the
-    * output, not silently time as ~0 and "improve" the total.
-    */
-  def timeQuery(fn: => Unit): (Double, Option[String]) = {
-    val t0 = System.nanoTime()
-    val err =
-      try { fn; None }
-      catch {
-        case e: Throwable => Some(
-          e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(200))
-      }
-    ((System.nanoTime() - t0) / 1e9, err)
-  }
 
   /** Median of a non-empty sample; even sizes average the middle pair. */
   def median(xs: Seq[Double]): Double = {
@@ -68,6 +64,30 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
+
+  // 0.1 ms precision per query keeps the full line ~40% shorter — the
+  // driver's tail buffer is ~4 KB and round 4's full line overflowed it.
+  def fmt(sec: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(sec))
+
+  /** One bench_full.json entry from a query's measured runs: `median`,
+    * `min`, `runs` and `err` first (the prefix [[parseBenchFullMins]]
+    * reads), then the median over runs of each counter.
+    */
+  def entryJson(
+      name: String, runs: Seq[(Double, Option[String], Counters)]): String = {
+    val secs = runs.map(_._1)
+    val err = runs.flatMap(_._2).headOption
+      .map(e => s""","err":"${jsonEscape(e)}"""").getOrElse("")
+    val counters = Counters.keys
+      .zip(runs.map(_._3.fields.map(_._2.toDouble)).transpose.map(median))
+      .map { case (k, v) =>
+        // an even run count can put a median on a half
+        s""","$k":${if (v.isWhole) v.toLong.toString else v.toString}"""
+      }.mkString
+    s""""$name": {"median":${fmt(median(secs))},"min":${fmt(secs.min)},""" +
+      s""""runs":${secs.map(fmt).mkString("[", ",", "]")}$err$counters}"""
+  }
 
   // ------------------------------------------------------------ A/B mode
 
@@ -300,37 +320,41 @@ object Bench {
         runAgainst(args(i + 1)); return
       case _ => ()
     }
+    val only = args.headOption.map(_.split(",").toSeq.sorted)
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
+    // a subset run must not overwrite the committed full artifact
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (only.isEmpty) "bench_full.json" else "bench_subset.json")
     val spark = SparkSession.builder()
       .master(s"local[${LocalCpus.n}]")
       .config("spark.sql.shuffle.partitions", LocalCpus.n)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // SORTED execution order: `queries` is a HashMap, so its iteration
+    // order depends on the full key SET — two binaries that differ only
+    // by added queries would otherwise run the SHARED queries in
+    // different relative orders, and a query's wall time is not
+    // position-independent (GC state, broadcast cleanup, code-cache).
+    // The r14 A/B measured exactly that confound: movers were
+    // overwhelmingly queries neither side's diff touched. Sorting makes
+    // cross-binary passes order-stable for every rev from here on.
+    val names = only.getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     // Warm-up pass: JIT + janino codegen + parquet footers are per-JVM
     // one-time costs that otherwise land on whichever query runs first and
     // dominate its time (measured swings of 2-10×). The measured pass below
     // reports steady-state throughput — the quantity comparable round over
-    // round and to a long-lived cluster.
-    //
-    // Execution is forced via queryExecution.toRdd.count(): a plain
-    // df.count() plants a COUNT on top and lets the optimizer prune the
-    // registered plan under it — in particular a left outer join whose
-    // right side is unique-keyed gets ELIMINATED, so queries shaped
-    // "per-row table LEFT JOIN per-key aggregate" (contamination,
-    // repetition) were timed with their dominant branch never executing
-    // (measured 0.2 s "cost" for a 2.6 s computation). toRdd executes the
-    // registered plan exactly as Verify's parquet write does.
-    def force(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
-    }
+    // round and to a long-lived cluster. Every run is forced through
+    // `Metrics.force`, which executes the registered plan unpruned.
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => }
+    names.foreach { name =>
+      try Metrics.force(SparkEntry.queries(name)(spark, sfDir))
+      catch { case _: Throwable => }
     }
     // Measured passes: run the FULL suite reps times (round-robin, not
     // back-to-back per query) so a single noisy-host window degrades one
@@ -361,38 +385,25 @@ object Bench {
       median((1 to 5).map(_ => calibrateOnce()))
     }
     calibrate() // warm the calib plan like everything else
-    // SORTED execution order: `queries` is a HashMap, so its iteration
-    // order depends on the full key SET — two binaries that differ only
-    // by added queries would otherwise run the SHARED queries in
-    // different relative orders, and a query's wall time is not
-    // position-independent (GC state, broadcast cleanup, code-cache).
-    // The r14 A/B measured exactly that confound: movers were
-    // overwhelmingly queries neither side's diff touched. Sorting makes
-    // cross-binary passes order-stable for every rev from here on.
-    val names = SparkEntry.queries.keys.toSeq.sorted
     val runsByQuery = collection.mutable.LinkedHashMap(
-      names.map(n => n -> Vector.empty[(Double, Option[String])]): _*)
+      names.map(n =>
+        n -> Vector.empty[(Double, Option[String], Counters)]): _*)
     var calibRuns = Vector.empty[Double]
     for (_ <- 1 to reps) {
       calibRuns = calibRuns :+ calibrate()
       for (name <- names) {
         val fn = SparkEntry.queries(name)
-        runsByQuery(name) =
-          runsByQuery(name) :+ timeQuery { force(fn(spark, sfDir)) }
+        runsByQuery(name) = runsByQuery(name) :+
+          Metrics.measure(spark) { Metrics.force(fn(spark, sfDir)) }
       }
     }
     val calibMed = median(calibRuns)
     val results = runsByQuery.toSeq.map { case (name, runs) =>
-      (name, median(runs.map(_._1)), runs.map(_._1),
-        runs.flatMap(_._2).headOption)
+      (name, median(runs.map(_._1)), runs.flatMap(_._2).headOption)
     }
-    // 0.1 ms precision per query keeps the full line ~40% shorter — the
-    // driver's tail buffer is ~4 KB and round 4's full line overflowed it.
-    def fmt(sec: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(sec))
-    val qs = results.map { case (k, med, _, _) => s"\"" + k + "\":" + fmt(med) }
+    val qs = results.map { case (k, med, _) => s"\"" + k + "\":" + fmt(med) }
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e)) =>
+    val errs = results.collect { case (k, _, Some(e)) =>
       s"\"" + k + "\":\"" + jsonEscape(e) + "\""
     }
     val errField =
@@ -407,11 +418,9 @@ object Bench {
     // ambiguous. ab_measured_at names the HEAD it was measured on.
     val ab = abFields()
     val fileJson = {
-      val entries = results.map { case (k, med, runs, err) =>
-        val runsJson = runs.map(fmt).mkString("[", ",", "]")
-        val errJson = err.map(e => s""","err":"${jsonEscape(e)}"""").getOrElse("")
-        s"""    "$k": {"median":${fmt(med)},"min":${fmt(runs.min)},"runs":$runsJson$errJson}"""
-      }.mkString(",\n")
+      val entries = runsByQuery.toSeq
+        .map { case (k, runs) => "    " + entryJson(k, runs) }
+        .mkString(",\n")
       val abLine =
         if (ab.isEmpty) ""
         else "\n  " + ab.stripPrefix(",").split(",")
@@ -443,7 +452,7 @@ $entries
     // consumer cannot double-count — and name the slowest 5 queries so the
     // expensive tail of the distribution survives truncation too.
     val slowest = results.sortBy(-_._2).take(5)
-      .map { case (k, med, _, _) => s"\"" + k + "\":" + fmt(med) }
+      .map { case (k, med, _) => s"\"" + k + "\":" + fmt(med) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total_tail","value":$total,"unit":"sec","nqueries":${results.size},"nerrors":${errs.size},"reps":$reps,"calib":${fmt(calibMed)},"calib_min":${fmt(calibRuns.min)},"slowest":$slowest,"full":"$outPath","sf":"$sfDir"}""")
     spark.stop()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.metrics.Metrics.{force, measure}
 import graft.operators.{Assembly, Curation, Dedup, Sessionize, Similarity,
   TextAnalysis}
 
@@ -14,7 +15,9 @@ import graft.operators.{Assembly, Curation, Dedup, Sessionize, Similarity,
   *
   * The point is evidence for the 100 TB design claims: candidate
   * generation must grow ~linearly in corpus size (bounded by block/bucket
-  * structure), never quadratically.
+  * structure), never quadratically. Each probe runs through
+  * [[graft.metrics.Metrics.measure]] and prints its Spark counters next
+  * to its seconds, so growth shows in counts no host's load moves.
   */
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
@@ -46,17 +49,14 @@ object ScaleCheck {
     val n = big.count()
     println(s"corpus: $n0 -> $n docs (x$mult)")
 
-    // execute a plan as registered (df.count() lets the optimizer prune
-    // the plan under a COUNT — e.g. eliminate a unique-keyed left join —
-    // so probe times would not measure the operator; see Bench.force)
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-
+    // one probe line: seconds, rows, then the Spark counters, which show
+    // growth the same way on any host
     def time(name: String)(f: => Long): Unit =
       if (only.forall(name.contains)) {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"$name%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s   rows=$r")
+        var rows = 0L
+        val (sec, err, counters) = measure(spark) { rows = f }
+        println(f"$name%-32s $sec%8.2f s   rows=$rows  ${counters.show}" +
+          err.map(e => s"  ERR $e").getOrElse(""))
       }
 
     time("text_stats (full scan)") {

@@ -619,9 +619,9 @@ object TextAnalysis {
     * scale). The (doc_id, gram) count table is lazily localCheckpointed:
     * it feeds THREE consumers (c2, c1 through it, and the scoring join),
     * and materializing it once replaces two full re-tokenizations of the
-    * corpus (measured: ScaleCheck ×10 11.0 → 8.2 s, BenchOne sf0.1
-    * ~4.3 s; checkpointing the later, thinner c2 instead LOST ~2.3 s —
-    * it only deduplicates one consumer and adds a barrier). Cluster
+    * corpus (measured: ScaleCheck ×10 11.0 → 8.2 s, `Bench text_lm_score`
+    * at sf0.1 ~4.3 s; checkpointing the later, thinner c2 instead LOST
+    * ~2.3 s — it only deduplicates one consumer and adds a barrier). Cluster
     * twin: write the per-doc gram counts to a temp table. The
     * scoring join is gram-keyed vocabulary⋈per-doc-counts; hot grams
     * ("of the") skew the probe side, but the build side is one row per

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the package-private Column↔Expression converters that the
@@ -10,4 +11,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`), so counters read afterwards
+    * include every job and task that ran before the call.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -4,18 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class BenchSpec extends AnyFunSuite {
 
-  test("timeQuery records the error instead of swallowing it") {
-    val (_, err) = Bench.timeQuery {
-      throw new IllegalStateException("boom \"quoted\" detail")
-    }
-    assert(err.isDefined)
-    assert(err.get.contains("IllegalStateException"))
-    assert(err.get.contains("boom"))
-    val (sec, ok) = Bench.timeQuery { () }
-    assert(ok.isEmpty)
-    assert(sec >= 0.0)
-  }
-
   test("jsonEscape keeps the error payload one valid JSON line") {
     assert(Bench.jsonEscape("a\"b\nc\\d") === "a\\\"b\\nc\\\\d")
     assert(Bench.jsonEscape("ctrlx") === "ctrl\\u0001x")

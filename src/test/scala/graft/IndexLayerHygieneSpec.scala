@@ -151,12 +151,26 @@ class IndexLayerHygieneSpec extends SparkSpec {
 
   test("A/B bench parse: exponent-form medians/mins round-trip instead " +
       "of silently dropping the query") {
+    // q_new is written by Bench itself, in the shape with counters: an
+    // old file and a new one must both parse to the same mins
+    def counters(jobs: Long) =
+      graft.metrics.Counters(jobs, 5, 24, 310, 4096, 4096, 0, 0, 0)
+    val newEntry = Bench.entryJson("q_new", Seq(
+      (2.5, None, counters(7)), (2.0, Some("E: boom"), counters(9)),
+      (3.0, None, counters(7))))
+    assert(newEntry === "\"q_new\": {\"median\":2.5000,\"min\":2.0000," +
+      "\"runs\":[2.5000,2.0000,3.0000],\"err\":\"E: boom\",\"jobs\":7," +
+      "\"stages\":5,\"tasks\":24,\"cpu_ms\":310," +
+      "\"shuffle_read_bytes\":4096,\"shuffle_write_bytes\":4096," +
+      "\"spill_bytes\":0,\"compiles\":0,\"compile_ms\":0}")
     val text =
-      """{"queries": {
+      s"""{"queries": {
         |"q_fast": {"median":1.0E-4,"min":9.5E-5,"runs":[1.0E-4]},
-        |"q_slow": {"median":12.25,"min":11.5,"runs":[12.25]}
+        |"q_slow": {"median":12.25,"min":11.5,"runs":[12.25]},
+        |$newEntry
         |}}""".stripMargin
     val mins = Bench.parseBenchFullMins(text)
-    assert(mins === Map("q_fast" -> 9.5e-5, "q_slow" -> 11.5))
+    assert(mins === Map("q_fast" -> 9.5e-5, "q_slow" -> 11.5,
+      "q_new" -> 2.0))
   }
 }

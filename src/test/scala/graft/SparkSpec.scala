@@ -21,4 +21,17 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A serving query holds no keyed state: after a restart its checkpoint
+    * has offset and commit logs and never a `state/` store, so requests
+    * leave nothing behind that grows with their count.
+    */
+  def assertNoStateStore(checkpoint: java.nio.file.Path): Unit = {
+    val children = Option(checkpoint.toFile.list()).map(_.toSet)
+      .getOrElse(Set.empty)
+    assert(Set("offsets", "commits").subsetOf(children),
+      s"checkpoint must hold its logs, saw $children")
+    assert(!children.contains("state"),
+      s"a serving checkpoint must not grow a state store, saw $children")
+  }
 }

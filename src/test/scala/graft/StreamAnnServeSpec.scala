@@ -114,6 +114,7 @@ class StreamAnnServeSpec extends SparkSpec {
       // epoch 2: NEW query instance, same checkpoint, one more request
       writeQueryFile(input, "batch2.json", Seq((1000003L, corpusVecs(11L))))
       run()
+      assertNoStateStore(checkpoint)
 
       val epoch2 = served.toMap
       // exactly-once: batch ids never double-count across the restart;
@@ -212,6 +213,7 @@ class StreamAnnServeSpec extends SparkSpec {
       // epoch 2: NEW query instance, same checkpoint, one more request
       writeQueryFile(input, "batch2.json", Seq((1000003L, corpusVecs(11L))))
       run()
+      assertNoStateStore(checkpoint)
 
       val epoch2 = served.toMap
       epoch1.foreach { case (bid, (rows, _)) =>
@@ -293,6 +295,7 @@ class StreamAnnServeSpec extends SparkSpec {
       // epoch 2: restart from the same checkpoint
       writeQueryFile(input, "batch2.json", Seq((1000003L, corpusVecs(11L))))
       run()
+      assertNoStateStore(checkpoint)
       val epoch2 = served.toMap
       epoch1.foreach { case (bid, (rows, _)) =>
         assert(epoch2(bid)._1.sorted === rows.sorted,

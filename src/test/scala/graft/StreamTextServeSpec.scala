@@ -92,6 +92,7 @@ class StreamTextServeSpec extends SparkSpec {
       // epoch 2: NEW query instance, same checkpoint, one more request
       writeRequestFile(input, "batch2.json", Seq((3L, Seq("vector"))))
       run()
+      assertNoStateStore(checkpoint)
 
       val epoch2 = served.toMap
       epoch1.foreach { case (bid, (rows, _)) =>
