@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
 
 import graft.metrics.Metrics.{force, measure}
@@ -57,7 +58,13 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("back-to-back measures share no job, with no pause between them") {
-    withFixedPlans {
+    // a slow listener on the same bus holds back the events behind it:
+    // counters read without draining the bus would miss the body's tasks
+    val slow = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(30)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try withFixedPlans {
       val a = measure(spark) { force(shuffled) }._3
       val b = measure(spark) { force(narrow) }._3
       val c = measure(spark) { () }._3
@@ -65,7 +72,7 @@ class MetricsSpec extends SparkSpec {
       assert((b.jobs, b.stages, b.tasks) === ((1L, 1L, 3L)))
       assert(b.shuffleWriteBytes === 0L && b.shuffleReadBytes === 0L)
       assert((c.jobs, c.stages, c.tasks, c.compiles) === ((0L, 0L, 0L, 0L)))
-    }
+    } finally spark.sparkContext.removeSparkListener(slow)
   }
 
   test("a second run of an identical plan compiles no class") {
