@@ -30,11 +30,14 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$'; then
   echo "[precommit] benchmark build green" >&2
 fi
 
-# The persisted-index commit and visibility rules live in graft/sinks:
-# a staged change there also runs their crash-state specs.
+# The persisted-index commit log and visibility rules live in
+# graft/sinks: a staged change there also runs their crash-state,
+# replay and valve specs.
 if git diff --cached --name-only | grep -q '^src/main/scala/graft/sinks/'; then
   echo "[precommit] index sinks staged - running the crash-state specs" >&2
-  if ! sbt -batch "testOnly graft.StagedFileVisibilitySpec graft.IvfRebuildSpec" \
+  if ! sbt -batch "testOnly graft.StagedFileVisibilitySpec graft.IvfRebuildSpec \
+      graft.IndexLogSpec graft.VectorTombstoneValveSpec \
+      graft.IndexLayerHygieneSpec graft.IndexReaddSpec" \
       >/tmp/precommit-sinks.log 2>&1; then
     echo "[precommit] CRASH-STATE SPECS FAILED - commit refused. Tail of log:" >&2
     tail -30 /tmp/precommit-sinks.log >&2

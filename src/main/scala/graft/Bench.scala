@@ -175,10 +175,10 @@ object Bench {
     * session, reps=1, full warmup — symmetric by construction) in ONE
     * host window, then scores `ab_ratio` = Σ min-of-reps(HEAD) /
     * Σ min-of-reps(rev) over the SHARED query set. The result lands in
-    * `.ab/ab_latest.json`, which normal bench runs embed (with
-    * provenance) into their output line — so BENCH_r{N}.json carries
-    * the last measured A/B verdict even though the driver never passes
-    * flags.
+    * `.ab/ab_latest.json`, which normal bench runs of the same HEAD
+    * embed (with provenance) into their output ([[abFields]]) — so
+    * BENCH_r{N}.json carries the A/B verdict of the code it measured
+    * even though the driver never passes flags.
     */
   private def runAgainst(rev: String): Unit = {
     def sh(cmd: Seq[String], cwd: String): Int = {
@@ -191,12 +191,7 @@ object Bench {
       if (code != 0) System.err.println(out.takeRight(2000))
       code
     }
-    val headRev = {
-      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .start()
-      val r = new String(p.getInputStream.readAllBytes()).trim
-      p.waitFor(); r
-    }
+    val headRev = gitHead()
     val wt = s"/tmp/graft_ab_$rev"
     if (!new java.io.File(s"$wt/build.sbt").exists()) {
       require(sh(Seq("git", "worktree", "add", "--detach", wt, rev),
@@ -296,20 +291,31 @@ object Bench {
     println(s"""{"metric":"ab","ab_ratio":$ratio,"against":"$rev","head":"$headRev","shared":${shared.size},"a_minsum":$aTot,"b_minsum":$bTot,"noise_verdict":"${if (insideNoise) "inside_noise" else "outside_noise"}","noise_verdict_strict":"${if (insideNoiseStrict) "inside_noise" else "outside_noise"}"}""")
   }
 
-  /** The last `--against` verdict, embedded (with provenance) into
-    * normal bench output so BENCH_r{N}.json carries it.
+  /** The short revision of the checkout's HEAD, empty outside git. */
+  private def gitHead(): String =
+    try {
+      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
+        .redirectErrorStream(true).start()
+      val r = new String(p.getInputStream.readAllBytes()).trim
+      if (p.waitFor() == 0) r else ""
+    } catch { case _: java.io.IOException => "" }
+
+  /** The last `--against` verdict (the text of `.ab/ab_latest.json`),
+    * embedded with provenance into normal bench output — only when it
+    * was measured at `benchedRev`, the revision being benched: a
+    * verdict measured at another revision describes other code.
+    * Short revisions match by prefix (git may widen them).
     */
-  def abFields(): String = {
-    val f = new java.io.File(".ab/ab_latest.json")
-    if (!f.exists()) return ""
-    val text = scala.io.Source.fromFile(f).mkString
+  def abFields(abJson: String, benchedRev: String): String = {
     def field(name: String): Option[String] =
-      (s""""$name": "?([^",\\n}]+)"?""").r.findFirstMatchIn(text)
+      (s""""$name": "?([^",\\n}]+)"?""").r.findFirstMatchIn(abJson)
         .map(_.group(1))
     (for {
       ratio <- field("ab_ratio")
       against <- field("ab_against")
       head <- field("ab_head")
+      if benchedRev.nonEmpty &&
+        (head.startsWith(benchedRev) || benchedRev.startsWith(head))
     } yield s""","ab_ratio":$ratio,"ab_against":"$against","ab_measured_at":"$head"""")
       .getOrElse("")
   }
@@ -415,8 +421,12 @@ object Bench {
     // the last --against A/B verdict (see runAgainst): the PREFERRED
     // cross-round comparator — same-window interleaved, immune to the
     // host-clock drift that makes raw and calib-normalized ratios
-    // ambiguous. ab_measured_at names the HEAD it was measured on.
-    val ab = abFields()
+    // ambiguous. ab_measured_at names the HEAD it was measured on,
+    // which must be the HEAD benched here.
+    val abFile = new java.io.File(".ab/ab_latest.json")
+    val ab =
+      if (!abFile.exists()) ""
+      else abFields(scala.io.Source.fromFile(abFile).mkString, gitHead())
     val fileJson = {
       val entries = runsByQuery.toSeq
         .map { case (k, runs) => "    " + entryJson(k, runs) }

@@ -58,6 +58,10 @@ object ScaleCheck {
         println(f"$name%-32s $sec%8.2f s   rows=$rows  ${counters.show}" +
           err.map(e => s"  ERR $e").getOrElse(""))
       }
+    // whether an index build at `dir` has committed (a probe that builds
+    // it may have been filtered out)
+    def built(dir: String): Boolean =
+      graft.sinks.IndexLog.read(spark, dir).isIndex
 
     time("text_stats (full scan)") {
       // force() the full projection: an .agg(sum(col)).collect() here would
@@ -708,7 +712,7 @@ object ScaleCheck {
     // the build probe may have been filtered out — pay the build HERE,
     // OUTSIDE the timed serve block: a conditional corpus-sized rebuild
     // inside the timing would silently overstate serve cost
-    if (!new java.io.File(s"$textIdxDir/meta").exists()) {
+    if (!built(textIdxDir)) {
       graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
     }
     time("BM25 serve (one probe, 5 queries, persisted index)") {
@@ -724,7 +728,7 @@ object ScaleCheck {
     // then Σ tf anchor rows into one (doc, anchor) aggregate — cost must
     // track the phrase terms' matched postings, never corpus size.
     // Fallback build stays OUTSIDE the timed block (the BM25 lesson)
-    if (!new java.io.File(s"$textIdxDir/meta").exists()) {
+    if (!built(textIdxDir)) {
       graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
     }
     time("phrase serve (persisted index)") {
@@ -741,28 +745,16 @@ object ScaleCheck {
     // (doc_id, dl) projection and tracked index size). Serve overhead
     // is one broadcast anti-join; the compaction fold runs the n-way
     // write distribution (not bucket-count-capped)
-    if (!new java.io.File(s"$textIdxDir/meta").exists()) {
+    if (!built(textIdxDir)) {
       graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
     }
-    // fresh tombstone state (outside the timing): a rerun against a
-    // CACHED index dir (build probe filtered out) would re-issue the
-    // batch against a ledger that already committed it, so the timer
-    // would measure the replay/skip path — and an older binary's
-    // leftover id set would violate the identical-content replay
-    // contract. Clear the layouts at the RESOLVED root (a prior run's
-    // compaction moved them under gen-N) and take the first batch id
-    // the folded ledger has never absorbed, so the probe always
-    // measures a FIRST-TIME tombstone write even against a compacted
-    // cache (r15 advice).
-    val textRoot = graft.sinks.Sink.resolveIndexRoot(spark, textIdxDir)
-    Seq("tombstones", "tombstones_meta").foreach { sub =>
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$textRoot/$sub"))
-    }
-    val delBatchId =
-      if (!new java.io.File(s"$textRoot/folded").exists()) 0L
-      else spark.read.parquet(s"$textRoot/folded")
-        .agg(max(col("batch_id"))).head.getLong(0) + 1L
+    // a rerun against a CACHED index dir (build probe filtered out)
+    // would re-issue a batch the index's commit log already holds, so
+    // the timer would measure the replay skip: take the first batch id
+    // the log has never seen, so the probe always measures a
+    // FIRST-TIME tombstone write even against a compacted cache
+    val delBatchId = graft.sinks.IndexLog.read(spark, textIdxDir)
+      .absorbedByFold.maxOption.fold(0L)(_ + 1L)
     time("text delete (fixed 1000-doc batch)") {
       graft.sinks.Sink.deleteFromTextIndex(spark, textIdxDir,
         big.filter(col("doc_id") < 1000).select(col("doc_id")),
@@ -770,12 +762,11 @@ object ScaleCheck {
       1L
     }
     // the delete probe may have been filtered out — pay the tombstone
-    // write OUTSIDE the timed serve block (the BM25-build lesson)
-    if (!new java.io.File(s"$textRoot/tombstones_meta").exists()) {
-      graft.sinks.Sink.deleteFromTextIndex(spark, textIdxDir,
-        big.filter(col("doc_id") < 1000).select(col("doc_id")),
-        batchId = delBatchId)
-    }
+    // write OUTSIDE the timed serve block (the BM25-build lesson); a
+    // replay of a landed batch is a no-op
+    graft.sinks.Sink.deleteFromTextIndex(spark, textIdxDir,
+      big.filter(col("doc_id") < 1000).select(col("doc_id")),
+      batchId = delBatchId)
     time("BM25 serve (tombstoned index)") {
       import spark.implicits._
       val idx = graft.sinks.Sink.readTextIndex(spark, textIdxDir)
@@ -803,14 +794,13 @@ object ScaleCheck {
       built.unpersist()
       spark.read.parquet(s"$hybDir/celled").count()
     }
-    if (!new java.io.File(s"$hybDir/centroids").exists()) {
+    if (!built(hybDir)) {
       val built = Similarity.buildIvfIndexExact(bigEmb, nlist = 16,
         iters = 2)
       graft.sinks.Sink.writeIvfIndex(built, hybDir)
       built.unpersist()
     }
-    if (!new java.io.File(s"$textIdxDir/meta").exists() &&
-        !new java.io.File(textIdxDir).exists()) {
+    if (!built(textIdxDir)) {
       graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
     }
     time("hybrid serve (2 pruned legs, 3 requests)") {
@@ -833,7 +823,7 @@ object ScaleCheck {
     // the fold itself is the maintenance rewrite (O(index), amortized
     // over the sweeps it absorbs — reported, not claimed flat). Builds
     // and fallbacks stay OUTSIDE the timed blocks (the BM25 lesson).
-    if (!new java.io.File(s"$hybDir/centroids").exists()) {
+    if (!built(hybDir)) {
       val built = Similarity.buildIvfIndexExact(bigEmb, nlist = 16,
         iters = 2)
       graft.sinks.Sink.writeIvfIndex(built, hybDir)
@@ -856,12 +846,12 @@ object ScaleCheck {
         batchId = 3L)
       1L
     }
-    if (!new java.io.File(s"$hybDir/tombstones_meta").exists()) {
-      graft.sinks.Sink.deleteFromIvfIndex(spark, hybDir,
-        emb.filter(col("vec_id") >= 100 && col("vec_id") < 1100)
-          .select(col("vec_id")),
-        batchId = 3L)
-    }
+    // the delete probe may have been filtered out; a replay of a
+    // landed batch is a no-op
+    graft.sinks.Sink.deleteFromIvfIndex(spark, hybDir,
+      emb.filter(col("vec_id") >= 100 && col("vec_id") < 1100)
+        .select(col("vec_id")),
+      batchId = 3L)
     valveServe("tombstoned")
     time("valve: fold (compactIvfIndexIfNeeded)") {
       val (compacted, _, _, masked) = graft.sinks.Sink
@@ -894,7 +884,7 @@ object ScaleCheck {
         .write.mode("append").partitionBy("date").parquet(sweepRaw)
       // a compacted index (gen-N root) is perfectly usable — only build
       // when the dir is truly absent (the hybrid-serve fallback stance)
-      if (!new java.io.File(textIdxDir).exists()) {
+      if (!built(textIdxDir)) {
         graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
       }
     }
@@ -937,11 +927,10 @@ object ScaleCheck {
       big.filter(col("doc_id") >= 5500)
         .withColumn("date", lit("2024-02-09"))
         .write.mode("append").partitionBy("date").parquet(archRaw)
-      if (!new java.io.File(textIdxDir).exists()) {
+      if (!built(textIdxDir)) {
         graft.sinks.Sink.writeTextIndex(big, textIdxDir, buckets = 64)
       }
-      val lshRoot = graft.sinks.Sink.resolveIndexRoot(spark, archLshDir)
-      if (!new java.io.File(s"$lshRoot/signed").exists()) {
+      if (!built(archLshDir)) {
         val lb = Similarity.buildLshIndex(bigEmb, nBits = 32, bands = 8)
         graft.sinks.Sink.writeLshIndex(lb, archLshDir)
         lb.unpersist()

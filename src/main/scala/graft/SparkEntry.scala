@@ -2313,10 +2313,11 @@ object SparkEntry {
     // serve again WITHOUT a compaction (batch-scoped tombstones: a
     // delete at batch K masks only rows from batches ≤ K; at 100 TB a
     // compaction is a full-generation rewrite no crawler can pay per
-    // URL). The delete replays AFTER the re-append (exactly-once in any
-    // order — it must not swallow the batch-1 rows), the state compacts
-    // (fold parity per row), and the delete replays AGAIN post-fold
-    // (ledger-skipped — it would otherwise re-mask the folded
+    // URL). The delete replays AFTER the re-append (a no-op: the index's
+    // commit log already holds batch 0's tombstone, so it cannot
+    // swallow the batch-1 rows), the state compacts (fold parity per
+    // row), and the delete replays AGAIN post-fold (a no-op: the fold
+    // absorbed batch 0 — it would otherwise re-mask the folded
     // re-appended rows). Oracle replays BM25 over the final logical
     // corpus blind to every mechanism above
     "text_delete_readd" -> ((s, dir) => {
@@ -2353,7 +2354,7 @@ object SparkEntry {
     // the vector-family twin: tombstone on the persisted exact-Lloyd
     // IVF index, re-append HALF the deleted vectors at a later batch
     // (FAISS-add against the frozen quantizer), replay the delete,
-    // compact (physical fold), replay again (ledger-skipped), serve
+    // compact (physical fold), replay again (absorbed: a no-op), serve
     // through an EXHAUSTIVE integer-lattice probe (nprobe = nlist:
     // resurrect VISIBILITY is the claim here — cell pruning is pinned
     // by embedding_index_delete, and the re-added copy's cell comes
@@ -2411,7 +2412,7 @@ object SparkEntry {
       Sink.retentionSweep(s, raw, "2024-01-03", batchId = 0L,
         textIndexes = Seq(text), ivfIndexes = Seq(ivf))
       // replay after the successful sweep: raw partitions are gone, the
-      // tombstone commit records must keep the batch intact
+      // tombstone log entries must keep the batch intact
       Sink.retentionSweep(s, raw, "2024-01-03", batchId = 0L,
         textIndexes = Seq(text), ivfIndexes = Seq(ivf))
       val bmRank = org.apache.spark.sql.expressions.Window
@@ -2805,18 +2806,19 @@ object SparkEntry {
     * built + persisted ONCE per corpus (write-if-absent, keyed by
     * [[corpusTag]] — production serves from a long-lived index, not a
     * per-request rebuild; bench reps and repeated Verify calls reuse
-    * the artifact). The build_census `_SUCCESS` is
-    * [[graft.sinks.Sink.writeIvfPqIndex]]'s LAST write, so its presence
-    * marks a complete layout; a torn half-write (crash mid-build) is
-    * rebuilt on the next call.
+    * the artifact). The index's commit log decides "complete": its
+    * `build` entry is [[graft.sinks.Sink.writeIvfPqIndex]]'s LAST
+    * write, so a torn half-write (crash mid-build) is rebuilt on the
+    * next call.
     */
   private def persistedPqServeDir(s: SparkSession, dir: String): String = {
-    // v2: the layout carries the integer-lattice coarse quantizer
+    // v3: the layout carries the integer-lattice coarse quantizer
     // (qcentroids) alongside the float centroids — the replayable-probe
-    // prerequisite (Similarity.ivfQueryVectorsIntProbe)
+    // prerequisite (Similarity.ivfQueryVectorsIntProbe) — and a commit
+    // log
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_servepq_v2_${corpusTag(dir, "embeddings")}").toString
-    if (!new java.io.File(s"$path/build_census/_SUCCESS").exists()) {
+      s"graft_servepq_v3_${corpusTag(dir, "embeddings")}").toString
+    if (!graft.sinks.IndexLog.read(s, path).isIndex) {
       val emb = Tables.embeddings(s, dir)
       val index = Similarity.IndexCache.ivfExact(emb, nlist = 16)
       val model = Similarity.IndexCache.pq(emb, m = 8, k = 64, iters = 2)
@@ -2827,14 +2829,14 @@ object SparkEntry {
 
   /** The on-disk inverted index for `text_bm25_topk` — built + persisted
     * ONCE per corpus dir (write-if-absent, the persistedPqServeDir
-    * idiom); the meta `_SUCCESS` is [[graft.sinks.Sink.writeTextIndex]]'s
-    * LAST write, so its presence marks a complete layout.
+    * idiom: the commit log's `build` entry marks a complete layout).
     */
   private def persistedTextIndexDir(s: SparkSession, dir: String): String = {
-    // v2: postings carry the positional payload (positions ARRAY<INT>)
+    // v3: postings carry the positional payload (positions ARRAY<INT>),
+    // and the index has a commit log
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_textidx_v2_${corpusTag(dir, "documents")}").toString
-    if (!new java.io.File(s"$path/meta/_SUCCESS").exists()) {
+      s"graft_textidx_v3_${corpusTag(dir, "documents")}").toString
+    if (!graft.sinks.IndexLog.read(s, path).isIndex) {
       Sink.writeTextIndex(Tables.documents(s, dir), path, buckets = 64)
     }
     path

@@ -192,26 +192,20 @@ object Sink {
       .write.mode(mode).parquet(path)
   }
 
-  /** Resolve the LIVE root of a persisted index at `path`: the newest
-    * committed generation (`gen-N/` carrying a root-level `_SUCCESS`,
-    * written by a rebuild or a compaction through [[commitGeneration]])
-    * if any has committed, else `path` itself (the flat layout a fresh
-    * [[writeIvfIndex]] produces). The `_SUCCESS` marker IS the commit
-    * record — a crash mid-fold leaves a half-written gen dir invisible
-    * and the prior generation live, so readers can never observe a torn
-    * swap (a new celled table paired with an old quantizer). Same
-    * commit-by-generation idiom as [[mergeCensusTable]]; the marker
-    * file stands in for a table-format/metastore pointer flip at scale.
+  /** Resolve the LIVE root of a persisted index at `path`: the
+    * generation `gen-N/` its commit log's newest `fold` entry names
+    * (written by a rebuild or a compaction through
+    * [[commitGeneration]]), else `path` itself (the flat layout a fresh
+    * [[writeIvfIndex]] produces). The entry is written after the
+    * generation, so a crash mid-fold leaves a half-written gen dir
+    * invisible and the prior root live: readers never observe a torn
+    * swap (a new celled table paired with an old quantizer). Fails fast
+    * on a path without a commit log ([[IndexLog]]).
     */
   def resolveIndexRoot(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) path
-    else committedGenerations(fs, root).maxOption
-      .map(g => s"$path/gen-$g").getOrElse(path)
-  }
+      path: String): String =
+    IndexLog.read(spark, path).root
 
   /** Distribution for every index build/append/compaction write:
     * AQE REBALANCE on the directory key(s). `repartition(col(dirKey))`
@@ -242,54 +236,49 @@ object Sink {
     * [[compactTextIndex]]) and the census merges
     * ([[mergeGenerational]]): clear a torn `gen-<gen>/` a crashed
     * attempt left (its stale subdirs must not be committed with the
-    * fresh layout), run `write` into the directory (index folds
-    * include their `folded` ledger), create the one `_SUCCESS` marker
-    * that commits it, then drop what it supersedes ([[dropSuperseded]]).
-    * A crash before the marker leaves the prior state live and the
+    * fresh layout), run `write` into the directory, append the `fold`
+    * entry that commits it with the `absorbed` batch ids and the live
+    * policy, then drop what it supersedes ([[dropSuperseded]]). A
+    * crash before the entry leaves the prior state live and the
     * half-written generation invisible; a crash after it, before the
     * cleanup, leaves superseded layouts no reader resolves, and the
     * next commit drops them. Returns the committed directory.
     */
   private def commitGeneration(
       spark: org.apache.spark.sql.SparkSession,
-      rawPath: String,
-      gen: Long)(
+      log: IndexLog.Snapshot,
+      gen: Long,
+      absorbed: Set[Long])(
       write: String => Unit): String = {
-    val fs = new org.apache.hadoop.fs.Path(rawPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val genDir = s"$rawPath/gen-$gen"
-    fs.delete(new org.apache.hadoop.fs.Path(genDir), true)
+    val genDir = s"${log.rawPath}/gen-$gen"
+    val p = new org.apache.hadoop.fs.Path(genDir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     write(genDir)
-    fs.create(new org.apache.hadoop.fs.Path(s"$genDir/_SUCCESS"), true)
-      .close()
-    dropSuperseded(spark, rawPath, gen)
+    IndexLog.commit(spark, log, IndexLog.Fold(gen, absorbed, log.policy))
+    dropSuperseded(spark, log.rawPath, gen)
     genDir
   }
 
-  /** The generation an index rebuild or fold at `rawPath` commits: one
-    * past the newest committed generation, 1 over a flat layout.
+  /** [[commitGeneration]] for an index fold or rebuild: the next
+    * generation, absorbing every batch it folds.
     */
-  private def nextGeneration(
-      spark: org.apache.spark.sql.SparkSession, rawPath: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedGenerations(fs, root).maxOption.getOrElse(0L) + 1
-  }
+  private def commitFold(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot)(
+      write: String => Unit): String =
+    commitGeneration(spark, log, log.nextGen, log.absorbedByFold)(write)
 
   /** Drop everything a generation `gen` at `rawPath` supersedes, by one
     * rule: every `gen-N/` below it, committed or torn, and every child
-    * that is not a generation, except the lineage's
-    * `_valve_policy.json` ([[writeValvePolicy]]). The flat layout, its
-    * incremental layers (ingested batches, tombstones, the folded
-    * ledger) and the crash-after-commit leftovers of an earlier fold
-    * all go. A fresh overwrite build passes `Long.MaxValue`: it
-    * supersedes every generation, and a stale tombstone or ledger
-    * surviving it would silently delete or swallow fresh rows.
-    * Deleting only the immediately-previous root would leak any
-    * generation orphaned by a crash-after-commit-before-cleanup —
-    * readers resolve the max generation so orphans are invisible, but
-    * they would accumulate on disk forever. Every deletion is a
-    * recoverable no-op if repeated.
+    * that is not a generation, except the commit log `_log/`. The flat
+    * layout, its incremental layers (ingested batches, tombstones) and
+    * the crash-after-commit leftovers of an earlier fold all go. A
+    * fresh overwrite build passes `Long.MaxValue`: it supersedes every
+    * generation, and a stale tombstone surviving it would silently
+    * delete fresh rows. Deleting only the immediately-previous root
+    * would leak any generation orphaned by a
+    * crash-after-commit-before-cleanup — invisible to readers, but on
+    * disk forever. Every deletion is a recoverable no-op if repeated.
     */
   private def dropSuperseded(
       spark: org.apache.spark.sql.SparkSession,
@@ -302,9 +291,37 @@ object Sink {
         val name = p.getName
         if (name.startsWith("gen-"))
           name.stripPrefix("gen-").toLongOption.exists(_ < gen)
-        else name != ValvePolicyFile
+        else name != "_log"
       }.foreach(fs.delete(_, true))
   }
+
+  /** Open an index build at `path`: read its log, then, for an
+    * overwrite, drop every layout a prior lifecycle left
+    * ([[dropSuperseded]]) — a stale tombstone surviving the build would
+    * silently delete freshly-indexed rows, and a float-trained IVF
+    * build must not inherit an exact-Lloyd layout's `qcentroids` (the
+    * probe would pair new cells with the old lattice).
+    */
+  private def openBuild(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      mode: String,
+      policy: Option[ValvePolicy]): IndexLog.Snapshot = {
+    policy.foreach(requireValidPolicy(_, s"index build at $path"))
+    val log = IndexLog.read(spark, path)
+    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
+    log
+  }
+
+  /** Commit an index build: its `build` entry starts a fresh log and
+    * carries `policy`, else the policy live before the build — policy is
+    * operator configuration, not data, so an overwrite build keeps it.
+    */
+  private def commitBuild(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      policy: Option[ValvePolicy]): Unit =
+    IndexLog.commit(spark, log, IndexLog.Build(policy.orElse(log.policy)))
 
   /** Copy the small tables a fold does not rewrite from the old index
     * root into its new generation — those of `tables` that exist.
@@ -333,6 +350,11 @@ object Sink {
     * ship; [[readIvfIndex]] + `Similarity.ivfQueryPruned` are the
     * consuming query path (SimilarityIndexPersistSpec round-trips it and
     * asserts the partition pruning).
+    *
+    * Commit: one `build` entry in the path's commit log ([[IndexLog]]),
+    * written after every table. An overwrite build first drops every
+    * layout a prior lifecycle left, and its entry starts a fresh log
+    * that keeps the live [[ValvePolicy]] unless `policy` replaces it.
     */
   def writeIvfIndex(
       index: graft.operators.Similarity.IvfIndex,
@@ -340,23 +362,22 @@ object Sink {
       mode: String = "overwrite",
       policy: Option[ValvePolicy] = None): Unit = {
     val spark = index.celled.sparkSession
-    import spark.implicits._
     // declare the lineage's maintenance policy at build time (see
-    // [[ValvePolicy]]); None leaves any existing declaration in place —
-    // policy is operator configuration, not data, so an overwrite
-    // build does not reset it
-    policy.foreach(writeValvePolicy(spark, path, _))
-    // a FRESH build supersedes every generation and every layer a prior
-    // lifecycle left at this path ([[dropSuperseded]]), so the flat
-    // layout written below is the one readers resolve (crash mid-write
-    // re-exposes at worst a torn flat build, the exposure any
-    // overwrite-mode write always had). qcentroids and pq_codebooks go
-    // with the rest: a float-trained build over a path that previously
-    // held an exact-Lloyd layout must not leave the OLD integer
-    // quantizer behind — readIvfIndex would pair the new
-    // celled/centroids with a stale (possibly different-nlist) lattice
-    // and ivfQueryVectorsIntProbe would silently probe wrong cells
-    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
+    // [[ValvePolicy]]); None keeps any existing declaration
+    val log = openBuild(spark, path, mode, policy)
+    writeIvfLayout(index, path, mode)
+    commitBuild(spark, log, policy)
+  }
+
+  /** The IVF tables of [[writeIvfIndex]] under `path`, uncommitted —
+    * also the body of a rebuild's generation.
+    */
+  private def writeIvfLayout(
+      index: graft.operators.Similarity.IvfIndex,
+      path: String,
+      mode: String): Unit = {
+    val spark = index.celled.sparkSession
+    import spark.implicits._
     // n-way write distribution (see writeDistribution): hot cells
     // parallelize instead of serializing into one task each
     writeDistribution(index.celled, col("cell"))
@@ -412,32 +433,26 @@ object Sink {
     */
   def ivfOccupancyDrift(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val root = resolveIndexRoot(spark, path)
-    occupancyDrift(spark, root, Seq("cell"),
-      spark.read.parquet(s"$root/celled"),
-      readIvfIndex(spark, path).celled)
-  }
+      path: String): DataFrame =
+    ivfDrift(spark, IndexLog.read(spark, path))
+
+  private def ivfDrift(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): DataFrame =
+    occupancyDrift(spark, log.root, Seq("cell"), readIvf(spark, log).celled)
 
   /** The drift census body shared by [[ivfOccupancyDrift]],
     * [[lshOccupancyDrift]] and [[textOccupancyDrift]]: per `keys`
     * directory, the build-time row count persisted at
     * `root/build_census` vs the live count, and the growth in ppm.
-    * Indexes persisted before the drift census existed ship no
-    * build_census — ADOPT `base` (the index's base-layout rows) as the
-    * baseline and persist it (drift is then measured from "now" onward,
-    * and the ingested layout — post-build traffic by definition — still
-    * counts against it), instead of throwing path-not-found on the
-    * first drift/rebuild call against a legacy index.
     */
   private def occupancyDrift(
       spark: org.apache.spark.sql.SparkSession,
       root: String,
       keys: Seq[String],
-      base: => DataFrame,
       live: DataFrame): DataFrame = {
     val keyCols = keys.map(col)
-    spark.read.parquet(adoptBuildCensus(spark, root, keys, base))
+    spark.read.parquet(s"$root/build_census")
       .join(live.groupBy(keyCols: _*).agg(count(lit(1)).as("n_now")),
         keys, "full_outer")
       .select(keyCols ++ Seq(
@@ -448,22 +463,6 @@ object Sink {
       .orderBy(keyCols: _*)
   }
 
-  /** The path of `root/build_census`, first written from `base` when
-    * the layout predates the census (see [[occupancyDrift]]).
-    */
-  private def adoptBuildCensus(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      keys: Seq[String],
-      base: => DataFrame): String = {
-    val census = s"$root/build_census"
-    val p = new org.apache.hadoop.fs.Path(census)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      base.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_build"))
-        .coalesce(1).write.mode("overwrite").parquet(census)
-    census
-  }
-
   /** The maintenance valve itself: retrain + rewrite the persisted IVF
     * index when any cell's occupancy grew past `thresholdPpm` since
     * build. Below threshold this is a no-op census read. Above it:
@@ -471,23 +470,18 @@ object Sink {
     * training input, FAISS-retrain semantics) trains a fresh exact-Lloyd
     * coarse quantizer, the full index (celled + centroids + build
     * census) is written to a fresh `gen-N/` generation and COMMITTED by
-    * a single root-level `_SUCCESS` marker ([[resolveIndexRoot]]), and
-    * the ingested layout is absorbed — post-rebuild drift is zero by
-    * construction and cell balance reflects the live distribution.
-    * Queries with the same probe budget keep their contract (nprobe of a
-    * BALANCED nlist again); exhaustive-probe answers are bit-identical
-    * before/after (spec-asserted — a rebuild relocates rows, never
-    * changes them).
+    * one `fold` log entry ([[commitGeneration]]), and the ingested
+    * layout is absorbed — post-rebuild drift is zero by construction
+    * and cell balance reflects the live distribution. Queries with the
+    * same probe budget keep their contract (nprobe of a BALANCED nlist
+    * again); exhaustive-probe answers are bit-identical before/after
+    * (spec-asserted — a rebuild relocates rows, never changes them).
     *
-    * Crash-safety: the commit is ONE marker-file creation, never a
-    * multi-rename window — an earlier version swapped celled, centroids
-    * and build_census via three sequential renames, and a crash between
-    * them left the NEW celled table paired with the OLD quantizer
-    * (probes then assign/prune against the wrong centroids and silently
-    * return wrong neighbors). A crash before the marker leaves the old
-    * generation live and the half-written gen dir invisible; a crash
-    * after it, before cleanup, leaves a superseded layout that readers
-    * already ignore.
+    * Crash-safety: the commit is ONE log entry, never a multi-rename
+    * window, so the new celled table is never paired with the old
+    * quantizer. A crash before the entry leaves the old root live and
+    * the half-written gen dir invisible; a crash after it, before
+    * cleanup, leaves a superseded layout that readers already ignore.
     *
     * Returns (rebuilt?, max |growth_ppm| observed before the decision).
     * The gate reads the drift census as MAGNITUDE — `|growth_ppm|` —
@@ -505,15 +499,15 @@ object Sink {
       nlist: Int = 16,
       thresholdPpm: Long = 200000L,
       iters: Int = 3): (Boolean, Long) = {
-    val maxPpm = ivfOccupancyDrift(spark, path)
+    val log = IndexLog.read(spark, path)
+    val maxPpm = ivfDrift(spark, log)
       .agg(max(abs(col("growth_ppm")))).head.getLong(0)
     if (maxPpm < thresholdPpm) (false, maxPpm)
     else {
-      val oldRoot = resolveIndexRoot(spark, path)
-      require(!indexHasPq(spark, oldRoot),
+      require(!indexHasPq(spark, log.root),
         "IVF-PQ layout: use rebuildIvfPqIndex - a coarse-only rebuild " +
           "would strand the codes against stale codebooks")
-      val cur = readIvfIndex(spark, path).celled
+      val cur = readIvf(spark, log).celled
         .select(col("vec_id"), col("unit"))
       val fresh = graft.operators.Similarity.buildIvfIndexExact(
         cur.select(col("vec_id"), col("unit").as("embedding")),
@@ -527,23 +521,19 @@ object Sink {
         .join(cur, "vec_id")
         .select(col("vec_id"), col("unit"), col("cell"))
       // the rebuild read the tombstone-applied view, so deletes fold
-      // physically with it and the superseded layouts drop on commit
-      commitGeneration(spark, path, nextGeneration(spark, path)) { genDir =>
+      // physically with it, and its `fold` entry absorbs every
+      // committed batch so post-rebuild replays are skipped
+      commitFold(spark, log) { genDir =>
         // qcentsSpace = "unit": this quantizer trained on the stored
         // unit vectors (the raw embeddings are gone) — the persisted
         // space tag makes ivfQueryVectorsIntProbe normalize queries
         // before lattice quantization, keeping probe selection in the
         // training space
-        writeIvfIndex(
+        writeIvfLayout(
           graft.operators.Similarity.IvfIndex(
             fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
-          genDir)
+          genDir, "overwrite")
         fresh.unpersist()
-        // the rebuild absorbed every ingested batch and folded every
-        // tombstone — carry their ids in the generation's `folded`
-        // ledger so post-rebuild replays are skipped (the fold rule)
-        writeFoldedLedger(spark, genDir,
-          absorbedBatchIds(spark, oldRoot, "ingested"))
       }
       (true, maxPpm)
     }
@@ -559,9 +549,9 @@ object Sink {
     * production rebuild does after heavy ingest has drifted the value
     * distribution the codebooks were trained on), and commit the full
     * rebuilt layout (celled + codes, centroids, codebooks, build
-    * census) as a fresh `gen-N/` generation under the single
-    * [[resolveIndexRoot]] `_SUCCESS` marker — same crash-safety story
-    * as [[rebuildIvfIndex]], no multi-rename window.
+    * census) as a fresh `gen-N/` generation under one `fold` log
+    * entry — same crash-safety story as [[rebuildIvfIndex]], no
+    * multi-rename window.
     *
     * Post-rebuild drift is zero by construction. Exhaustive-probe +
     * full-rerank query answers are bit-identical across the rebuild
@@ -572,7 +562,7 @@ object Sink {
     * `corpus` must cover every vec_id in the index (base + ingested):
     * missing rows would silently vanish in the celled ⋈ codes join, so
     * the rebuild verifies the rebuilt row count and refuses (before the
-    * commit marker — the half-written generation stays invisible).
+    * log entry — the half-written generation stays invisible).
     *
     * Returns (rebuilt?, max |growth_ppm| observed before the decision)
     * — magnitude, not signed growth, so delete pressure trips this
@@ -594,14 +584,14 @@ object Sink {
     // identity, applied inside the valve in r18; the former shape
     // re-counted the index with a second full pass in the rebuild
     // branch)
-    val gate = ivfOccupancyDrift(spark, path)
+    val log = IndexLog.read(spark, path)
+    val gate = ivfDrift(spark, log)
       .agg(max(abs(col("growth_ppm"))),
         coalesce(sum(col("n_now")), lit(0L))).head
     val (maxPpm, nCur) = (gate.getLong(0), gate.getLong(1))
     if (maxPpm < thresholdPpm) (false, maxPpm)
     else {
-      val oldRoot = resolveIndexRoot(spark, path)
-      val cur = readIvfIndex(spark, path).celled
+      val cur = readIvf(spark, log).celled
         .select(col("vec_id"), col("unit"))
       val fresh = graft.operators.Similarity.buildIvfIndexExact(
         cur.select(col("vec_id"), col("unit").as("embedding")),
@@ -613,12 +603,12 @@ object Sink {
       val model = graft.operators.Similarity
         .buildPqModel(corpus, m, k, pqIters)
       // tombstones fold with the rebuild, as in [[rebuildIvfIndex]]
-      commitGeneration(spark, path, nextGeneration(spark, path)) { genDir =>
+      commitFold(spark, log) { genDir =>
         // unit-space quantizer — see rebuildIvfIndex
-        writeIvfPqIndex(
+        writeIvfPqLayout(
           graft.operators.Similarity.IvfIndex(
             fresh.centroids, preserved, fresh.qcents, qcentsSpace = "unit"),
-          model.cents, model.codes, genDir)
+          model.cents, model.codes, genDir, "overwrite")
         fresh.unpersist()
         model.unpersist()
         // the written row count from the generation's parquet footers:
@@ -630,9 +620,6 @@ object Sink {
           s"rebuild corpus covers only $nNew of $nCur index rows - " +
             "corpus must contain every indexed vec_id (half-written " +
             "generation left uncommitted)")
-        // absorbed batch ids → the generation's ledger, as rebuildIvfIndex
-        writeFoldedLedger(spark, genDir,
-          absorbedBatchIds(spark, oldRoot, "ingested"))
       }
       (true, maxPpm)
     }
@@ -648,15 +635,18 @@ object Sink {
     * the same `cell` partition column, so probe pruning reads nprobe
     * directories of BOTH tables.
     *
-    * Exactly-once: `batch_id` is the second partition level and the
-    * write is a DYNAMIC partition overwrite, so a replayed batch (a
-    * streaming restart re-running its in-flight micro-batch with the
-    * same id) overwrites exactly its own `(cell, batch_id=N)`
-    * directories instead of appending duplicates —
+    * Commit and exactly-once: the batch's `add` log entry is written
+    * after its data, and readers union only batches with an entry
+    * ([[IndexLog]]). A crash before the entry leaves the half-landed
+    * batch invisible; the replay (a streaming restart re-running its
+    * in-flight micro-batch with the same id) overwrites its own
+    * `(cell, batch_id=N)` directories — the write is a DYNAMIC
+    * partition overwrite — and commits it. A replay of a batch that
+    * already has an entry, or that a fold absorbed, is a no-op —
     * [[graft.streaming.StreamAnnIngest]] relies on this.
     *
-    * Periodic [[compact]] of `ingested` back into `celled` (or a
-    * centroid retrain + full rebuild when cell balance drifts) is the
+    * Periodic [[compactIvfIndex]] of `ingested` back into `celled` (or
+    * a centroid retrain + full rebuild when cell balance drifts) is the
     * maintenance valve, same as every write-optimized index.
     *
     * SINGLE MAINTAINER: appends and maintenance on one index path must
@@ -664,17 +654,16 @@ object Sink {
     * append resolved) — one owner per path runs both, and a replay
     * whose batch was already compacted must only be redelivered from
     * the SAME checkpoint lineage (see [[appendTextIndex]] for the full
-    * contract; the text leg additionally keeps a folded-batch ledger).
+    * contract).
     */
   def appendIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       vectors: DataFrame,
       batchId: Long): Unit = {
-    val root = resolveIndexRoot(spark, path)
-    // a batch a compaction/rebuild already absorbed must not re-enter
-    // as new data (the appendTextIndex ledger rule)
-    if (foldedBatchIds(spark, root).contains(batchId)) return
+    val log = IndexLog.read(spark, path)
+    if (log.hasAdd(batchId)) return
+    val root = log.root
     // nlist tiny rows: driver-side read, no Spark job (TinyParquet — r18)
     val centroids = TinyParquet
       .readDir(spark.sparkContext.hadoopConfiguration, s"$root/centroids")
@@ -711,6 +700,7 @@ object Sink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cell", "batch_id")
       .parquet(s"$root/ingested")
+    IndexLog.commit(spark, log, IndexLog.Add(batchId))
   }
 
   /** Does the resolved index root carry a PQ layout (codebooks + codes
@@ -747,16 +737,17 @@ object Sink {
     * write-optimized index: streamed micro-batches leave one file per
     * touched (cell, batch) directory, and at high ingest rates those
     * small files dominate probe I/O exactly like any LSM tree's L0.
-    * Rewrites celled ∪ ingested, tombstones applied, partitioned by
-    * cell into a fresh `gen-N/` generation, copies in the tables the
-    * fold does not change (centroids, qcentroids, pq_codebooks,
-    * build_census) and the `folded` ledger, and commits it the one way
-    * every fold commits ([[commitGeneration]]): one `_SUCCESS` marker,
-    * then the superseded root and its incremental layers drop. Queries
-    * before and after are bit-identical (spec-asserted), only the file
-    * census changes. A crash before the marker leaves the prior root
-    * live; a crash after it leaves leftovers no reader resolves — never
-    * a root without `celled/`, and never an absorbed batch served twice.
+    * Rewrites celled ∪ committed ingested batches, tombstones applied,
+    * partitioned by cell into a fresh `gen-N/` generation, copies in
+    * the tables the fold does not change (centroids, qcentroids,
+    * pq_codebooks, build_census), and commits it the one way every fold
+    * commits ([[commitGeneration]]): one `fold` log entry absorbing the
+    * folded batch ids, then the superseded root and its incremental
+    * layers drop. Queries before and after are bit-identical
+    * (spec-asserted), only the file census changes. A crash before the
+    * entry leaves the prior root live; a crash after it leaves
+    * leftovers no reader resolves — never a root without `celled/`,
+    * and never an absorbed batch served twice.
     *
     * Returns (rows compacted, ingested files folded in), the row count
     * from the new generation's parquet footers (exact under a retried
@@ -764,78 +755,36 @@ object Sink {
     */
   def compactIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
-      rawPath: String): (Long, Long) = {
+      rawPath: String): (Long, Long) =
+    compactIvf(spark, IndexLog.read(spark, rawPath))
+
+  private def compactIvf(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): (Long, Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val path = resolveIndexRoot(spark, rawPath)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val ingestedDir = new org.apache.hadoop.fs.Path(s"$path/ingested")
-    val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombstones_meta")
+    val path = log.root
     // a delete-only state still folds; only the clean state is a no-op
-    if (!fs.exists(ingestedDir) && !fs.exists(tombsDir)) {
-      (TinyParquet.rowCount(conf, s"$path/celled"), 0L)
-    } else {
-      val nf = TinyParquet.visibleFiles(fs, ingestedDir).size.toLong
-      // batch ids this fold absorbs, into the new generation's `folded`
-      // ledger so post-compaction replays of an absorbed append/delete
-      // are skipped (a replayed tombstone would otherwise mask the
-      // folded — possibly re-appended — base rows; see
-      // [[deleteFromIvfIndex]])
-      val absorbed = absorbedBatchIds(spark, path, "ingested")
-      val merged = readIvfIndex(spark, rawPath).celled
-      val genDir = commitGeneration(spark, rawPath,
-          nextGeneration(spark, rawPath)) { genDir =>
+    if (!log.pending) (TinyParquet.rowCount(conf, s"$path/celled"), 0L)
+    else {
+      val nf = fileCount(spark, s"$path/ingested")
+      val merged = readIvf(spark, log).celled
+      val genDir = commitFold(spark, log) { genDir =>
         writeDistribution(merged, col("cell"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$genDir/celled")
         carryTables(spark, path, genDir,
           "centroids", "qcentroids", "pq_codebooks", "build_census")
-        writeFoldedLedger(spark, genDir, absorbed)
       }
       (TinyParquet.rowCount(conf, s"$genDir/celled"), nf)
     }
   }
 
-  /** Tombstone pressure census at an index root: (committed tombstone
-    * batches, Σ masked ids across them). JOB-FREE on the current layout:
-    * [[writeTombstoneBatch]] mirrors each commit record's `n_ids`
-    * into the NAME of a zero-byte `_p-<n_ids>` marker beside it
-    * (`_p-<n_ids>-<adj>` in the r16 shape — both parse, the dead adj
-    * suffix was dropped in r17), so this census is a pure FileSystem
-    * listing — the below-threshold path of a valve running on a
-    * 1-second micro-batch cadence must not pay two driver-side Spark
-    * jobs per family per batch just to learn nothing changed (r15
-    * verdict). The parquet commit record stays the source of truth; a
-    * batch directory missing its marker (a pre-r16 layout, or a crash
-    * between the meta write and the marker) falls back to the original
-    * one-collect read for the WHOLE census — correctness never rides
-    * the cache (spec-pinned: VectorTombstoneValveSpec deletes a marker
-    * and asserts identical counts and an unchanged valve verdict).
-    */
-  private def tombstonePressure(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/tombstones_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, 0L)
-    val batchDirs = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    if (batchDirs.isEmpty) return (0L, 0L)
-    val markers = batchDirs.map { d =>
-      fs.listStatus(d.getPath).toSeq
-        .map(_.getPath.getName).find(_.startsWith("_p-"))
-    }
-    if (markers.forall(_.isDefined)) {
-      val nIds = markers.flatten
-        .map(_.stripPrefix("_p-").split("-")(0).toLong).sum
-      (batchDirs.size.toLong, nIds)
-    } else {
-      // marker-less fallback (pre-r16 layout or a crash between meta
-      // and marker): driver-side read of the commit records — same
-      // counts, still no Spark job (TinyParquet — r18)
-      val rows = TinyParquet.readDir(
-        spark.sparkContext.hadoopConfiguration, s"$root/tombstones_meta")
-      (rows.length.toLong, rows.map(TinyParquet.long(_, "n_ids")).sum)
-    }
+  /** The count of [[TinyParquet.visibleFiles]] under `dir`. */
+  private def fileCount(
+      spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    TinyParquet.visibleFiles(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).size.toLong
   }
 
   /** Per-index MAINTENANCE POLICY: the `compact*IfNeeded` thresholds,
@@ -859,16 +808,12 @@ object Sink {
     */
   val UsePersistedPolicy: Long = -1L
 
-  /** The [[ValvePolicy]] side-file's name at an index's raw path. */
-  private val ValvePolicyFile = "_valve_policy.json"
-
-  /** Persist `policy` as the index's `_valve_policy.json` — a one-line
-    * JSON side-file at the RAW path (NOT the resolved generation root:
-    * rebuilds and compactions swap generations under the raw path, and
-    * the policy governs the lineage, not one generation). Written via
-    * temp-file + rename so a reader never sees a torn line. The build
-    * entry points take an optional policy and call this, making
-    * build-time the natural declaration site; calling it later
+  /** Declare `policy` for the index lineage at `rawPath`: one `policy`
+    * entry in its commit log, at the RAW path (rebuilds and compactions
+    * swap generations under the raw path, and the policy governs the
+    * lineage, not one generation — `build` and `fold` entries carry it
+    * forward). The build entry points take an optional policy, making
+    * build-time the natural declaration site; calling this later
     * reconfigures the lineage in place.
     */
   def writeValvePolicy(
@@ -877,47 +822,18 @@ object Sink {
       policy: ValvePolicy): Unit = {
     // thresholds are counts: a negative value is never a threshold,
     // and a hand-copied −1 sentinel persisted here would make every
-    // valve fold on every call with no error anywhere (r16 advice) —
-    // reject at the declaration site, and again on read for files
-    // this writer never saw
+    // valve fold on every call with no error anywhere — reject at the
+    // declaration site, and again on read for entries this writer
+    // never saw
     requireValidPolicy(policy, s"writeValvePolicy($rawPath)")
-    val dir = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$rawPath/.$ValvePolicyFile.tmp")
-    val out = fs.create(tmp, true)
-    out.write(
-      (s"""{"max_ingested_files":${policy.maxIngestedFiles},""" +
-        s""""max_batches":${policy.maxBatches},""" +
-        s""""max_masked_ids":${policy.maxMaskedIds}}""")
-        .getBytes("UTF-8"))
-    out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$rawPath/$ValvePolicyFile")
-    // ATOMIC rename-over where the FS supports it (FileContext with
-    // Rename.OVERWRITE — local FS and HDFS do): the pre-r17
-    // delete-then-rename pair left a window where a concurrently
-    // running valve saw NO policy file and silently resolved to family
-    // built-ins for that one call. On object stores whose rename is
-    // copy+delete the window is the store's, not ours — a deployment
-    // there should front policy reads with its atomic-metadata layer.
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException =>
-        // FS without a FileContext binding: fall back to the two-step
-        // swap (brief no-policy window, resolves to built-ins)
-        fs.delete(dst, false)
-        fs.rename(tmp, dst)
-    }
+    IndexLog.commit(spark, IndexLog.read(spark, rawPath),
+      IndexLog.Policy(policy))
   }
 
   /** Shared [[ValvePolicy]] field validation — thresholds are counts,
     * never negative (see [[writeValvePolicy]]).
     */
-  private def requireValidPolicy(p: ValvePolicy, where: String): Unit =
+  private[sinks] def requireValidPolicy(p: ValvePolicy, where: String): Unit =
     require(
       p.maxIngestedFiles >= 0L && p.maxBatches >= 0L &&
         p.maxMaskedIds >= 0L,
@@ -926,34 +842,14 @@ object Sink {
         "- a negative value is not a threshold (and -1 is the " +
         "explicit-arg sentinel, meaningless persisted)")
 
-  /** Read the persisted [[ValvePolicy]] at `rawPath` — a FileSystem read
-    * (never a Spark job: the valves consult this on every micro-batch).
+  /** Read the live [[ValvePolicy]] at `rawPath` from its commit log
+    * (never a Spark job: the valves consult it on every micro-batch).
     * None when the lineage never declared one.
     */
   def readValvePolicy(
       spark: org.apache.spark.sql.SparkSession,
-      rawPath: String): Option[ValvePolicy] = {
-    val p = new org.apache.hadoop.fs.Path(s"$rawPath/$ValvePolicyFile")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(k: String): Option[Long] =
-      s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong)
-    val parsed = for {
-      f <- field("max_ingested_files")
-      b <- field("max_batches")
-      m <- field("max_masked_ids")
-    } yield ValvePolicy(f, b, m)
-    // a hand-edited file carrying a negative "threshold" must fail
-    // LOUDLY here, not silently compact on every valve call (write-side
-    // twin: [[writeValvePolicy]])
-    parsed.foreach(requireValidPolicy(_, s"readValvePolicy($rawPath)"))
-    parsed
-  }
+      rawPath: String): Option[ValvePolicy] =
+    IndexLog.read(spark, rawPath).policy
 
   /** Resolve one valve threshold: explicit arg > persisted policy >
     * family built-in ([[ValvePolicy]] resolution order). Only the
@@ -983,10 +879,11 @@ object Sink {
     * Below every threshold this is a census read ONLY (never a data
     * scan, never a write). Above any of them it folds via
     * [[compactIvfIndex]]: ingested batches merge into `celled`,
-    * tombstones apply physically and their layouts drop, the `folded`
-    * ledger absorbs both — probe answers are
-    * bit-identical before/after (spec-asserted), only the file census
-    * and the mask cost change.
+    * tombstones apply physically and their layouts drop, the `fold`
+    * log entry absorbs both — probe answers are bit-identical
+    * before/after (spec-asserted), only the file census and the mask
+    * cost change. The batch and masked-id counts come from the commit
+    * log ([[IndexLog]]), the file count from a listing.
     *
     * Thresholds target the actual failure modes: `maxIngestedFiles` /
     * `maxBatches` bound small-file probe I/O (the LSM L0 problem, same
@@ -1004,26 +901,46 @@ object Sink {
       rawPath: String,
       maxIngestedFiles: Long = UsePersistedPolicy,
       maxBatches: Long = UsePersistedPolicy,
-      maxMaskedIds: Long = UsePersistedPolicy): (Boolean, Long, Long, Long) = {
-    val pol = readValvePolicy(spark, rawPath)
+      maxMaskedIds: Long = UsePersistedPolicy): (Boolean, Long, Long, Long) =
+    ivfValve(spark, IndexLog.read(spark, rawPath),
+      maxIngestedFiles, maxBatches, maxMaskedIds)
+
+  private def ivfValve(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      maxIngestedFiles: Long,
+      maxBatches: Long,
+      maxMaskedIds: Long): (Boolean, Long, Long, Long) =
+    vectorValve(spark, log, "ingested", 64L,
+      maxIngestedFiles, maxBatches, maxMaskedIds)(compactIvf(spark, _))
+
+  /** The body of both vector valves ([[compactIvfIndexIfNeeded]],
+    * [[compactLshIndexIfNeeded]]) on one log snapshot: resolve the
+    * thresholds, census the snapshot and the `ingestedLayout` files,
+    * and `fold` when any threshold is passed.
+    */
+  private def vectorValve(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      ingestedLayout: String,
+      filesBuiltIn: Long,
+      maxIngestedFiles: Long,
+      maxBatches: Long,
+      maxMaskedIds: Long)(
+      fold: IndexLog.Snapshot => Any): (Boolean, Long, Long, Long) = {
+    val pol = log.policy
     val limFiles = resolveThreshold(
-      maxIngestedFiles, pol.map(_.maxIngestedFiles), 64L)
+      maxIngestedFiles, pol.map(_.maxIngestedFiles), filesBuiltIn)
     val limBatches = resolveThreshold(maxBatches, pol.map(_.maxBatches), 16L)
     val limMasked = resolveThreshold(
       maxMaskedIds, pol.map(_.maxMaskedIds), 100000L)
-    val path = resolveIndexRoot(spark, rawPath)
-    val ingested = new org.apache.hadoop.fs.Path(s"$path/ingested")
-    val fs = ingested.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = TinyParquet.visibleFiles(fs, ingested).size.toLong
-    val (nTombBatches, maskedIds) = tombstonePressure(spark, path)
-    val nBatches = batchIdsAt(spark, path, "ingested").size + nTombBatches
-    if (nFiles <= limFiles && nBatches <= limBatches &&
-        maskedIds <= limMasked)
-      (false, nFiles, nBatches, maskedIds)
-    else {
-      compactIvfIndex(spark, rawPath)
-      (true, nFiles, nBatches, maskedIds)
-    }
+    val nFiles = fileCount(spark, s"${log.root}/$ingestedLayout")
+    val nBatches = (log.adds.size + log.tombstones.size).toLong
+    val maskedIds = log.tombstones.map(_.nIds).sum
+    val trip = nFiles > limFiles || nBatches > limBatches ||
+      maskedIds > limMasked
+    if (trip) fold(log)
+    (trip, nFiles, nBatches, maskedIds)
   }
 
   /** Reload a persisted IVF index: centroids collected (nlist × dim — the
@@ -1036,8 +953,13 @@ object Sink {
     */
   def readIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
-      rawPath: String): graft.operators.Similarity.IvfIndex = {
-    val path = resolveIndexRoot(spark, rawPath)
+      rawPath: String): graft.operators.Similarity.IvfIndex =
+    readIvf(spark, IndexLog.read(spark, rawPath))
+
+  private def readIvf(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): graft.operators.Similarity.IvfIndex = {
+    val path = log.root
     val hconf = spark.sparkContext.hadoopConfiguration
     // centroid tables are nlist tiny rows: driver-side reads, no Spark
     // jobs (TinyParquet — r18; the former orderBy(cell).collect()
@@ -1055,53 +977,40 @@ object Sink {
       if (qcRows.isEmpty) (Array.empty[Array[Long]], "raw")
       else
         (qcRows.map(TinyParquet.longs(_, "qcentroid")).toArray,
-          // layouts persisted before the space column trained on raw
-          // embeddings (the only build path back then) — default "raw"
-          if (qcRows.head.contains("space"))
-            TinyParquet.string(qcRows.head, "space")
-          else "raw")
+          TinyParquet.string(qcRows.head, "space"))
     val celled = spark.read.parquet(s"$path/celled")
-    val ingestedDir = new org.apache.hadoop.fs.Path(s"$path/ingested")
-    val hasIngested = ingestedDir
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(ingestedDir)
-    // row_batch (−1 = base celled, else ingest batch id) keys the
-    // batch-scoped tombstone mask below
-    val all =
-      if (!hasIngested) celled.withColumn("row_batch", lit(-1L))
-      else {
-        // declared schema: the partition columns must come back as
-        // exactly (cell INT, batch_id BIGINT) or a silent cast on the
-        // probe predicate could defeat directory pruning; a PQ layout's
-        // ingested rows additionally carry their codes
-        val (schema, cols) =
-          if (indexHasPq(spark, path))
-            ("vec_id BIGINT, unit ARRAY<DOUBLE>, codes ARRAY<INT>, " +
-              "cell INT, batch_id BIGINT",
-              Seq(col("vec_id"), col("unit"), col("codes"), col("cell"),
-                col("batch_id").as("row_batch")))
-          else
-            ("vec_id BIGINT, unit ARRAY<DOUBLE>, cell INT, batch_id BIGINT",
-              Seq(col("vec_id"), col("unit"), col("cell"),
-                col("batch_id").as("row_batch")))
-        celled.withColumn("row_batch", lit(-1L)).unionByName(
-          spark.read.schema(schema).parquet(s"$path/ingested")
-            .select(cols: _*),
-          allowMissingColumns = true)
-      }
+      .withColumn("row_batch", lit(-1L))
+    // declared schema: the partition columns must come back as exactly
+    // (cell INT, batch_id BIGINT) or a silent cast on the probe
+    // predicate could defeat directory pruning; a PQ layout's ingested
+    // rows additionally carry their codes
+    val all = withAdds(celled, log)(spark.read
+      .schema("vec_id BIGINT, unit ARRAY<DOUBLE>, " +
+        (if (indexHasPq(spark, path)) "codes ARRAY<INT>, " else "") +
+        "cell INT, batch_id BIGINT")
+      .parquet(s"$path/ingested"))
     // committed tombstones ([[deleteFromIvfIndex]]) mask the whole view
-    // broadcast and BATCH-SCOPED (`row_batch > tomb_batch` survival —
-    // a re-append after a delete resurrects the vector) — every probe
-    // path (batch/serving/streaming/ADC) stops returning deleted
-    // vectors immediately; rebuilds and [[compactIvfIndex]] fold them
-    // physically
-    val live = committedTombstones(spark, path, "vec_id") match {
-      case None => all.drop("row_batch")
-      case Some((tombs, _, _)) =>
-        maskTombstones(all, "vec_id", tombs)
-    }
+    // — every probe path (batch/serving/streaming/ADC) stops returning
+    // deleted vectors immediately; rebuilds and [[compactIvfIndex]]
+    // fold them physically
+    val live = maskTombstones(spark, log, "vec_id")(all)
     graft.operators.Similarity.IvfIndex(centroids, live, qcents, qcSpace)
   }
+
+  /** `base` (base-layout rows, `row_batch` −1) unioned with the rows of
+    * `ingested` whose batch has an `add` entry in `log`, their batch id
+    * as `row_batch` — the key of the batch-scoped tombstone mask
+    * ([[maskTombstones]]). The batch-id IN-list on the partition column
+    * prunes uncommitted batch directories; `ingested` is not read at
+    * all while no batch is committed.
+    */
+  private def withAdds(base: DataFrame, log: IndexLog.Snapshot)(
+      ingested: => DataFrame): DataFrame =
+    if (log.adds.isEmpty) base
+    else base.unionByName(
+      ingested.filter(col("batch_id").isin(log.adds.map(_.batch): _*))
+        .withColumnRenamed("batch_id", "row_batch"),
+      allowMissingColumns = true)
 
   /** C6+ / similarity — persist the IVF-PQ index (the full FAISS-style
     * billion-scale layout on disk): the celled corpus with its PQ CODES
@@ -1112,7 +1021,7 @@ object Sink {
     * shortlist; SimilarityIndexPersistSpec asserts both prunings on the
     * plan) — plus the coarse centroids and the per-subspace PQ codebooks
     * (m·k rows). [[readIvfPqIndex]] + `Similarity.ivfPqQueryPruned` are
-    * the consuming path.
+    * the consuming path. Committed like [[writeIvfIndex]].
     */
   def writeIvfPqIndex(
       index: graft.operators.Similarity.IvfIndex,
@@ -1122,9 +1031,22 @@ object Sink {
       mode: String = "overwrite",
       policy: Option[ValvePolicy] = None): Unit = {
     val spark = index.celled.sparkSession
+    val log = openBuild(spark, path, mode, policy) // see writeIvfIndex
+    writeIvfPqLayout(index, pqCents, codes, path, mode)
+    commitBuild(spark, log, policy)
+  }
+
+  /** The IVF-PQ tables of [[writeIvfPqIndex]] under `path`,
+    * uncommitted — also the body of a PQ rebuild's generation.
+    */
+  private def writeIvfPqLayout(
+      index: graft.operators.Similarity.IvfIndex,
+      pqCents: Array[Array[Array[Long]]],
+      codes: DataFrame,
+      path: String,
+      mode: String): Unit = {
+    val spark = index.celled.sparkSession
     import spark.implicits._
-    policy.foreach(writeValvePolicy(spark, path, _)) // see writeIvfIndex
-    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
     writeDistribution(
       index.celled.join(codes, "vec_id")
         .select(col("vec_id"), col("unit"), col("codes"), col("cell")),
@@ -1153,8 +1075,8 @@ object Sink {
       spark: org.apache.spark.sql.SparkSession,
       path: String)
       : (graft.operators.Similarity.IvfIndex, Array[Array[Array[Long]]]) = {
-    val base = readIvfIndex(spark, path)
-    (base, readPqCodebooks(spark, resolveIndexRoot(spark, path)))
+    val log = IndexLog.read(spark, path)
+    (readIvf(spark, log), readPqCodebooks(spark, log.root))
   }
 
   /** C6+ / similarity — persist an SRP-LSH index in its 100 TB layout
@@ -1168,7 +1090,7 @@ object Sink {
     * bucket directories. Hyperplanes + band count ride along as tiny
     * metadata. `Similarity.lshQueryPruned` is the consuming query path
     * (SimilarityIndexPersistSpec round-trips it and asserts the
-    * partition pruning).
+    * partition pruning). Committed like [[writeIvfIndex]].
     */
   def writeLshIndex(
       index: graft.operators.Similarity.LshIndex,
@@ -1177,8 +1099,7 @@ object Sink {
       policy: Option[ValvePolicy] = None): Unit = {
     val spark = index.signed.sparkSession
     import spark.implicits._
-    policy.foreach(writeValvePolicy(spark, path, _)) // see writeIvfIndex
-    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
+    val log = openBuild(spark, path, mode, policy) // see writeIvfIndex
     val bitsPerBand = index.bitsPerBand
     val mask = (1L << bitsPerBand) - 1
     // ALL signed columns persist — an index built with carryCols keeps
@@ -1216,6 +1137,7 @@ object Sink {
       .groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("n_build"))
       .coalesce(1).write.mode(mode).parquet(s"$path/build_census")
+    commitBuild(spark, log, policy)
   }
 
   /** Bucket-occupancy DRIFT census of a persisted LSH index — the
@@ -1227,18 +1149,14 @@ object Sink {
     * degrading; the remedy differs from IVF (wider banding / index
     * resharding rather than a quantizer retrain — resampling hyperplanes
     * cannot unskew concentrated data), which is why the census is the
-    * first-class valve here. Indexes persisted before this census
-    * existed adopt live occupancy as the baseline, like
-    * [[ivfOccupancyDrift]].
+    * first-class valve here.
     */
   def lshOccupancyDrift(
       spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val root = resolveIndexRoot(spark, path)
-    occupancyDrift(spark, root, Seq("band", "bucket"),
-      spark.read.schema("vec_id BIGINT, band INT, bucket BIGINT")
-        .parquet(s"$root/postings"),
-      readLshIndex(spark, path).postings)
+    val log = IndexLog.read(spark, path)
+    occupancyDrift(spark, log.root, Seq("band", "bucket"),
+      readLsh(spark, log).postings)
   }
 
   /** Incrementally ADD vectors to a persisted LSH index — the
@@ -1253,12 +1171,14 @@ object Sink {
     * predicate prunes the ingested postings directories exactly like the
     * base ones.
     *
-    * Exactly-once: `batch_id` is the last partition level and the write
-    * is a DYNAMIC partition overwrite, so a replayed micro-batch
-    * overwrites its own directories instead of appending duplicates —
-    * [[graft.streaming.StreamLshIngest]] relies on this, same contract
-    * as the IVF ingest path. Single-maintainer assumption as documented
-    * on [[appendIvfIndex]]/[[appendTextIndex]].
+    * Commit and exactly-once as on the IVF ingest path: the `add` log
+    * entry lands after BOTH writes, so a crash between them leaves the
+    * batch invisible and unfolded, and its replay overwrites its own
+    * directories (dynamic partition overwrites keyed on `batch_id`) and
+    * commits it; a replay of a committed or absorbed batch is a no-op —
+    * [[graft.streaming.StreamLshIngest]] relies on this.
+    * Single-maintainer assumption as documented on
+    * [[appendIvfIndex]]/[[appendTextIndex]].
     */
   def appendLshIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1266,9 +1186,9 @@ object Sink {
       vectors: DataFrame,
       batchId: Long): Unit = {
     import graft.operators.Similarity
-    val root = resolveIndexRoot(spark, path)
-    // folded-ledger replay guard, as appendIvfIndex
-    if (foldedBatchIds(spark, root).contains(batchId)) return
+    val log = IndexLog.read(spark, path)
+    if (log.hasAdd(batchId)) return
+    val root = log.root
     val (planes, bands) = readLshPlanes(spark, root)
     val bitsPerBand = planes.length / bands
     val mask = (1L << bitsPerBand) - 1
@@ -1296,6 +1216,7 @@ object Sink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("band", "bucket", "batch_id")
       .parquet(s"$root/postings_ingested")
+    IndexLog.commit(spark, log, IndexLog.Add(batchId))
   }
 
   /** Fold the [[appendLshIndex]] ingested layouts back into the base
@@ -1303,41 +1224,36 @@ object Sink {
     * streamed micro-batches leave one file per touched (band, bucket,
     * batch) directory and those small files dominate probe I/O at high
     * ingest rates. Rewrites signed ∪ signed_ingested and postings ∪
-    * postings_ingested, tombstones applied, into a fresh `gen-N/`
-    * generation, copies in the tables the fold does not change
-    * (planes, meta, build_census) and the `folded` ledger, and commits
-    * it through [[commitGeneration]], exactly as [[compactIvfIndex]]
-    * does — queries before and after are bit-identical
-    * (spec-asserted), only the file census changes.
+    * postings_ingested (committed batches only), tombstones applied,
+    * into a fresh `gen-N/` generation, copies in the tables the fold
+    * does not change (planes, meta, build_census), and commits it
+    * through [[commitGeneration]], exactly as [[compactIvfIndex]] does
+    * — queries before and after are bit-identical (spec-asserted), only
+    * the file census changes.
     *
     * Returns (signed rows after compaction, from the new generation's
     * parquet footers; ingested posting files folded in).
     */
   def compactLshIndex(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): (Long, Long) = {
+      path: String): (Long, Long) =
+    compactLsh(spark, IndexLog.read(spark, path))
+
+  private def compactLsh(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): (Long, Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = resolveIndexRoot(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    val signedIn = new org.apache.hadoop.fs.Path(s"$root/signed_ingested")
-    val postIn = new org.apache.hadoop.fs.Path(s"$root/postings_ingested")
-    val tombsIn = new org.apache.hadoop.fs.Path(s"$root/tombstones_meta")
-    if (!fs.exists(signedIn) && !fs.exists(postIn) &&
-        !fs.exists(tombsIn)) {
-      (TinyParquet.rowCount(conf, s"$root/signed"), 0L)
-    } else {
-      val nf = TinyParquet.visibleFiles(fs, postIn).size.toLong
-      // absorbed batch ids → `folded` ledger, the compactIvfIndex twin
-      val absorbed = absorbedBatchIds(spark, root, "signed_ingested")
-      val merged = readLshIndex(spark, path)
-      val genDir = commitGeneration(spark, path,
-          nextGeneration(spark, path)) { genDir =>
+    val root = log.root
+    if (!log.pending) (TinyParquet.rowCount(conf, s"$root/signed"), 0L)
+    else {
+      val nf = fileCount(spark, s"$root/postings_ingested")
+      val merged = readLsh(spark, log)
+      val genDir = commitFold(spark, log) { genDir =>
         merged.signed.write.mode("overwrite").parquet(s"$genDir/signed")
         writeDistribution(merged.postings, col("band"), col("bucket"))
           .write.mode("overwrite").partitionBy("band", "bucket")
           .parquet(s"$genDir/postings")
         carryTables(spark, root, genDir, "planes", "meta", "build_census")
-        writeFoldedLedger(spark, genDir, absorbed)
       }
       (TinyParquet.rowCount(conf, s"$genDir/signed"), nf)
     }
@@ -1369,28 +1285,18 @@ object Sink {
       path: String,
       maxIngestedFiles: Long = UsePersistedPolicy,
       maxBatches: Long = UsePersistedPolicy,
-      maxMaskedIds: Long = UsePersistedPolicy): (Boolean, Long, Long, Long) = {
-    val pol = readValvePolicy(spark, path)
-    val limFiles = resolveThreshold(
-      maxIngestedFiles, pol.map(_.maxIngestedFiles), 1024L)
-    val limBatches = resolveThreshold(maxBatches, pol.map(_.maxBatches), 16L)
-    val limMasked = resolveThreshold(
-      maxMaskedIds, pol.map(_.maxMaskedIds), 100000L)
-    val root = resolveIndexRoot(spark, path)
-    val postIn = new org.apache.hadoop.fs.Path(s"$root/postings_ingested")
-    val fs = postIn.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = TinyParquet.visibleFiles(fs, postIn).size.toLong
-    val (nTombBatches, maskedIds) = tombstonePressure(spark, root)
-    val nBatches =
-      batchIdsAt(spark, root, "signed_ingested").size + nTombBatches
-    if (nFiles <= limFiles && nBatches <= limBatches &&
-        maskedIds <= limMasked)
-      (false, nFiles, nBatches, maskedIds)
-    else {
-      compactLshIndex(spark, path)
-      (true, nFiles, nBatches, maskedIds)
-    }
-  }
+      maxMaskedIds: Long = UsePersistedPolicy): (Boolean, Long, Long, Long) =
+    lshValve(spark, IndexLog.read(spark, path),
+      maxIngestedFiles, maxBatches, maxMaskedIds)
+
+  private def lshValve(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      maxIngestedFiles: Long,
+      maxBatches: Long,
+      maxMaskedIds: Long): (Boolean, Long, Long, Long) =
+    vectorValve(spark, log, "postings_ingested", 1024L,
+      maxIngestedFiles, maxBatches, maxMaskedIds)(compactLsh(spark, _))
 
   /** Reload a persisted LSH index: planes + band count collected (tiny),
     * signed corpus and postings as parquet tables (NOT cached — probes
@@ -1403,54 +1309,33 @@ object Sink {
     */
   def readLshIndex(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.operators.Similarity.PersistedLshIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = resolveIndexRoot(spark, path)
-    def exists(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
+      path: String): graft.operators.Similarity.PersistedLshIndex =
+    readLsh(spark, IndexLog.read(spark, path))
+
+  private def readLsh(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): graft.operators.Similarity.PersistedLshIndex = {
+    val root = log.root
     val (planes, bands) = readLshPlanes(spark, root)
-    val signedBase = spark.read.parquet(s"$root/signed")
-      .withColumn("row_batch", lit(-1L))
     // vectors added after the build ([[appendLshIndex]]) union in from
-    // the ingested layouts; declared schemas keep the partition columns
-    // type-exact so static probe predicates still prune directories.
-    // row_batch (−1 = base) keys the batch-scoped tombstone mask below
-    val signed =
-      if (!exists("signed_ingested")) signedBase
-      else signedBase.unionByName(
-        spark.read
-          .schema("vec_id BIGINT, unit ARRAY<DOUBLE>, sig BIGINT, " +
-            "batch_id BIGINT")
-          .parquet(s"$root/signed_ingested")
-          .select(col("vec_id"), col("unit"), col("sig"),
-            col("batch_id").as("row_batch")),
-        allowMissingColumns = true)
-    val postingsBase = spark.read
+    // the ingested layouts, committed batches only; declared schemas
+    // keep the partition columns type-exact so static probe predicates
+    // still prune directories
+    val signed = withAdds(spark.read.parquet(s"$root/signed")
+      .withColumn("row_batch", lit(-1L)), log)(spark.read
+      .schema("vec_id BIGINT, unit ARRAY<DOUBLE>, sig BIGINT, batch_id BIGINT")
+      .parquet(s"$root/signed_ingested"))
+    val postings = withAdds(spark.read
       .schema("vec_id BIGINT, band INT, bucket BIGINT")
       .parquet(s"$root/postings")
-      .withColumn("row_batch", lit(-1L))
-    val postings =
-      if (!exists("postings_ingested")) postingsBase
-      else postingsBase.unionByName(
-        spark.read
-          .schema("vec_id BIGINT, band INT, bucket BIGINT, batch_id BIGINT")
-          .parquet(s"$root/postings_ingested")
-          .select(col("vec_id"), col("band"), col("bucket"),
-            col("batch_id").as("row_batch")))
-    // committed tombstones ([[deleteFromLshIndex]]) mask BOTH sides,
-    // batch-scoped (`row_batch > tomb_batch` survival — a re-append
-    // resurrects): postings (probes stop surfacing the ids) AND signed
-    // (the rerank must not resurrect them) — broadcast,
-    // deletion-rate-sized
-    val (liveSigned, livePostings) =
-      committedTombstones(spark, root, "vec_id") match {
-        case None => (signed.drop("row_batch"), postings.drop("row_batch"))
-        case Some((tombs, _, _)) => (
-          maskTombstones(signed, "vec_id", tombs),
-          maskTombstones(postings, "vec_id", tombs))
-      }
+      .withColumn("row_batch", lit(-1L)), log)(spark.read
+      .schema("vec_id BIGINT, band INT, bucket BIGINT, batch_id BIGINT")
+      .parquet(s"$root/postings_ingested"))
+    // committed tombstones ([[deleteFromLshIndex]]) mask BOTH sides:
+    // postings (probes stop surfacing the ids) AND signed (the rerank
+    // must not resurrect them)
+    val liveSigned = maskTombstones(spark, log, "vec_id")(signed)
+    val livePostings = maskTombstones(spark, log, "vec_id")(postings)
     graft.operators.Similarity.PersistedLshIndex(
       planes, bands, liveSigned, livePostings)
   }
@@ -1487,7 +1372,8 @@ object Sink {
     * pruning, receipt in TextIndexSpec); corpus constants `(n_docs,
     * total_tokens)` land in a 1-row meta table. Bucket count bounds the
     * directory fan-out (vs partition-by-token's unbounded millions)
-    * while a B-term query still prunes to ≤ B directories.
+    * while a B-term query still prunes to ≤ B directories. Committed
+    * like [[writeIvfIndex]].
     */
   def writeTextIndex(
       docs: DataFrame,
@@ -1497,7 +1383,6 @@ object Sink {
       policy: Option[ValvePolicy] = None): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    policy.foreach(writeValvePolicy(spark, path, _)) // see writeIvfIndex
     val counts = graft.operators.TextAnalysis.docTermPostings(docs)
       .localCheckpoint(true) // one tokenize pass feeds postings AND meta
     val dl = counts.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
@@ -1559,15 +1444,11 @@ object Sink {
       (r.getLong(0), r.getLong(1))
     }
     // a fresh build supersedes every generation and every layer a
-    // prior lifecycle left at this path ([[dropSuperseded]]) — a stale
-    // tombstone surviving an overwrite build would silently delete
-    // freshly-indexed docs, and a stale folded ledger would SWALLOW
-    // every future delete/append whose batch id it already contains.
-    // This runs only AFTER the input is pinned and its contract checks
-    // passed: every read of `docs` (which may even derive from this
-    // index) and every `require` above precedes the first destructive
-    // action.
-    if (mode == "overwrite") dropSuperseded(spark, path, Long.MaxValue)
+    // prior lifecycle left at this path ([[openBuild]]). This runs only
+    // AFTER the input is pinned and its contract checks passed: every
+    // read of `docs` (which may even derive from this index) and every
+    // `require` above precedes the first destructive action.
+    val log = openBuild(spark, path, mode, policy) // see writeIvfIndex
     counts
       // dl from the PINNED sidecar rows rather than a second
       // groupBy(doc_id) aggregate over counts (r17): docStats carries
@@ -1601,6 +1482,7 @@ object Sink {
         .as("bucket"))
       .agg(count(lit(1)).as("n_build"))
       .coalesce(1).write.mode(mode).parquet(s"$path/build_census")
+    commitBuild(spark, log, policy)
   }
 
   /** Bucket-occupancy DRIFT census of a persisted text index — the
@@ -1613,17 +1495,13 @@ object Sink {
     * telling an operator the probe-cost contract is degrading; the
     * remedies are compaction ([[compactTextIndexIfNeeded]] bounds the
     * FILE side) and raising the bucket count at the next rebuild (the
-    * DIRECTORY side). Indexes persisted before this census existed
-    * adopt live base occupancy as the baseline, like
-    * [[ivfOccupancyDrift]].
+    * DIRECTORY side).
     */
   def textOccupancyDrift(
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String): DataFrame = {
-    val root = resolveIndexRoot(spark, rawPath)
-    occupancyDrift(spark, root, Seq("bucket"),
-      readTextPostings(spark, root),
-      readTextIndex(spark, rawPath).postings)
+    val log = IndexLog.read(spark, rawPath)
+    occupancyDrift(spark, log.root, Seq("bucket"), readText(spark, log).postings)
   }
 
   /** The base postings of the text index at `root`, schema declared so
@@ -1644,28 +1522,24 @@ object Sink {
     * `row_batch > tomb_batch`, so re-add = delete → append, no
     * compaction needed) tokenize into postings
     * under `path/postings_ingested` partitioned by `(bucket, batch_id)`
-    * and their corpus constants into a per-batch `meta_ingested` row;
+    * and their corpus constants into the batch's `add` log entry;
     * queries through [[readTextIndex]] see them immediately (both
     * layouts union in, N and T sum across base + batches, and df is
     * counted on the unioned matched postings — so incremental state is
     * SEMANTICALLY IDENTICAL to a full rebuild over the union, which is
-    * what the oracle pins). Exactly-once: `batch_id` is a partition
-    * level on both tables and the writes are dynamic partition
-    * overwrites, so a replayed micro-batch overwrites its own
-    * directories instead of double-counting N/T/df.
+    * what the oracle pins).
     *
-    * Crash-safety: the batch's `meta_ingested` row is written LAST and
-    * IS the commit record — [[readTextIndex]] only unions posting
-    * batches whose batch_id appears in the meta table, so a crash
-    * between the two writes leaves the half-landed batch INVISIBLE
-    * (replaying it overwrites both layouts) instead of unioning
-    * postings whose corpus constants were never counted.
+    * Crash-safety: the `add` entry ([[IndexLog]]) is written LAST and
+    * IS the commit — [[readTextIndex]] only unions posting batches that
+    * have one, so a crash before it leaves the half-landed batch
+    * INVISIBLE instead of unioning postings whose corpus constants were
+    * never counted; the replay overwrites its own directories (dynamic
+    * partition overwrites keyed on `batch_id`) and commits it.
     *
-    * Exactly-once ACROSS COMPACTION: a replay of a batch that
-    * [[compactTextIndex]] already folded into the base postings (a
-    * restart from a checkpoint older than the compaction) is detected
-    * via the generation's `folded` ledger and SKIPPED — re-adding it
-    * would double-count its docs into N/T/df. This assumes one logical
+    * Exactly-once: a replay of a batch the log already holds, or that
+    * [[compactTextIndex]] folded into the base postings (a restart from
+    * a checkpoint older than the compaction), is SKIPPED — re-adding
+    * it would double-count its docs into N/T/df. This assumes one logical
     * ingest stream per index path with monotone batch ids (exactly
     * Spark's foreachBatch checkpoint contract); pointing a FRESH
     * checkpoint (ids restarting at 0) at a compacted index requires a
@@ -1684,9 +1558,9 @@ object Sink {
       rawPath: String,
       docs: DataFrame,
       batchId: Long): Unit = {
-    import spark.implicits._
-    val path = resolveIndexRoot(spark, rawPath)
-    if (foldedBatchIds(spark, path).contains(batchId)) return
+    val log = IndexLog.read(spark, rawPath)
+    if (log.hasAdd(batchId)) return
+    val path = log.root
     // one-row meta: driver-side read, no Spark job (TinyParquet — r18)
     val buckets = TinyParquet.int(
       TinyParquet.readDir(spark.sparkContext.hadoopConfiguration,
@@ -1695,10 +1569,10 @@ object Sink {
       .localCheckpoint(true)
     val dl = counts.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     // the batch's doc-stats sidecar rows (see [[writeTextIndex]]) —
-    // before the commit record, same torn-batch invisibility; LEFT
+    // before the log entry, same torn-batch invisibility; LEFT
     // join so zero-token docs carry dl = 0. Pinned ONCE (batch-sized):
     // this one pass over the batch feeds the sidecar write, the
-    // commit record's corpus constants (n_docs = its row count,
+    // log entry's corpus constants (n_docs = its row count,
     // total_tokens = its dl sum) AND the postings write's dl column
     // (r17 — the postings join previously re-ran the dl aggregate) —
     // the pre-r15 shape paid a separate docs scan for the sidecar
@@ -1706,7 +1580,7 @@ object Sink {
     // A/B flagged on text_bm25_incremental.
     // The localCheckpoint(true) durability stance is writeTextIndex's:
     // local pin, executor loss = retry the append (idempotent — the
-    // commit record lands last)
+    // log entry lands last)
     val docStats = docs.select(col("doc_id").cast("long").as("doc_id"))
       .join(dl, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1752,168 +1626,78 @@ object Sink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(s"$path/doc_stats_ingested")
-    // the COMMIT record for this batch — last write, see scaladoc
-    Seq((constants.getLong(0), constants.getLong(1), batchId))
-      .toDF("n_docs", "total_tokens", "batch_id")
-      .coalesce(1).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(s"$path/meta_ingested")
-  }
-
-  /** Batch ids already folded into an index's base layout — read from
-    * the `folded` ledger at the RESOLVED root (empty for a
-    * never-compacted index or a pre-ledger layout). Every rebuild and
-    * compaction writes it into the generation it commits
-    * ([[writeFoldedLedger]]). Appends AND deletes consult it: a
-    * replayed batch whose effects a compaction already folded must be
-    * skipped, not re-applied.
-    */
-  private def foldedBatchIds(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String): Set[Long] = {
-    // ledger = tiny metadata (one row per absorbed batch): driver-side
-    // read, no Spark job (TinyParquet — r18)
-    TinyParquet
-      .readDir(spark.sparkContext.hadoopConfiguration, s"$root/folded")
-      .map(TinyParquet.long(_, "batch_id")).toSet
-  }
-
-  /** Persist the cumulative folded-batch ledger at `root` (no-op when
-    * empty — a ledger-less layout means "nothing ever folded").
-    */
-  private def writeFoldedLedger(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      ids: Set[Long]): Unit = {
-    import spark.implicits._
-    if (ids.nonEmpty)
-      ids.toSeq.sorted.toDF("batch_id")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/folded")
+    IndexLog.commit(spark, log,
+      IndexLog.Add(batchId, constants.getLong(0), constants.getLong(1)))
   }
 
   // ============================================== document/vector DELETE
 
-  /** Committed tombstones at an index root: the deleted-id table as
-    * `(idCol, tomb_batch = max committed tombstone batch per id)`
-    * (restricted to batches whose commit record landed, optionally only
-    * batches BELOW `beforeBatch`) plus the summed meta adjustments
-    * `(Σ n_ids, Σ adj)`. None when no committed tombstone batch exists.
+  /** Apply the committed tombstones of `log` to a layered table whose
+    * rows carry `row_batch` (−1 for base-layout rows, the ingest batch
+    * id for incremental rows), and drop the bookkeeping column. The
+    * deleted-id table is `(idCol, tomb_batch = max committed tombstone
+    * batch per id)`, restricted to batches with a `tombstone` entry; a
+    * row survives iff no tombstone masks it — `row_batch > tomb_batch`.
     *
     * `tomb_batch` is what makes deletes BATCH-SCOPED rather than
     * terminal: a tombstone at batch K masks only rows from batches ≤ K
-    * (readers keep a row iff `row_batch > tomb_batch`; base-layout rows
-    * predate the batch lineage and carry row_batch = −1, so any
-    * tombstone masks them), which lets delete → re-append resurrect an
-    * id WITHOUT waiting for a compaction — at 100 TB a compaction is a
+    * (base-layout rows predate the batch lineage, so any tombstone
+    * masks them), which lets delete → re-append resurrect an id WITHOUT
+    * waiting for a compaction — at 100 TB a compaction is a
     * full-generation rewrite, and a crawl that re-fetches a
     * previously retention-deleted URL must not pay it.
     *
     * Layout (shared by all four index families): `tombstones/
-    * batch_id=K/` holds the 8-byte id rows, `tombstones_meta/
-    * batch_id=K/` one `(n_ids, adj, batch_id)` row written LAST — the
-    * commit record, exactly the [[appendTextIndex]] meta_ingested
-    * protocol, so a crash between the two writes leaves the half-landed
-    * delete INVISIBLE. For the text index `n_ids`/`adj` are the deleted
-    * docs' (count, Σ dl) corpus-constant adjustments; the vector
-    * families carry `(count, 0)` — they have no corpus constants.
+    * batch_id=K/` holds the 8-byte id rows, and the batch's `tombstone`
+    * log entry, written LAST, commits it — so a crash between the two
+    * leaves the half-landed delete INVISIBLE. The entry's `n_ids`/`adj`
+    * are, for the text index, the deleted docs' (count, Σ dl)
+    * corpus-constant adjustments; the vector families carry
+    * `(count, 0)` — they have no corpus constants.
     *
     * Size: tombstones are DELETION-RATE-sized, never corpus-sized —
-    * that is what makes the read-side anti-join a broadcast.
-    */
-  private def committedTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      idCol: String,
-      beforeBatch: Option[Long] = None): Option[(DataFrame, Long, Long)] = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$root/tombstones_meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaPath)) return None
-    // an index folded by an in-place compaction (before folds committed
-    // generations) can carry the commit record without its id table:
-    // the ids are already PHYSICALLY absent from the rewritten index, so
-    // the stale record means "nothing left to mask" — treat it as empty
-    // rather than letting every subsequent read throw path-not-found
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/tombstones")))
-      return None
-    // commit records are one tiny row per batch: driver-side read, no
-    // Spark job (TinyParquet — r18)
-    val committed = TinyParquet
-      .readDir(spark.sparkContext.hadoopConfiguration,
-        s"$root/tombstones_meta")
-      .map(r => (TinyParquet.long(r, "batch_id"),
-        TinyParquet.long(r, "n_ids"), TinyParquet.long(r, "adj")))
-      .filter(t => beforeBatch.forall(t._1 < _))
-      .sortBy(_._1)
-    if (committed.isEmpty) return None
-    val ids = spark.read
-      .schema(s"$idCol BIGINT, batch_id BIGINT")
-      .parquet(s"$root/tombstones")
-      .filter(col("batch_id").isin(committed.map(_._1).toSeq: _*))
-      .groupBy(col(idCol))
-      .agg(max(col("batch_id")).as("tomb_batch"))
-    Some((ids, committed.map(_._2).sum, committed.map(_._3).sum))
-  }
-
-  /** Apply committed tombstones to a layered table whose rows carry
-    * `row_batch` (−1 for base-layout rows, the ingest batch id for
-    * incremental rows): keep a row iff no tombstone masks it —
-    * `row_batch > tomb_batch` survival, the batch-scoped visibility
-    * rule ([[committedTombstones]]). Broadcast: tombstones are
-    * deletion-rate-sized. Drops the bookkeeping columns on the way out.
+    * that is what makes the anti-join a broadcast.
     */
   private def maskTombstones(
-      rows: DataFrame,
-      idCol: String,
-      tombs: DataFrame): DataFrame =
-    rows.join(broadcast(tombs), Seq(idCol), "left")
-      .filter(col("tomb_batch").isNull ||
-        col("row_batch") > col("tomb_batch"))
-      .drop("tomb_batch", "row_batch")
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      idCol: String)(
+      rows: DataFrame): DataFrame =
+    if (log.tombstones.isEmpty) rows.drop("row_batch")
+    else {
+      val tombs = spark.read
+        .schema(s"$idCol BIGINT, batch_id BIGINT")
+        .parquet(s"${log.root}/tombstones")
+        .filter(col("batch_id").isin(log.tombstones.map(_.batch): _*))
+        .groupBy(col(idCol))
+        .agg(max(col("batch_id")).as("tomb_batch"))
+      rows.join(broadcast(tombs), Seq(idCol), "left")
+        .filter(col("tomb_batch").isNull ||
+          col("row_batch") > col("tomb_batch"))
+        .drop("tomb_batch", "row_batch")
+    }
 
-  /** Write one tombstone batch (ids + commit record) under `root` —
-    * the shared write half of every `deleteFrom*Index`: ids land under
-    * `tombstones/batch_id=K` via dynamic partition overwrite
-    * (replay-idempotent), the meta row lands LAST and IS the commit.
+  /** Write one tombstone batch under the live root of `log` — the
+    * shared write half of every `deleteFrom*Index`: ids land under
+    * `tombstones/batch_id=K` via dynamic partition overwrite (a replay
+    * of a crashed delete rewrites them), then the `tombstone` log entry
+    * commits the batch. Returns the log with the entry.
     */
   private def writeTombstoneBatch(
       spark: org.apache.spark.sql.SparkSession,
-      root: String,
+      log: IndexLog.Snapshot,
       ids: DataFrame,
       nIds: Long,
       adj: Long,
-      batchId: Long): Unit = {
-    import spark.implicits._
+      batchId: Long): IndexLog.Snapshot = {
     ids
       .withColumn("batch_id", lit(batchId))
       .coalesce(1) // deletion-batch-sized: one file per batch directory
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
-      .parquet(s"$root/tombstones")
-    Seq((nIds, adj, batchId)).toDF("n_ids", "adj", "batch_id")
-      .coalesce(1).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(s"$root/tombstones_meta")
-    // mirror n_ids into a zero-byte marker NAME beside the commit
-    // record so [[tombstonePressure]] is a pure listing (underscore
-    // prefix: invisible to parquet readers). Written AFTER the record —
-    // the record stays the commit; a crash here just costs the census
-    // its job-free fast path until the next delete on this batch id
-    // (dynamic overwrite clears the partition dir, so a replay rewrites
-    // the marker too). Format narrowed in r17 to `_p-<n_ids>`: the r16
-    // shape also mirrored `adj`, but no census ever read it — dead
-    // data in a filename format is a maintenance trap (r16 verdict);
-    // the parser accepts both shapes, so r16-written markers still
-    // serve the fast path. The commit record keeps `adj` — it is the
-    // compaction-side input, read from parquet where it is consumed.
-    val markerDir = new org.apache.hadoop.fs.Path(
-      s"$root/tombstones_meta/batch_id=$batchId")
-    markerDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(new org.apache.hadoop.fs.Path(markerDir, s"_p-$nIds"),
-        true)
-      .close()
+      .parquet(s"${log.root}/tombstones")
+    IndexLog.commit(spark, log, IndexLog.Tombstone(batchId, nIds, adj))
   }
 
   /** DELETE documents from a persisted inverted index — the retention
@@ -1921,8 +1705,8 @@ object Sink {
     * raw partition never removed its docs from a persisted index, so a
     * 30-day-retention corpus accumulated dead postings until a full
     * rebuild. Tombstones close that: the delete lands as an 8-byte-id
-    * batch + a commit record, [[readTextIndex]] (and therefore every
-    * batch/streaming serve path) anti-joins it BROADCAST
+    * batch + a `tombstone` log entry, [[readTextIndex]] (and therefore
+    * every batch/streaming serve path) anti-joins it BROADCAST
     * (deletion-rate-sized) and subtracts the deleted docs' (count, Σ dl)
     * from the corpus constants — so BM25 over the logical state is
     * bit-identical to a rebuild over corpus-minus-deleted (the oracle
@@ -1931,35 +1715,25 @@ object Sink {
     * generation's postings no longer contain the rows, its meta carries
     * the adjusted constants, and the tombstone layouts are dropped.
     *
-    * Exactly-once under replay, WITHOUT a ledger: the corpus-constant
-    * contribution is recomputed against the view with every EARLIER
-    * tombstone batch applied and this batch (and any later one) ignored
-    * — a replayed batch K re-derives exactly the numbers K computed the
-    * first time (monotone foreachBatch ids), and a replay arriving
-    * AFTER a compaction folded K finds its docs physically absent and
-    * correctly contributes zero on a base whose meta already carries
-    * K's adjustment. Both writes are dynamic partition overwrites.
+    * Exactly-once under replay: a batch the log already holds, or that
+    * a fold absorbed, is skipped — the corpus-constant contribution is
+    * counted once, against the committed view with every earlier
+    * tombstone batch applied.
     *
     * Cost: O(deletion batch), NOT O(index) — the corpus-constant
     * contribution joins the deletion ids against the `doc_stats`
     * SIDECAR (`(doc_id, dl, dbucket)`, one row per doc, PARTITIONED BY
     * `dbucket = pmod(xxhash64(doc_id), buckets)`), statically pruned to
-    * the deletion ids' bucket directories — the earlier implementation
-    * scanned the whole postings `(doc_id, dl)` projection per batch
-    * because doc_id is not the postings layout key. Layouts persisted
-    * before the sidecar existed ADOPT one on first delete (one
-    * column-pruned postings pass, then O(batch) forever; zero-token
-    * docs are unrecoverable from postings — adopted sidecars count
-    * them as the old scan did).
+    * the deletion ids' bucket directories — never a scan of the
+    * postings `(doc_id, dl)` projection, since doc_id is not the
+    * postings layout key.
     *
     * Deletion is BATCH-SCOPED, not terminal: the tombstone masks only
-    * rows from batches ≤ `batchId` ([[committedTombstones]]), so a
+    * rows from batches ≤ `batchId` ([[maskTombstones]]), so a
     * later [[appendTextIndex]] of the same doc_id RESURRECTS it with no
-    * compaction needed — re-add = delete → append. A replay of a batch
-    * that a compaction already folded physically is skipped via the
-    * generation's `folded` ledger (exactly the [[appendTextIndex]]
-    * guard; without it the replayed tombstone would mask the folded —
-    * possibly re-appended — base rows).
+    * compaction needed — re-add = delete → append. Without the replay
+    * skip, a replay of a folded batch would mask the folded — possibly
+    * re-appended — base rows.
     *
     * SINGLE MAINTAINER, same as [[appendTextIndex]]: deletes share the
     * append stream's batch-id lineage and must not race maintenance.
@@ -1968,13 +1742,19 @@ object Sink {
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String,
       docIds: DataFrame,
-      batchId: Long): Unit = {
-    val path = resolveIndexRoot(spark, rawPath)
-    if (foldedBatchIds(spark, path).contains(batchId)) return
+      batchId: Long): Unit =
+    deleteText(spark, IndexLog.read(spark, rawPath), docIds, batchId)
+
+  private def deleteText(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      docIds: DataFrame,
+      batchId: Long): IndexLog.Snapshot = {
+    if (log.hasTombstone(batchId)) return log
     // one-row meta: driver-side read, no Spark job (TinyParquet — r18)
     val buckets = TinyParquet.int(
       TinyParquet.readDir(spark.sparkContext.hadoopConfiguration,
-        s"$path/meta").head, "buckets")
+        s"${log.root}/meta").head, "buckets")
     // the deletion ids' sidecar buckets (the probe-union idiom turning
     // the stats lookup into a static partition prune) ride the pin job
     // itself (Dataset.observe — r18): the former shape paid a second
@@ -1988,23 +1768,12 @@ object Sink {
       .localCheckpoint(true)
     val probed: Seq[Int] = bObs.get("dbuckets")
       .asInstanceOf[Seq[Any]].map(_.asInstanceOf[Int]).sorted
-    val stats = docStatsLayers(spark, path, buckets,
-        beforeBatch = Some(batchId))
+    val stats = docStatsLayers(spark, log)
       .filter(col("dbucket").isin(probed: _*)) // static partition prune
       .join(broadcast(ids), Seq("doc_id"))
-    // batch-scoped visibility at delete time: rows from batches BELOW
-    // this one (docStatsLayers applied that), minus rows earlier
-    // tombstone batches already mask — a replayed batch K re-derives
-    // exactly the numbers K computed the first time, whatever appended
-    // or deleted after it
-    val visible = committedTombstones(spark, path, "doc_id",
-        beforeBatch = Some(batchId)) match {
-      case Some((tombs, _, _)) =>
-        stats.join(broadcast(tombs), Seq("doc_id"), "left")
-          .filter(col("tomb_batch").isNull ||
-            col("row_batch") > col("tomb_batch"))
-      case None => stats
-    }
+    // the committed view at delete time: rows earlier tombstone batches
+    // already mask do not count again
+    val visible = maskTombstones(spark, log, "doc_id")(stats)
     // ≤ 1 visible row per doc (the append contract: an id is only ever
     // re-added AFTER a delete masks its earlier rows), so plain
     // count/sum — already-deleted or never-indexed ids contribute 0
@@ -2012,86 +1781,24 @@ object Sink {
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("t"))
       .head
-    writeTombstoneBatch(spark, path, ids,
+    writeTombstoneBatch(spark, log, ids,
       agg.getLong(0), agg.getLong(1), batchId)
   }
 
   /** The doc-stats sidecar across all committed layers, as
     * `(doc_id, dl, dbucket, row_batch)` — base rows (row_batch = −1)
-    * from `doc_stats/` plus committed, unfolded ingest batches from
-    * `doc_stats_ingested/` (below `beforeBatch` when given, the
-    * [[deleteFromTextIndex]] replay rule). Adopts a sidecar from the
-    * postings for layouts persisted before it existed.
+    * from `doc_stats/` plus the batches with an `add` entry in `log`
+    * from `doc_stats_ingested/`.
     */
   private def docStatsLayers(
       spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      buckets: Int,
-      beforeBatch: Option[Long] = None): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def exists(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
-    if (!exists("doc_stats")) adoptDocStats(spark, path, buckets)
-    val base = spark.read
+      log: IndexLog.Snapshot): DataFrame =
+    withAdds(spark.read
       .schema("doc_id BIGINT, dl BIGINT, dbucket INT")
-      .parquet(s"$path/doc_stats")
-      .withColumn("row_batch", lit(-1L))
-    if (!exists("doc_stats_ingested")) base
-    else {
-      val folded = foldedBatchIds(spark, path)
-      val committed = batchIdsAt(spark, path, "meta_ingested")
-        .diff(folded)
-        .filter(b => beforeBatch.forall(b < _)).toSeq
-      base.unionByName(
-        spark.read
-          .schema("doc_id BIGINT, dl BIGINT, dbucket INT, batch_id BIGINT")
-          .parquet(s"$path/doc_stats_ingested")
-          .filter(col("batch_id").isin(committed: _*))
-          .select(col("doc_id"), col("dl"), col("dbucket"),
-            col("batch_id").as("row_batch")))
-    }
-  }
-
-  /** One-time sidecar ADOPTION for a pre-sidecar layout: derive
-    * `(doc_id, dl)` per doc from the postings' column-pruned projection
-    * (base → `doc_stats/`, committed ingest batches →
-    * `doc_stats_ingested/`) and persist in the doc-bucketed layout.
-    * Zero-token docs never reached the postings, so an adopted sidecar
-    * cannot know them — identical to what the old postings scan
-    * counted; sidecars written at build time cover them.
-    */
-  private def adoptDocStats(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      buckets: Int): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def exists(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
-    val dbucket = pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
-      .as("dbucket")
-    writeDistribution(
-      readTextPostings(spark, path)
-        .select(col("doc_id"), col("dl")).distinct()
-        .select(col("doc_id"), col("dl"), dbucket),
-      col("dbucket"))
-      .write.mode("overwrite").partitionBy("dbucket")
-      .parquet(s"$path/doc_stats")
-    if (exists("postings_ingested")) {
-      spark.read
-        .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-          "positions ARRAY<INT>, bucket INT, batch_id BIGINT")
-        .parquet(s"$path/postings_ingested")
-        .select(col("doc_id"), col("dl"), col("batch_id")).distinct()
-        .select(col("doc_id"), col("dl"), dbucket, col("batch_id"))
-        .transform(writeDistribution(_, col("batch_id")))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$path/doc_stats_ingested")
-    }
-  }
+      .parquet(s"${log.root}/doc_stats")
+      .withColumn("row_batch", lit(-1L)), log)(spark.read
+      .schema("doc_id BIGINT, dl BIGINT, dbucket INT, batch_id BIGINT")
+      .parquet(s"${log.root}/doc_stats_ingested"))
 
   /** DELETE vectors from a persisted IVF / IVF-PQ index — the
     * [[deleteFromTextIndex]] twin for the vector families: tombstoned
@@ -2099,78 +1806,53 @@ object Sink {
     * [[readIvfIndex]] (broadcast — deletion-rate-sized), so every probe
     * path (batch, serving, streaming, ADC) stops returning them
     * immediately; the drift-gated rebuilds and [[compactIvfIndex]] fold
-    * them physically and drop the layouts. No corpus constants exist
-    * here, so replays are idempotent by the dynamic overwrite alone.
-    * Like the text twin, deletion is BATCH-SCOPED: the tombstone masks
-    * only rows from batches ≤ `batchId`, so a later [[appendIvfIndex]]
-    * of the same vec_id resurrects it without waiting for a
-    * compaction/rebuild (re-add = delete → append). A replay of a batch
-    * a compaction/rebuild already folded is skipped via the `folded`
-    * ledger — it would otherwise mask the folded base rows.
+    * them physically and drop the layouts. Like the text twin, deletion
+    * is BATCH-SCOPED: the tombstone masks only rows from batches ≤
+    * `batchId`, so a later [[appendIvfIndex]] of the same vec_id
+    * resurrects it without waiting for a compaction/rebuild (re-add =
+    * delete → append). A replay of a batch the log holds or a fold
+    * absorbed is skipped — it would otherwise mask the folded base
+    * rows.
     */
   def deleteFromIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String,
       vecIds: DataFrame,
-      batchId: Long): Unit = {
-    val root = resolveIndexRoot(spark, rawPath)
-    if (foldedBatchIds(spark, root).contains(batchId)) return
-    // the batch size rides the pin job itself (Dataset.observe — r18):
-    // the former ids.count() was a second job over the just-pinned rows
-    val nObs = Observation()
-    val ids = vecIds.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct().observe(nObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    writeTombstoneBatch(spark, root, ids,
-      nObs.get("n").asInstanceOf[Long], 0L, batchId)
-  }
+      batchId: Long): Unit =
+    deleteVectors(spark, IndexLog.read(spark, rawPath), vecIds, batchId)
 
   /** DELETE vectors from a persisted LSH index — tombstones mask
     * BOTH sides of the layout ([[readLshIndex]]): the postings (so
     * probes stop surfacing the ids) and the signed table (so the rerank
     * never resurrects them). Batch-scoped like the IVF twin: a later
     * [[appendLshIndex]] of the same vec_id resurrects it;
-    * [[compactLshIndex]] folds physically and ledgers the batch.
+    * [[compactLshIndex]] folds physically and absorbs the batch.
     */
   def deleteFromLshIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       vecIds: DataFrame,
-      batchId: Long): Unit = {
-    val root = resolveIndexRoot(spark, path)
-    if (foldedBatchIds(spark, root).contains(batchId)) return
-    // batch size observed on the pin job — see [[deleteFromIvfIndex]]
+      batchId: Long): Unit =
+    deleteVectors(spark, IndexLog.read(spark, path), vecIds, batchId)
+
+  /** The delete body of both vector families: one tombstone batch of
+    * distinct `vec_id`s, skipped on replay.
+    */
+  private def deleteVectors(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      vecIds: DataFrame,
+      batchId: Long): IndexLog.Snapshot = {
+    if (log.hasTombstone(batchId)) return log
+    // the batch size rides the pin job itself (Dataset.observe — r18):
+    // the former ids.count() was a second job over the just-pinned rows
     val nObs = Observation()
     val ids = vecIds.select(col("vec_id").cast("long").as("vec_id"))
       .distinct().observe(nObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    writeTombstoneBatch(spark, root, ids,
+    writeTombstoneBatch(spark, log, ids,
       nObs.get("n").asInstanceOf[Long], 0L, batchId)
   }
-
-  /** Batch ids of the visible files in layout `sub` at `root`. */
-  private def batchIdsAt(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      sub: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-    TinyParquet.batchIds(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Every batch id a fold of the RESOLVED `root` absorbs into its
-    * `folded` ledger: the ledger so far, the batches of the family's
-    * ingest layout (`meta_ingested` commit records for text, the
-    * `ingested` / `signed_ingested` data for IVF / LSH) and the
-    * committed tombstone batches — so a post-fold replay of any of them
-    * is skipped, not re-applied.
-    */
-  private def absorbedBatchIds(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      ingestLayout: String): Set[Long] =
-    foldedBatchIds(spark, root) ++ batchIdsAt(spark, root, ingestLayout) ++
-      batchIdsAt(spark, root, "tombstones_meta")
 
   /** Fold the [[appendTextIndex]] ingested layout back into the base
     * postings — the maintenance pass of the text leg: high ingest rates
@@ -2178,45 +1860,35 @@ object Sink {
     * small files dominate probe I/O. The fold commits GENERATIONALLY
     * ([[commitGeneration]], as every fold does): the full compacted
     * index (postings + meta with the summed corpus constants + the
-    * doc-stats sidecar) lands in a fresh `gen-N/` and one `_SUCCESS`
-    * marker publishes it — never a multi-rename window (an earlier
-    * version swapped postings and meta via sequential renames and
-    * deleted the ingested layouts after; a crash mid-sequence left the
-    * folded postings AND the ingested batches both live, silently
-    * double-counting df/tf). Queries before and after are bit-identical
-    * (spec-asserted). The committed generation carries a cumulative
-    * `folded` ledger of every batch id absorbed into base postings, so a
-    * post-compaction replay of an old micro-batch is skipped by
-    * [[appendTextIndex]] instead of double-counting. Single-maintainer
-    * assumption as documented on [[appendTextIndex]]. Returns (posting
-    * rows after compaction, from the new generation's parquet footers;
-    * ingested files folded).
+    * doc-stats sidecar) lands in a fresh `gen-N/` and one `fold` log
+    * entry publishes it — never a multi-rename window, so the folded
+    * postings and the ingested batches are never both live. Queries
+    * before and after are bit-identical (spec-asserted). The entry
+    * carries the cumulative set of batch ids absorbed into base
+    * postings, so a post-compaction replay of an old micro-batch is
+    * skipped by [[appendTextIndex]] instead of double-counting.
+    * Single-maintainer assumption as documented on [[appendTextIndex]].
+    * Returns (posting rows after compaction, from the new generation's
+    * parquet footers; ingested files folded).
     */
   def compactTextIndex(
       spark: org.apache.spark.sql.SparkSession,
-      rawPath: String): (Long, Long) = {
+      rawPath: String): (Long, Long) =
+    compactText(spark, IndexLog.read(spark, rawPath))
+
+  private def compactText(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): (Long, Long) = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val path = resolveIndexRoot(spark, rawPath)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val ingested = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
-    val tombs = new org.apache.hadoop.fs.Path(s"$path/tombstones_meta")
+    val path = log.root
     // a delete-only state (tombstones, no appended batches) still has
     // physical work to fold — only the fully-clean state is a no-op
-    if (!fs.exists(ingested) && !fs.exists(tombs)) {
-      (TinyParquet.rowCount(conf, s"$path/postings"), 0L)
-    } else {
-      val nf = TinyParquet.visibleFiles(fs, ingested).size.toLong
-      val idx = readTextIndex(spark, rawPath)
-      // the BUILD-time occupancy baseline survives the fold — drift is
-      // measured from build, and compaction relocates files, not rows
-      // (the [[lshOccupancyDrift]] stance: census identical across
-      // compaction, spec-asserted). Pre-census layouts adopt their base
-      // occupancy first
-      adoptBuildCensus(spark, path, Seq("bucket"),
-        readTextPostings(spark, path))
-      val genDir = commitGeneration(spark, rawPath,
-          nextGeneration(spark, rawPath)) { genDir =>
+    if (!log.pending) (TinyParquet.rowCount(conf, s"$path/postings"), 0L)
+    else {
+      val nf = fileCount(spark, s"$path/postings_ingested")
+      val idx = readText(spark, log)
+      val genDir = commitFold(spark, log) { genDir =>
         writeDistribution(idx.postings, col("bucket"))
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$genDir/postings")
@@ -2227,32 +1899,16 @@ object Sink {
         // surviving layers under the batch-scoped tombstone mask, laid
         // out doc-bucketed again. Folded from the SIDECAR layers (docs-
         // sized), not re-derived from postings — zero-token docs survive
-        val statsView = docStatsLayers(spark, path, idx.buckets)
-        val genStats = committedTombstones(spark, path, "doc_id") match {
-          case None => statsView.drop("row_batch")
-          case Some((tombs, _, _)) =>
-            maskTombstones(statsView, "doc_id", tombs)
-        }
+        val genStats =
+          maskTombstones(spark, log, "doc_id")(docStatsLayers(spark, log))
         writeDistribution(genStats, col("dbucket"))
           .write.mode("overwrite").partitionBy("dbucket")
           .parquet(s"$genDir/doc_stats")
+        // the BUILD-time occupancy baseline survives the fold — drift is
+        // measured from build, and compaction relocates files, not rows
+        // (the [[lshOccupancyDrift]] stance: census identical across
+        // compaction, spec-asserted)
         carryTables(spark, path, genDir, "build_census")
-        // the FOLDED-BATCH ledger: ids whose effects now live in this
-        // generation's base layout (cumulative across compactions) — a
-        // micro-batch REPLAYED after its compaction (restart from an old
-        // checkpoint) must be recognized and skipped by
-        // [[appendTextIndex]] (docs would re-enter and double-count
-        // N/T/df) and by [[deleteFromTextIndex]] (the replayed tombstone
-        // would mask the folded — possibly re-appended — base rows and
-        // double-subtract constants). One 8-byte row per batch ever
-        // folded: ledger size is batches-folded, never corpus-sized.
-        // Tombstones fold PHYSICALLY here: the postings come from the
-        // tombstone-applied view and the meta carries the adjusted
-        // constants, so their layouts drop with the superseded root — a
-        // replayed delete finds its docs absent and contributes zero
-        // ([[deleteFromTextIndex]]'s replay rule)
-        writeFoldedLedger(spark, genDir,
-          absorbedBatchIds(spark, path, "meta_ingested"))
       }
       (TinyParquet.rowCount(conf, s"$genDir/postings"), nf)
     }
@@ -2273,7 +1929,9 @@ object Sink {
     * leaves one file per touched (bucket, batch) directory, and probe
     * I/O degrades with FILE COUNT (per-file open + footer read), not
     * with logical row count — the LSM L0 problem. Defaults are sized so
-    * a probed bucket reads ≲ maxIngestedFiles/buckets extra files.
+    * a probed bucket reads ≲ maxIngestedFiles/buckets extra files. The
+    * batch counts come from the commit log ([[IndexLog]]), the file
+    * count from a listing.
     *
     * Returns (compacted?, ingested files seen, committed batches seen).
     */
@@ -2281,30 +1939,28 @@ object Sink {
       spark: org.apache.spark.sql.SparkSession,
       rawPath: String,
       maxIngestedFiles: Long = UsePersistedPolicy,
-      maxBatches: Long = UsePersistedPolicy): (Boolean, Long, Long) = {
-    val pol = readValvePolicy(spark, rawPath)
+      maxBatches: Long = UsePersistedPolicy): (Boolean, Long, Long) =
+    textValve(spark, IndexLog.read(spark, rawPath), maxIngestedFiles,
+      maxBatches)
+
+  private def textValve(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot,
+      maxIngestedFiles: Long,
+      maxBatches: Long): (Boolean, Long, Long) = {
+    val pol = log.policy
     val limFiles = resolveThreshold(
       maxIngestedFiles, pol.map(_.maxIngestedFiles), 64L)
     val limBatches = resolveThreshold(maxBatches, pol.map(_.maxBatches), 16L)
-    val path = resolveIndexRoot(spark, rawPath)
-    val ingested = new org.apache.hadoop.fs.Path(s"$path/postings_ingested")
-    val fs = ingested.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = TinyParquet.visibleFiles(fs, ingested).size.toLong
-    // committed ingest batches = commit records; the below-threshold
-    // path stays job-free (the valves' idle cost on a micro-batch
-    // cadence must be zero Spark jobs — r15 verdict)
-    val nBatches = batchIdsAt(spark, path, "meta_ingested").size.toLong
+    val nFiles = fileCount(spark, s"${log.root}/postings_ingested")
+    val nBatches = log.adds.size.toLong
     // tombstone batches count against the SAME valve: each one is a
     // broadcast anti-join + meta adjustment on every read until a
     // compaction folds it physically
-    val (nTombBatches, _) = tombstonePressure(spark, path)
-    if (nFiles <= limFiles && nBatches <= limBatches &&
-        nTombBatches <= limBatches)
-      (false, nFiles, nBatches)
-    else {
-      compactTextIndex(spark, rawPath)
-      (true, nFiles, nBatches)
-    }
+    val trip = nFiles > limFiles || nBatches > limBatches ||
+      log.tombstones.size > limBatches
+    if (trip) compactText(spark, log)
+    (trip, nFiles, nBatches)
   }
 
   /** Reload a persisted inverted index: postings as a partition-pruned
@@ -2314,47 +1970,21 @@ object Sink {
     * in from the ingested layout with the partition columns type-exact,
     * and their per-batch corpus constants SUM into N and T — BM25
     * scores over the incremental state equal a full rebuild's. ONLY
-    * batches whose meta commit record landed are unioned (the batch_id
-    * IN-list prunes the ingested partition directories) — a torn append
-    * is invisible, never half-counted. Compacted generations resolve
+    * batches with an `add` log entry are unioned (the batch_id IN-list
+    * prunes the ingested partition directories) — a torn append is
+    * invisible, never half-counted. Compacted generations resolve
     * via [[resolveIndexRoot]].
     */
   def readTextIndex(
       spark: org.apache.spark.sql.SparkSession,
-      rawPath: String): graft.operators.TextAnalysis.TextIndex = {
-    val path = resolveIndexRoot(spark, rawPath)
-    val raw = readTextIndexRaw(spark, path)
-    // committed tombstones apply BATCH-SCOPED to the whole view (base +
-    // ingested): a broadcast mask keeping rows with
-    // `row_batch > tomb_batch` ([[maskTombstones]] — so a re-append
-    // AFTER a delete resurrects the doc), plus the summed
-    // corpus-constant adjustments — each delete batch counted exactly
-    // the docs visible to it, and each re-append's meta row adds its
-    // constants back, so BM25 over the logical state equals a rebuild
-    // over the surviving docs ([[deleteFromTextIndex]])
-    committedTombstones(spark, path, "doc_id") match {
-      case None => raw.copy(postings = raw.postings.drop("row_batch"))
-      case Some((tombs, nDel, tDel)) =>
-        raw.copy(
-          postings = maskTombstones(raw.postings, "doc_id", tombs),
-          nDocs = raw.nDocs - nDel,
-          totalTokens = raw.totalTokens - tDel)
-    }
-  }
+      rawPath: String): graft.operators.TextAnalysis.TextIndex =
+    readText(spark, IndexLog.read(spark, rawPath))
 
-  /** [[readTextIndex]] BEFORE tombstone application, at an already
-    * RESOLVED root — the view [[deleteFromTextIndex]] counts its
-    * contributions against (it applies only the EARLIER tombstone
-    * batches itself; see its replay rule).
-    */
-  private def readTextIndexRaw(
+  private def readText(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.operators.TextAnalysis.TextIndex = {
+      log: IndexLog.Snapshot): graft.operators.TextAnalysis.TextIndex = {
+    val path = log.root
     val conf = spark.sparkContext.hadoopConfiguration
-    def exists(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
     // one-row corpus-constants table: driver-side read, no Spark job
     // (TinyParquet — r18)
     val meta = TinyParquet.readDir(conf, s"$path/meta").head
@@ -2380,88 +2010,46 @@ object Sink {
         // always emits the column once there is data
         case _: org.apache.spark.sql.AnalysisException => true
       }
-    // row_batch rides on every row (−1 = base layout, else the ingest
-    // batch id): the batch-scoped tombstone mask ([[maskTombstones]])
-    // keys on it, and [[readTextIndex]] drops it before handing the
-    // postings out
-    val base = readTextPostings(spark, path)
-      .withColumn("row_batch", lit(-1L))
-    val (postings, nDocs, totalTokens, positional) =
-      if (!exists("postings_ingested") || !exists("meta_ingested"))
-        (base, TinyParquet.long(meta, "n_docs"),
-          TinyParquet.long(meta, "total_tokens"),
-          () => hasPositionsCol("postings"))
-      else {
-        // the meta rows are the batch commit records: sum the constants
-        // AND restrict the posting union to exactly those batches —
-        // minus any batch the folded ledger says already lives in the
-        // base postings (an append that raced a compaction; see
-        // [[appendTextIndex]]'s single-maintainer note). Commit records
-        // are tiny: driver-side read, no Spark job (TinyParquet — r18)
-        val folded = foldedBatchIds(spark, path)
-        val committed = TinyParquet.readDir(conf, s"$path/meta_ingested")
-          .map(r => (TinyParquet.long(r, "batch_id"),
-            TinyParquet.long(r, "n_docs"),
-            TinyParquet.long(r, "total_tokens")))
-          .filterNot(r => folded.contains(r._1))
-          .sortBy(_._1)
-        val ids = committed.map(_._1)
-        (base.unionByName(
-          spark.read
-            .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-              "positions ARRAY<INT>, bucket INT, batch_id BIGINT")
-            .parquet(s"$path/postings_ingested")
-            .filter(col("batch_id").isin(ids: _*))
-            .select(col("token"), col("doc_id"), col("tf"), col("dl"),
-              col("positions"), col("bucket"),
-              col("batch_id").as("row_batch"))),
-          TinyParquet.long(meta, "n_docs") + committed.map(_._2).sum,
-          TinyParquet.long(meta, "total_tokens") + committed.map(_._3).sum,
-          () => hasPositionsCol("postings") &&
-            hasPositionsCol("postings_ingested"))
-      }
+    // the committed ingest batches union in and their `add` entries
+    // sum into the corpus constants; committed tombstones then apply
+    // BATCH-SCOPED to the whole view ([[maskTombstones]] — so a
+    // re-append AFTER a delete resurrects the doc), and their entries'
+    // adjustments subtract — each delete batch counted exactly the docs
+    // visible to it, and each re-append's `add` entry adds its
+    // constants back, so BM25 over the logical state equals a rebuild
+    // over the surviving docs ([[deleteFromTextIndex]])
+    val postings = maskTombstones(spark, log, "doc_id")(
+      withAdds(readTextPostings(spark, path)
+        .withColumn("row_batch", lit(-1L)), log)(spark.read
+        .schema("token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
+          "positions ARRAY<INT>, bucket INT, batch_id BIGINT")
+        .parquet(s"$path/postings_ingested")))
     graft.operators.TextAnalysis.TextIndex(
-      postings, nDocs, totalTokens,
-      TinyParquet.int(meta, "buckets"), positional)
+      postings,
+      TinyParquet.long(meta, "n_docs") + log.adds.map(_.nDocs).sum -
+        log.tombstones.map(_.nIds).sum,
+      TinyParquet.long(meta, "total_tokens") +
+        log.adds.map(_.totalTokens).sum - log.tombstones.map(_.adj).sum,
+      TinyParquet.int(meta, "buckets"),
+      () => hasPositionsCol("postings") &&
+        (log.adds.isEmpty || hasPositionsCol("postings_ingested")))
   }
 
   /** Read the latest committed generation of a [[mergeCensusTable]]
-    * census table: `(census, batchId)` of the newest `gen-<batchId>/`
-    * directory that finished its write (carries `_SUCCESS`). None if no
-    * generation has ever committed. Partially-written generations (a
-    * crash mid-write leaves no `_SUCCESS`) are invisible — the write
-    * itself is the commit record, so there is no separate pointer file
-    * to torn-update.
+    * census table: `(census, batchId)` of the `gen-<batchId>/` its
+    * commit log's newest `fold` entry names. None if no generation has
+    * ever committed. A partially-written generation (a crash before its
+    * entry) is invisible.
     */
   def readCensusTable(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(DataFrame, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else {
-      val gens = committedGenerations(fs, root)
-      if (gens.isEmpty) None
-      else {
-        val latest = gens.max
-        Some((spark.read.parquet(s"$path/gen-$latest"), latest))
-      }
-    }
-  }
+      path: String): Option[(DataFrame, Long)] =
+    censusAt(spark, IndexLog.read(spark, path))
 
-  /** Batch ids of every committed (`_SUCCESS`-carrying) `gen-<id>/`
-    * directory under `root`. Non-numeric `gen-*` strays (a partial
-    * rename, a hand-dropped dir) are ignored rather than throwing —
-    * a stray must never blind the reader to the real generations.
-    */
-  private def committedGenerations(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(root).filter(_.isDirectory).toSeq
-      .map(_.getPath)
-      .filter(_.getName.startsWith("gen-"))
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .flatMap(p => p.getName.stripPrefix("gen-").toLongOption)
+  private def censusAt(
+      spark: org.apache.spark.sql.SparkSession,
+      log: IndexLog.Snapshot): Option[(DataFrame, Long)] =
+    log.gen.map(g => (spark.read.parquet(s"${log.rawPath}/gen-$g"), g))
 
   /** Fold one micro-batch's delta census (per-group HLL sketches from
     * [[graft.operators.Census.distinctSketch]]) into the persisted
@@ -2469,11 +2057,12 @@ object Sink {
     * [[graft.streaming.StreamCensus]]. Generation layout: each commit
     * writes the FULL merged census to a fresh `gen-<batchId>/`
     * directory (never in-place — the read of the previous generation
-    * and the write of the next touch different paths), then deletes the
-    * superseded generation. Exactly-once twice over: (a) the
-    * transactional guard — a replayed micro-batch (foreachBatch
-    * redelivers the same batchId after a crash) is skipped because a
-    * generation at-or-past that id already committed; (b) the algebraic
+    * and the write of the next touch different paths), commits it with
+    * a `fold` entry in the table's commit log ([[IndexLog]]), then
+    * deletes the superseded generation. Exactly-once twice over: (a)
+    * the transactional guard — a replayed micro-batch (foreachBatch
+    * redelivers the same batchId after a crash) is skipped because the
+    * log's newest generation is at or past that id; (b) the algebraic
     * backstop — even if the same delta merged twice, HLL union is
     * register-max idempotent, so the census would be bit-identical
     * anyway (spec-asserted both ways).
@@ -2552,8 +2141,8 @@ object Sink {
 
   /** Shared generation-commit engine of the census sinks: write the full
     * merged table to a fresh `gen-<batchId>/` through
-    * [[commitGeneration]] (the `_SUCCESS` marker IS the commit record),
-    * which then drops EVERY generation with a lower id — not just the
+    * [[commitGeneration]] (its `fold` log entry IS the commit), which
+    * then drops EVERY generation with a lower id — not just the
     * one read as current, so a crash that previously orphaned an older
     * generation (write new → die before delete) is healed by the next
     * merge instead of leaking forever.
@@ -2564,7 +2153,8 @@ object Sink {
       delta: DataFrame,
       batchId: Long)(
       mergeFn: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    val current = readCensusTable(spark, path)
+    val log = IndexLog.read(spark, path)
+    val current = censusAt(spark, log)
     current match {
       case Some((_, last)) if batchId <= last => false
       case _ =>
@@ -2572,7 +2162,7 @@ object Sink {
           case Some((base, _)) => mergeFn(base, delta)
           case None => delta
         }
-        commitGeneration(spark, path, batchId)(
+        commitGeneration(spark, log, batchId, Set.empty)(
           merged.write.mode("overwrite").parquet(_))
         true
     }
@@ -2671,8 +2261,8 @@ object Sink {
     *     exists to stop.
     *
     * Replay (a crash at ANY point, then the same call again) is
-    * exactly-once: roots where this `batchId`'s tombstone commit record
-    * already landed are SKIPPED — without that guard, a re-run after
+    * exactly-once: roots whose log already holds this `batchId`'s
+    * `tombstone` entry are SKIPPED — without that guard, a re-run after
     * the raw drop would re-derive an EMPTY id set and overwrite the
     * batch's tombstones with it, silently resurrecting every swept doc
     * (the dynamic-partition-overwrite replay contract assumes identical
@@ -2685,8 +2275,9 @@ object Sink {
     * delete already consumed would otherwise be silently skipped,
     * leaving the expiring docs servable forever (exactly the
     * dead-postings drift the sweep exists to prevent). Roots whose
-    * batch was already folded by a compaction are skipped by the
-    * ledger inside `deleteFrom*Index`. The sweep shares the indexes'
+    * batch a compaction already absorbed are skipped too. Each root's
+    * log is read once: the replay check, the delete and the valve all
+    * act on that snapshot. The sweep shares the indexes'
     * ingest batch-id lineage (SINGLE MAINTAINER, monotone ids — the
     * [[appendTextIndex]] contract), so a later re-crawl of a swept URL
     * is just an append at a higher batch id: the batch-scoped tombstone
@@ -2702,7 +2293,7 @@ object Sink {
     * serving even though its raw row survives (RetentionSweepSpec pins
     * this straddle behavior). A copy (re-)ingested at a batch id ABOVE
     * the sweep's survives: the mask is batch-scoped
-    * ([[committedTombstones]]), which is also why post-sweep re-crawls
+    * ([[maskTombstones]]), which is also why post-sweep re-crawls
     * need no compaction.
     *
     * Boundary: partitions strictly BEFORE `firstRetainedDate` drop;
@@ -2723,15 +2314,15 @@ object Sink {
     * on a sweep that found nothing to drop: pressure from PRIOR sweeps
     * is still pressure.
     *
-    * A REPLAY AFTER A VALVE FOLD takes the folded-ledger skip: the
+    * A REPLAY AFTER A VALVE FOLD takes the absorbed-batch skip: the
     * fold absorbed this batch id and deleted its id tables, so there is
-    * nothing left to verify coverage against — the ledger entry itself
+    * nothing left to verify coverage against — the `fold` entry itself
     * is trusted as proof the batch was this sweep's own earlier landing
     * (a crash between the fold and the raw drop replays exactly this
     * way; RetentionSweepSpec pins it). That trust is exactly why the
     * batch-id contract is absolute: a FOREIGN batch id reused by a
-    * sweep is caught by the coverage check only while its commit record
-    * is live — once a compaction folds it, the reuse is undetectable
+    * sweep is caught by the coverage check only while its `tombstone`
+    * entry is live — once a compaction folds it, the reuse is undetectable
     * and the expiring docs stay servable. Allocate sweep batch ids from
     * the same monotone lineage as ingest batch ids, never recycle.
     *
@@ -2763,69 +2354,63 @@ object Sink {
         p.getName.startsWith("date=") &&
           p.getName.substring("date=".length) < firstRetainedDate
       }
-    if (doomedDirs.nonEmpty) {
-      // pin the expiring ids BEFORE any delete happens anywhere
-      val ids = spark.read.parquet(doomedDirs.map(_.toString): _*)
+    // pin the expiring ids BEFORE any delete happens anywhere
+    val expiring = if (doomedDirs.isEmpty) None else Some(
+      spark.read.parquet(doomedDirs.map(_.toString): _*)
         .select(col(idCol).cast("long").as(idCol))
-        .distinct().localCheckpoint(true)
-      // a root is skipped iff this batch already landed there — and,
-      // while raw partitions still exist to re-derive from, only after
-      // VERIFYING every currently-expiring id is already IN the
-      // committed batch (see scaladoc). Subset-direction only: a
-      // legitimate mid-crash replay re-derives the same set (crash
-      // before any drop) or a SUBSET of it (crash mid-drop — some
-      // doomed partitions already gone), so committed ⊇ expiring holds
-      // for every replay of THIS sweep; an expiring id MISSING from
-      // the commit means the batch id was consumed by something else,
-      // and skipping would leave that doc servable forever. Both sides
-      // are deletion-batch-sized; the check runs only on replay.
-      def landed(path: String): Boolean = {
-        val r = resolveIndexRoot(spark, path)
-        val inTombs = batchIdsAt(spark, r, "tombstones_meta").contains(batchId)
-        // a stranded commit record (ids table gone — the physically-
-        // folded strand [[committedTombstones]] tolerates) has nothing
-        // left to verify against: the record itself proves the batch
-        // landed, so skip without the coverage check
-        val idsPath = new org.apache.hadoop.fs.Path(s"$r/tombstones")
-        if (inTombs && idsPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idsPath)) {
-          val prior = spark.read.parquet(s"$r/tombstones")
-            .filter(col("batch_id") === batchId)
-          val priorIdCol = prior.columns.filterNot(_ == "batch_id").head
-          val priorIds = prior
-            .select(col(priorIdCol).cast("long").as(idCol)).distinct()
-          val nIds = ids.count()
-          val nShared = priorIds.join(ids, idCol).count()
-          require(nShared == nIds,
-            s"batch $batchId already committed on $path does NOT cover " +
-              s"the expiring ids ($nShared of $nIds covered) - a sweep " +
-              "must not reuse a batch id an unrelated delete consumed; " +
-              "skipping would leave the expiring docs servable")
-        }
-        inTombs || foldedBatchIds(spark, r).contains(batchId)
+        .distinct().localCheckpoint(true))
+    // a root is skipped iff this batch already landed there — and,
+    // while raw partitions still exist to re-derive from, only after
+    // VERIFYING every currently-expiring id is already IN the
+    // committed batch (see scaladoc). Subset-direction only: a
+    // legitimate mid-crash replay re-derives the same set (crash
+    // before any drop) or a SUBSET of it (crash mid-drop — some
+    // doomed partitions already gone), so committed ⊇ expiring holds
+    // for every replay of THIS sweep; an expiring id MISSING from
+    // the commit means the batch id was consumed by something else,
+    // and skipping would leave that doc servable forever. Both sides
+    // are deletion-batch-sized; the check runs only on replay.
+    def landed(path: String, log: IndexLog.Snapshot, ids: DataFrame): Boolean = {
+      if (log.tombstones.exists(_.batch == batchId)) {
+        val prior = spark.read.parquet(s"${log.root}/tombstones")
+          .filter(col("batch_id") === batchId)
+        val priorIdCol = prior.columns.filterNot(_ == "batch_id").head
+        val priorIds = prior
+          .select(col(priorIdCol).cast("long").as(idCol)).distinct()
+        val nIds = ids.count()
+        val nShared = priorIds.join(ids, idCol).count()
+        require(nShared == nIds,
+          s"batch $batchId already committed on $path does NOT cover " +
+            s"the expiring ids ($nShared of $nIds covered) - a sweep " +
+            "must not reuse a batch id an unrelated delete consumed; " +
+            "skipping would leave the expiring docs servable")
       }
-      textIndexes.filterNot(landed).foreach(p =>
-        deleteFromTextIndex(spark, p,
-          ids.select(col(idCol).as("doc_id")), batchId))
-      ivfIndexes.filterNot(landed).foreach(p =>
-        deleteFromIvfIndex(spark, p,
-          ids.select(col(idCol).as("vec_id")), batchId))
-      lshIndexes.filterNot(landed).foreach(p =>
-        deleteFromLshIndex(spark, p,
-          ids.select(col(idCol).as("vec_id")), batchId))
+      log.hasTombstone(batchId)
     }
-    // hands-off maintenance on EVERY registered root, dropped
-    // partitions or not (see scaladoc): the archival lineage whose only
-    // writes are sweeps must fold its masks here or nowhere
-    textIndexes.foreach(p =>
-      compactTextIndexIfNeeded(spark, p, maxIngestedFiles, maxBatches))
-    ivfIndexes.foreach(p =>
-      compactIvfIndexIfNeeded(
-        spark, p, maxIngestedFiles, maxBatches, maxMaskedIds))
-    lshIndexes.foreach(p =>
-      compactLshIndexIfNeeded(
-        spark, p, maxIngestedFiles, maxBatches, maxMaskedIds))
+    // one log snapshot per root: the replay check, the tombstone write
+    // and the hands-off maintenance below all act on it
+    def swept(path: String, idName: String)(
+        delete: (IndexLog.Snapshot, DataFrame) => IndexLog.Snapshot)
+        : IndexLog.Snapshot = {
+      val log = IndexLog.read(spark, path)
+      expiring.filterNot(landed(path, log, _))
+        .fold(log)(ids => delete(log, ids.select(col(idCol).as(idName))))
+    }
+    // maintenance on EVERY registered root, dropped partitions or not
+    // (see scaladoc): the archival lineage whose only writes are
+    // sweeps must fold its masks here or nowhere
+    textIndexes.foreach { p =>
+      textValve(spark, swept(p, "doc_id")(deleteText(spark, _, _, batchId)),
+        maxIngestedFiles, maxBatches)
+    }
+    ivfIndexes.foreach { p =>
+      ivfValve(spark, swept(p, "vec_id")(deleteVectors(spark, _, _, batchId)),
+        maxIngestedFiles, maxBatches, maxMaskedIds)
+    }
+    lshIndexes.foreach { p =>
+      lshValve(spark, swept(p, "vec_id")(deleteVectors(spark, _, _, batchId)),
+        maxIngestedFiles, maxBatches, maxMaskedIds)
+    }
     applyRetention(spark, rawTablePath, firstRetainedDate)
   }
 }

@@ -11,10 +11,11 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
-/** Driver-side reader for TINY parquet METADATA tables (index commit
-  * records, corpus constants, centroid/codebook tables, ledgers —
-  * never data), and the one place that decides which files under a
-  * persisted index layout are visible.
+/** Driver-side reader for TINY parquet METADATA tables (corpus
+  * constants, centroid/codebook tables — never data), and the one place
+  * that decides which files under a persisted index layout are
+  * visible. Which batches are committed is the commit log's decision
+  * ([[IndexLog]]), not a listing's.
   *
   * Why it exists (r17 verdict #1): every `readTextIndex`/`readIvfIndex`
   * call paid 2–4 driver `collect()` jobs on parquet tables of a few
@@ -22,14 +23,14 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * ~5× inside each lifecycle query, dominated the bench tail. A
   * scheduler round-trip to launch one task that reads one 4 KB footer
   * is pure overhead at EVERY scale: these tables are metadata (nlist
-  * rows, one commit record per batch), and metadata belongs to the
+  * rows, one row of corpus constants), and metadata belongs to the
   * driver exactly like a table format's manifest files. Reading them
   * in-process removes the job without touching the on-disk format.
   *
-  * VISIBILITY RULE (the only one; every reader, valve census and
-  * compaction file count goes through [[visibleFiles]]): a file under a
-  * layout root is visible iff its name ends in `.parquet` and no path
-  * segment below the root starts with `_` or `.` — Spark's
+  * VISIBILITY RULE (the only one; every metadata read, valve file
+  * census and compaction file count goes through [[visibleFiles]]): a
+  * file under a layout root is visible iff its name ends in `.parquet`
+  * and no path segment below the root starts with `_` or `.` — Spark's
   * `InMemoryFileIndex` hidden-path rule, so the `_temporary/` and
   * `.spark-staging-*` leftovers of a crashed write, `_SUCCESS` and
   * `.crc` files never count. Segments above the root are not examined:
@@ -75,17 +76,6 @@ private[graft] object TinyParquet {
     val qualifiedRoot = fs.makeQualified(root)
     if (!fs.exists(qualifiedRoot)) Nil
     else walk(qualifiedRoot).sortBy(_.toString)
-  }
-
-  /** Distinct `batch_id=K` partition values of the [[visibleFiles]]
-    * under `root` — a batch directory holding no visible file is no
-    * batch.
-    */
-  def batchIds(fs: FileSystem, root: Path): Set[Long] = {
-    val qualifiedRoot = fs.makeQualified(root)
-    visibleFiles(fs, qualifiedRoot).iterator
-      .flatMap(f => partitionValues(qualifiedRoot, f).get("batch_id"))
-      .collect { case id: Long => id }.toSet
   }
 
   /** Σ footer row counts of the [[visibleFiles]] under `dir` — an exact

@@ -17,14 +17,14 @@ import graft.sinks.Sink
   * construction because the one thread that appends is the one that
   * compacts).
   *
-  * Exactly-once twice over: each micro-batch lands via
-  * [[Sink.appendTextIndex]]'s dynamic partition overwrite keyed on the
-  * replay-stable `batch_id` (a kill/restart re-running its in-flight
-  * batch overwrites its own directories, with the per-batch meta row
-  * written LAST as the commit record), and a replay from a checkpoint
-  * OLDER than a compaction is absorbed by the folded-batch ledger
-  * (the batch's docs already live in base postings — the append skips).
-  * Both spec-asserted with real kills + replays.
+  * Exactly-once by the index's commit log: each micro-batch lands via
+  * [[Sink.appendTextIndex]], whose `add` log entry is written LAST and
+  * commits the batch keyed on the replay-stable `batch_id`. A
+  * kill/restart re-running an in-flight batch without an entry
+  * overwrites its own directories and commits it; a replay of a batch
+  * the log holds, or that a compaction absorbed (its docs already live
+  * in base postings), is skipped. Both spec-asserted with real kills +
+  * replays.
   *
   * 100 TB shape: per batch, one tokenize pass over the NEW docs and one
   * partitioned write of batch-sized postings — index size never enters

@@ -997,6 +997,9 @@ class HybridRetrievalSpec extends SparkSpec {
         .repartition(col("bucket"))
         .write.partitionBy("bucket").parquet(s"$v1dir/postings")
       spark.read.parquet(s"$v2dir/meta").write.parquet(s"$v1dir/meta")
+      // with the commit log that makes it a committed index
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$v2dir/_log"), new java.io.File(s"$v1dir/_log"))
       val v1 = Sink.readTextIndex(spark, v1dir)
       assert(!v1.hasPositions, "v1 layout must be detected off the footer")
       val e = intercept[IllegalArgumentException] {

@@ -17,11 +17,9 @@ import graft.sinks.Sink
   *     and must record that space, so the probe quantizes queries in
   *     the training space (raw-vs-unit mismatch silently degrades
   *     probe-cell selection);
-  *   - an in-place compaction crash between its two tombstone-layout
-  *     deletes must leave a READABLE index (the stranded commit record
-  *     means "already folded", not path-not-found on every read);
   *   - the A/B bench parser must round-trip exponent-form numbers (a
-  *     dropped query would silently skew ab_ratio).
+  *     dropped query would silently skew ab_ratio), and a bench run
+  *     embeds only an A/B verdict measured at its own revision.
   */
 class IndexLayerHygieneSpec extends SparkSpec {
   import spark.implicits._
@@ -114,41 +112,6 @@ class IndexLayerHygieneSpec extends SparkSpec {
     }
   }
 
-  test("a stranded tombstone commit record (compaction crash between " +
-      "the two layout deletes) reads as EMPTY, not path-not-found") {
-    val emb = Tables.embeddings(spark, sf)
-    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 100)
-    val vdir = Files.createTempDirectory("hyg_strand_v").toString
-    val tdir = Files.createTempDirectory("hyg_strand_t").toString
-    val idx = Similarity.buildIvfIndexExact(emb, nlist = 4, iters = 1)
-    try {
-      // vector family: delete, then simulate the crash window — the id
-      // table is gone, the commit record survives
-      Sink.writeIvfIndex(idx, vdir)
-      Sink.deleteFromIvfIndex(spark, vdir,
-        Seq(1L, 2L).toDF("vec_id"), batchId = 0L)
-      rm(s"$vdir/tombstones")
-      val loaded = Sink.readIvfIndex(spark, vdir) // must not throw
-      assert(loaded.celled.count() === emb.count(),
-        "stranded record means 'nothing left to mask' — full corpus " +
-          "serves (the rows were physically folded before the crash)")
-
-      // text family: same window, and the corpus constants must come
-      // back UNADJUSTED (the stranded record's adj must not apply
-      // without its id table)
-      Sink.writeTextIndex(docs, tdir, buckets = 8)
-      Sink.deleteFromTextIndex(spark, tdir,
-        Seq(1L, 2L).toDF("doc_id"), batchId = 0L)
-      rm(s"$tdir/tombstones")
-      val t = Sink.readTextIndex(spark, tdir) // must not throw
-      assert(t.nDocs === docs.count(),
-        "N unadjusted when the tombstone ids are gone")
-    } finally {
-      idx.unpersist()
-      rm(vdir, tdir)
-    }
-  }
-
   test("A/B bench parse: exponent-form medians/mins round-trip instead " +
       "of silently dropping the query") {
     // q_new is written by Bench itself, in the shape with counters: an
@@ -172,5 +135,19 @@ class IndexLayerHygieneSpec extends SparkSpec {
     val mins = Bench.parseBenchFullMins(text)
     assert(mins === Map("q_fast" -> 9.5e-5, "q_slow" -> 11.5,
       "q_new" -> 2.0))
+  }
+
+  test("A/B verdict: a bench run embeds it only when it was measured at " +
+      "the revision being benched") {
+    val ab = "{\n  \"ab_ratio\": 0.9028,\n  \"ab_against\": \"6bd7e4a\",\n" +
+      "  \"ab_head\": \"515215b\",\n  \"ab_reps\": 2\n}\n"
+    val embedded = ",\"ab_ratio\":0.9028,\"ab_against\":\"6bd7e4a\"," +
+      "\"ab_measured_at\":\"515215b\""
+    assert(Bench.abFields(ab, "515215b") === embedded)
+    assert(Bench.abFields(ab, "515215b9") === embedded,
+      "git may print a longer short revision of the same commit")
+    assert(Bench.abFields(ab, "f2e5fda") === "",
+      "a verdict measured at another revision is stale")
+    assert(Bench.abFields(ab, "") === "", "no revision: nothing to match")
   }
 }

@@ -18,15 +18,13 @@ import graft.sinks.Sink
   * Pins, per index family (text / IVF / LSH):
   *   - resurrect-without-compaction ≡ a fresh build over the final
   *     logical corpus (N/T constants included for text);
-  *   - a delete-batch replay AFTER the re-append landed re-derives its
-  *     original numbers and does NOT mask the re-added rows;
+  *   - a delete-batch replay AFTER the re-append landed is a no-op (the
+  *     index's commit log holds the batch) and does NOT mask the
+  *     re-added rows;
   *   - compaction folds the resurrected state bit-identically;
-  *   - a delete-batch replay AFTER its fold is skipped via the folded
-  *     ledger (it would otherwise mask the folded — re-appended — base
-  *     rows);
-  * plus the doc-stats sidecar ADOPTION path: a legacy layout (persisted
-  * before the sidecar existed) derives one on first delete and lands on
-  * the same numbers as a build-time sidecar.
+  *   - a delete-batch replay AFTER its fold is skipped (the fold
+  *     absorbed the batch; it would otherwise mask the folded —
+  *     re-appended — base rows).
   */
 class IndexReaddSpec extends SparkSpec {
   import spark.implicits._
@@ -60,16 +58,16 @@ class IndexReaddSpec extends SparkSpec {
       val logical = Sink.readTextIndex(spark, dir)
       val ref = Sink.readTextIndex(spark, refDir)
       assert(logical.nDocs === ref.nDocs,
-        "re-append's meta row adds its count back into N")
+        "re-append's `add` entry adds its count back into N")
       assert(logical.totalTokens === ref.totalTokens,
         "re-append's Σ dl adds back into T")
       val want = bm25(ref)
       assert(bm25(logical) === want, "resurrect ≡ rebuild, no compaction")
 
-      // the delete batch REPLAYED after the re-append landed: the
-      // contribution recompute sees only batches < 0 (none), re-derives
-      // the original numbers, and the tombstone still masks only
-      // row_batch ≤ 0 — doc 10's batch-1 rows stay visible
+      // the delete batch REPLAYED after the re-append landed: the log
+      // holds its tombstone, so the replay is a no-op and the tombstone
+      // still masks only row_batch ≤ 0 — doc 10's batch-1 rows stay
+      // visible
       Sink.deleteFromTextIndex(spark, dir, doomed, batchId = 0L)
       val replayed = Sink.readTextIndex(spark, dir)
       assert(bm25(replayed) === want, "replay after re-append: no drift")
@@ -87,13 +85,13 @@ class IndexReaddSpec extends SparkSpec {
         .select(col("doc_id")).distinct().as[Long].collect().toSet
       assert(foldedIds.contains(10L) && !foldedIds.contains(20L))
 
-      // post-fold replay of the delete batch: the folded ledger skips it
+      // post-fold replay of the delete batch: the fold absorbed it
       // — without the guard it would tombstone the folded (re-appended)
       // base rows of doc 10
       Sink.deleteFromTextIndex(spark, dir, doomed, batchId = 0L)
       val guarded = Sink.readTextIndex(spark, dir)
       assert(bm25(guarded) === want,
-        "ledgered delete replay must not re-mask the folded resurrect")
+        "absorbed delete replay must not re-mask the folded resurrect")
       assert(guarded.nDocs === ref.nDocs)
     } finally rm(dir, refDir)
   }
@@ -132,12 +130,12 @@ class IndexReaddSpec extends SparkSpec {
         .parquet(s"${Sink.resolveIndexRoot(spark, dir)}/celled")
         .filter(col("vec_id") === 2).count() === 1L)
 
-      // post-fold replay of the delete: ledger-skipped — it would
+      // post-fold replay of the delete: absorbed, so skipped — it would
       // otherwise mask vec 2's folded base row
       Sink.deleteFromIvfIndex(spark, dir,
         Seq(2L, 4L).toDF("vec_id"), batchId = 0L)
       assert(servedIds(Sink.readIvfIndex(spark, dir)).contains(2L),
-        "ledgered delete replay must not re-mask the folded resurrect")
+        "absorbed delete replay must not re-mask the folded resurrect")
     } finally {
       idx.unpersist()
       rm(dir)
@@ -175,7 +173,7 @@ class IndexReaddSpec extends SparkSpec {
       Sink.deleteFromLshIndex(spark, dir,
         Seq(1L, 3L).toDF("vec_id"), batchId = 0L)
       assert(servedIds(Sink.readLshIndex(spark, dir)).contains(1L),
-        "ledgered delete replay must not re-mask the folded resurrect")
+        "absorbed delete replay must not re-mask the folded resurrect")
     } finally {
       idx.unpersist()
       rm(dir)
@@ -219,29 +217,5 @@ class IndexReaddSpec extends SparkSpec {
       idx.unpersist()
       rm(dir)
     }
-  }
-
-  test("doc-stats sidecar ADOPTION: a legacy layout (no doc_stats) " +
-      "derives one on first delete and matches build-time numbers") {
-    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 200)
-    val dirA = tmp("tadopt_built")
-    val dirB = tmp("tadopt_legacy")
-    try {
-      Sink.writeTextIndex(docs, dirA, buckets = 8)
-      Sink.writeTextIndex(docs, dirB, buckets = 8)
-      // simulate a layout persisted before the sidecar existed
-      rm(s"$dirB/doc_stats")
-      assert(!new java.io.File(s"$dirB/doc_stats").exists())
-      val doomed = docs.filter(col("doc_id") % 5 === 2).select(col("doc_id"))
-      Sink.deleteFromTextIndex(spark, dirA, doomed, batchId = 0L)
-      Sink.deleteFromTextIndex(spark, dirB, doomed, batchId = 0L)
-      assert(new java.io.File(s"$dirB/doc_stats").exists(),
-        "first delete adopts a sidecar for the legacy layout")
-      val a = Sink.readTextIndex(spark, dirA)
-      val b = Sink.readTextIndex(spark, dirB)
-      assert(a.nDocs === b.nDocs && a.totalTokens === b.totalTokens,
-        "adopted sidecar re-derives the same corpus-constant adjustments")
-      assert(bm25(a) === bm25(b))
-    } finally rm(dirA, dirB)
   }
 }

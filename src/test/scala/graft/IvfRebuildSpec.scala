@@ -98,9 +98,9 @@ class IvfRebuildSpec extends SparkSpec {
       val pinned = exhaustive().collect().toSeq
 
       // simulate a crash mid-rebuild: a gen dir with data but NO
-      // root-level _SUCCESS — the old three-rename swap could strand a
-      // new celled table against an old quantizer here; the generational
-      // commit makes the whole half-write invisible instead
+      // `fold` log entry — the generational commit makes the whole
+      // half-write invisible, so a new celled table is never served
+      // against an old quantizer
       val torn = Similarity.buildIvfIndexExact(
         emb.select(col("vec_id"), col("embedding")), nlist = 2, iters = 1)
       Sink.writeIvfIndex(torn, s"$dir/gen-1")
@@ -122,7 +122,7 @@ class IvfRebuildSpec extends SparkSpec {
       assert(rebuilt)
       assert(Sink.resolveIndexRoot(spark, dir) === s"$dir/gen-1",
         "recovered rebuild must commit generation 1")
-      assert(new java.io.File(s"$dir/gen-1/_SUCCESS").exists())
+      assert(graft.sinks.IndexLog.read(spark, dir).gen === Some(1L))
       assert(!new java.io.File(s"$dir/celled").exists(),
         "superseded flat layout must be cleaned up")
       // a fresh overwrite build supersedes all generations
@@ -130,37 +130,6 @@ class IvfRebuildSpec extends SparkSpec {
       assert(Sink.resolveIndexRoot(spark, dir) === dir)
       assert(!new java.io.File(s"$dir/gen-1").exists())
       assert(exhaustive().collect().toSeq === pinned)
-    } finally {
-      idx.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
-  test("legacy index without build_census: drift adopts live occupancy " +
-      "as baseline instead of throwing, and the valve still fires on " +
-      "post-adoption skew") {
-    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 400)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_legacy").toString
-    val idx = Similarity.buildIvfIndexExact(emb, nlist = 4, iters = 2)
-    try {
-      Sink.writeIvfIndex(idx, dir)
-      // a pre-drift-census index has no build_census subdir
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$dir/build_census"))
-      val adopted = Sink.ivfOccupancyDrift(spark, dir).collect()
-      assert(adopted.forall(_.getAs[Long]("growth_ppm") === 0L),
-        "adopted baseline = live occupancy, so first census reads zero")
-      assert(new java.io.File(s"$dir/build_census").exists(),
-        "adopted baseline must persist (stable across later calls)")
-      // drift measured from adoption onward: skewed ingest still fires
-      val skew = emb.filter(col("vec_id") === 0L)
-        .select(col("embedding"))
-        .crossJoin(spark.range(600000L, 600300L).toDF("vec_id"))
-        .select(col("vec_id"), col("embedding"))
-      Sink.appendIvfIndex(spark, dir, skew, batchId = 0L)
-      val (rebuilt, ppm) =
-        Sink.rebuildIvfIndex(spark, dir, nlist = 4, thresholdPpm = 400000L)
-      assert(rebuilt, s"post-adoption skew must fire the valve (ppm $ppm)")
     } finally {
       idx.unpersist()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -81,7 +81,7 @@ class PqLshDriftSpec extends SparkSpec {
       assert(rebuilt && ppm === ppm0)
       assert(!new java.io.File(s"$dir/ingested").exists(),
         "rebuild must absorb the ingested layout")
-      assert(new java.io.File(s"$dir/gen-1/_SUCCESS").exists(),
+      assert(Sink.resolveIndexRoot(spark, dir) === s"$dir/gen-1",
         "rebuild must commit a generation, not rename in place")
       assert(new java.io.File(s"$dir/gen-1/pq_codebooks").exists(),
         "the committed generation carries retrained codebooks")
@@ -180,14 +180,6 @@ class PqLshDriftSpec extends SparkSpec {
         drifted.map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).sortBy(x => (x._1, x._2)).toSeq,
         "census must be identical across compaction")
-
-      // legacy index without build_census: adopt live occupancy
-      val root = Sink.resolveIndexRoot(spark, dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$root/build_census"))
-      val adopted = Sink.lshOccupancyDrift(spark, dir).collect()
-      assert(adopted.forall(_.getAs[Long]("growth_ppm") === 0L))
-      assert(new java.io.File(s"$root/build_census").exists())
     } finally {
       idx.unpersist()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

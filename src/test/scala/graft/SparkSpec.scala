@@ -34,4 +34,17 @@ abstract class SparkSpec extends AnyFunSuite {
     assert(!children.contains("state"),
       s"a serving checkpoint must not grow a state store, saw $children")
   }
+
+  /** Delete the newest entry of the index commit log at `dir`: exactly
+    * the state a crash after the data write, before the entry, leaves.
+    * Goes through the Hadoop file system so the entry's checksum file
+    * goes with it.
+    */
+  def dropNewestLogEntry(dir: String): Unit = {
+    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
+    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val newest = fs.listStatus(log).map(_.getPath)
+      .filter(_.getName.matches("\\d{20}\\.json")).maxBy(_.getName)
+    assert(fs.delete(newest, false))
+  }
 }

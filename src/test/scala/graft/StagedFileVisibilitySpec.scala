@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
-import graft.sinks.{Sink, TinyParquet}
+import graft.sinks.{IndexLog, Sink, TinyParquet}
 
 /** "Uncommitted is invisible" against the leftovers of a crashed write
   * attempt. A Spark write that dies mid-job leaves its part files under
@@ -15,16 +15,17 @@ import graft.sinks.{Sink, TinyParquet}
   * or `.spark-staging-<id>/...` (dynamic partition overwrite). Those
   * files are never committed, so every reader, valve census and
   * compaction must ignore them: N/T and row counts stay put, valve
-  * counts stay put, the `folded` ledger never absorbs the crashed
-  * batch, and a later real append of that batch lands.
+  * counts stay put, no fold absorbs the crashed batch, and a later
+  * real append of that batch lands. A crashed commit-log write leaves
+  * a dot-temp entry under `_log/`, which no reader takes as an entry.
   *
   * The crashed batch id `K` is one no real write ever used. The planted
   * files are copies of real part files of the same layout, so a reader
   * that does descend into the hidden directories decodes them as rows.
   *
-  * The same contract for a fold: a generation without its `_SUCCESS`
-  * marker stays invisible and the next fold reuses its number, and a
-  * fold that crashed after its marker but before its cleanup leaves
+  * The same contract for a fold: a generation without its `fold` log
+  * entry stays invisible and the next fold reuses its number, and a
+  * fold that crashed after its entry but before its cleanup leaves
   * the layouts it absorbed on disk, where no reader, valve or later
   * fold may see them again.
   */
@@ -55,8 +56,16 @@ class StagedFileVisibilitySpec extends SparkSpec {
         StandardCopyOption.REPLACE_EXISTING)
     }
 
-  private def foldedLedger(root: String): Set[Long] =
-    spark.read.parquet(s"$root/folded").as[Long].collect().toSet
+  private def absorbed(dir: String): Set[Long] =
+    IndexLog.read(spark, dir).absorbed
+
+  /** The dot-temp file a commit-log write that crashed before its
+    * rename leaves, here for an `add` of batch K.
+    */
+  private def plantCrashedLogEntry(dir: String): Unit =
+    Files.write(Paths.get(dir, "_log", ".99999999999999999999.json.tmp"),
+      s"""{"op":"add","batch":$K,"n_docs":7,"total_tokens":70}"""
+        .getBytes("UTF-8"))
 
   /** Build text, IVF and LSH indexes with appends and a delete under
     * `base`, plant a crashed attempt of batch K into every layout a
@@ -66,7 +75,6 @@ class StagedFileVisibilitySpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val emb = Tables.embeddings(spark, sf)
     val (tdir, vdir, ldir) = (s"$base/text", s"$base/ivf", s"$base/lsh")
-    val ledgerSource = s"$base/ledger_source"
 
     Sink.writeTextIndex(docs.filter(col("doc_id") % 2 === 0), tdir,
       buckets = 8)
@@ -114,15 +122,13 @@ class StagedFileVisibilitySpec extends SparkSpec {
 
     val (nt0, ivf0, lsh0, valves0) = (textNT(), ivfRows(), lshRows(), valves())
 
-    Seq(K).toDF("batch_id").coalesce(1).write.parquet(ledgerSource)
-    val ledgerFile = partFiles(ledgerSource).head
-    Seq("meta_ingested", "postings_ingested", "tombstones_meta")
+    Seq("postings_ingested", "doc_stats_ingested", "tombstones")
       .foreach(l => plantCrashedAttempt(s"$tdir/$l", partFiles(s"$tdir/$l").head))
-    Seq("ingested", "tombstones_meta")
+    Seq("ingested", "tombstones")
       .foreach(l => plantCrashedAttempt(s"$vdir/$l", partFiles(s"$vdir/$l").head))
-    Seq("signed_ingested", "postings_ingested", "tombstones_meta")
+    Seq("signed_ingested", "postings_ingested", "tombstones")
       .foreach(l => plantCrashedAttempt(s"$ldir/$l", partFiles(s"$ldir/$l").head))
-    Seq(tdir, vdir, ldir).foreach(d => plantCrashedAttempt(s"$d/folded", ledgerFile))
+    Seq(tdir, vdir, ldir).foreach(plantCrashedLogEntry)
 
     assert(textNT() === nt0, "a crashed attempt must not count into N/T")
     assert(ivfRows() === ivf0)
@@ -130,14 +136,13 @@ class StagedFileVisibilitySpec extends SparkSpec {
     assert(valves() === valves0,
       "valve censuses must not count a crashed attempt's files or batch")
 
-    // fold everything; the ledgers hold exactly the committed batches
+    // fold everything; the folds absorb exactly the committed batches
     assert(Sink.compactTextIndexIfNeeded(spark, tdir, maxIngestedFiles = 0L)._1)
     assert(Sink.compactIvfIndexIfNeeded(spark, vdir, maxIngestedFiles = 0L)._1)
     assert(Sink.compactLshIndexIfNeeded(spark, ldir, maxIngestedFiles = 0L)._1)
-    assert(foldedLedger(Sink.resolveIndexRoot(spark, tdir)) === Set(0L, 1L, 2L))
-    assert(foldedLedger(Sink.resolveIndexRoot(spark, vdir)) ===
-      Set(0L, 1L, 2L))
-    assert(foldedLedger(Sink.resolveIndexRoot(spark, ldir)) === Set(0L, 1L))
+    assert(absorbed(tdir) === Set(0L, 1L, 2L))
+    assert(absorbed(vdir) === Set(0L, 1L, 2L))
+    assert(absorbed(ldir) === Set(0L, 1L))
     assert(textNT() === nt0, "compaction preserves the committed state")
     assert(ivfRows() === ivf0)
     assert(lshRows()._1 === lsh0._1)
@@ -157,6 +162,7 @@ class StagedFileVisibilitySpec extends SparkSpec {
 
   test("a crashed attempt's _temporary / .spark-staging files stay " +
       "invisible to readers, valves, compaction and the folded ledger") {
+    // the folded ledger: the absorbed set of the newest `fold` entry
     val base = Files.createTempDirectory("staged_vis").toString
     try crashedAttemptStaysInvisible(base)
     finally rm(base)
@@ -185,14 +191,13 @@ class StagedFileVisibilitySpec extends SparkSpec {
 
   /** The incremental layouts a fold absorbs, in any family. */
   private val incrementalLayouts = Seq("ingested", "signed_ingested",
-    "postings_ingested", "meta_ingested", "doc_stats_ingested",
-    "tombstones", "tombstones_meta")
+    "postings_ingested", "doc_stats_ingested", "tombstones")
 
   private def copyTree(from: String, to: String): Unit =
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(from), new java.io.File(to))
 
-  /** Plant a torn `gen-1/` (data, no `_SUCCESS`), then crash a fold
+  /** Plant a torn `gen-1/` (data, no `fold` entry), then crash a fold
     * after its commit and before its cleanup: the pre-fold incremental
     * layouts reappear beside the new generation. Readers, valves and a
     * second fold must all see the clean post-fold state.
@@ -325,7 +330,7 @@ class StagedFileVisibilitySpec extends SparkSpec {
       "hidden or partition-named parent reads fully") {
     val outer = Files.createTempDirectory("staged_vis_parent").toString
     try {
-      val root = s"$outer/_scratch/batch_id=9/.cache/meta_ingested"
+      val root = s"$outer/_scratch/batch_id=9/.cache/layout"
       Seq((10L, 100L, 3L), (20L, 200L, 4L))
         .toDF("n_docs", "total_tokens", "batch_id")
         .write.partitionBy("batch_id").parquet(root)
@@ -333,13 +338,13 @@ class StagedFileVisibilitySpec extends SparkSpec {
       val p = new org.apache.hadoop.fs.Path(root)
       val fs = p.getFileSystem(conf)
       assert(TinyParquet.visibleFiles(fs, p).size === 2)
-      assert(TinyParquet.batchIds(fs, p) === Set(3L, 4L))
       assert(TinyParquet.readDir(conf, root)
         .map(r => TinyParquet.long(r, "batch_id")).toSet === Set(3L, 4L))
       assert(TinyParquet.rowCount(conf, root) === 2L)
       plantCrashedAttempt(root, partFiles(root).head)
       assert(TinyParquet.visibleFiles(fs, p).size === 2)
-      assert(TinyParquet.batchIds(fs, p) === Set(3L, 4L))
+      assert(TinyParquet.readDir(conf, root)
+        .map(r => TinyParquet.long(r, "batch_id")).toSet === Set(3L, 4L))
       assert(TinyParquet.rowCount(conf, root) === 2L)
     } finally rm(outer)
   }

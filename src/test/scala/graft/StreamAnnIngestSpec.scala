@@ -111,8 +111,10 @@ class StreamAnnIngestSpec extends SparkSpec {
           s"ingested vector $id must be its own nearest neighbor")
       }
       val planStr = res.queryExecution.executedPlan.toString
-      val prunes = "PartitionFilters: \\[cell#\\d+ IN \\(([^)]+)\\)".r
-        .findAllMatchIn(planStr).toSeq
+      // the ingested scan lists the committed-batch IN-list first
+      val prunes =
+        "PartitionFilters: \\[(?:batch_id#\\d+L IN \\([^)]*\\), )?cell#\\d+ IN \\(([^)]+)\\)".r
+          .findAllMatchIn(planStr).toSeq
       assert(prunes.size === 2,
         s"both index scans must carry cell partition filters:\n$planStr")
       prunes.foreach(m =>

@@ -151,7 +151,8 @@ class TextIndexSpec extends SparkSpec {
         docs.filter(col("doc_id") % 4 === 1), batchId = 0L)
       Sink.appendTextIndex(spark, incDir,
         docs.filter(col("doc_id") % 4 === 3), batchId = 1L)
-      // redelivered batch: dynamic overwrite must not double-count
+      // redelivered batch: the log holds its entry, so it must not
+      // double-count
       Sink.appendTextIndex(spark, incDir,
         docs.filter(col("doc_id") % 4 === 3), batchId = 1L)
       Sink.writeTextIndex(docs, fullDir)
@@ -169,12 +170,12 @@ class TextIndexSpec extends SparkSpec {
       assert(inc === topk(fullIdx),
         "incremental index must score identically to a full rebuild")
 
-      // TORN APPEND: postings landed but the meta commit record didn't
-      // (crash between the two writes — simulated by deleting batch 1's
-      // meta partition) — the batch must be INVISIBLE, not half-counted
-      // into df with stale N/T
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$incDir/meta_ingested/batch_id=1"))
+      // TORN APPEND: postings landed but the `add` log entry didn't
+      // (crash between the data and the entry — simulated by deleting
+      // batch 1's entry, the newest: the redelivery above was a no-op)
+      // — the batch must be INVISIBLE, not half-counted into df with
+      // stale N/T
+      dropNewestLogEntry(incDir)
       val torn = Sink.readTextIndex(spark, incDir)
       assert(torn.nDocs === fullIdx.nDocs -
         docs.filter(col("doc_id") % 4 === 3).count(),
@@ -186,9 +187,9 @@ class TextIndexSpec extends SparkSpec {
 
       val (nPost, folded) = Sink.compactTextIndex(spark, incDir)
       assert(folded > 0L, "compaction must fold ingested files")
-      // generational commit: one _SUCCESS marker publishes the fold —
+      // generational commit: one `fold` log entry publishes the fold —
       // no multi-rename window, superseded flat layout cleaned up
-      assert(new java.io.File(s"$incDir/gen-1/_SUCCESS").exists())
+      assert(Sink.resolveIndexRoot(spark, incDir) === s"$incDir/gen-1")
       assert(!new java.io.File(s"$incDir/postings_ingested").exists())
       assert(!new java.io.File(s"$incDir/postings").exists())
       val compacted = Sink.readTextIndex(spark, incDir)
@@ -196,8 +197,8 @@ class TextIndexSpec extends SparkSpec {
       assert(topk(compacted) === inc,
         "queries must be bit-identical across compaction")
       // exactly-once ACROSS the compaction boundary: a restart from a
-      // checkpoint older than the fold redelivers batch 1 — the folded
-      // ledger must recognize it and skip, or its docs double-count
+      // checkpoint older than the fold redelivers batch 1 — the fold's
+      // absorbed set must recognize it and skip, or its docs double-count
       Sink.appendTextIndex(spark, incDir,
         docs.filter(col("doc_id") % 4 === 3), batchId = 1L)
       assert(Sink.readTextIndex(spark, incDir).nDocs === fullIdx.nDocs,
@@ -216,7 +217,7 @@ class TextIndexSpec extends SparkSpec {
       // superseded committed generations are cleaned up, not leaked
       assert(!new java.io.File(s"$incDir/gen-1").exists(),
         "every committed generation below the new one must be dropped")
-      // the ledger is cumulative: batches 0..2 all skip on replay now
+      // the absorbed set is cumulative: batches 0..2 all skip on replay
       val nAfter = Sink.readTextIndex(spark, incDir).nDocs
       Seq(0L, 1L, 2L).foreach { b =>
         Sink.appendTextIndex(spark, incDir,
@@ -397,14 +398,6 @@ class TextIndexSpec extends SparkSpec {
       val d0 = Sink.textOccupancyDrift(spark, dir)
       assert(d0.filter(col("growth_ppm") =!= 0L).count() === 0L,
         "fresh build must census at zero drift")
-      // legacy layout (persisted before the census existed): adopt live
-      // occupancy as baseline instead of throwing, and persist it
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$dir/build_census"))
-      val d1 = Sink.textOccupancyDrift(spark, dir)
-      assert(d1.filter(col("growth_ppm") =!= 0L).count() === 0L)
-      assert(new java.io.File(s"$dir/build_census").exists(),
-        "adopted baseline must persist")
       // skewed ingest: one token family -> exactly one bucket grows,
       // by exactly the ingested posting count
       val skew = (100L until 150L).map(i => (i, "hotterm")).toSeq

@@ -225,7 +225,7 @@ class VectorTombstoneValveSpec extends SparkSpec {
       assert(c1 && m1 === 1L,
         "the NO-ARG valve read maxMaskedIds = 0 from the index itself")
       assert(ivfServed(dir) === before)
-      // the policy file sits at the raw root — still there post-fold
+      // the fold's log entry carries the policy forward
       assert(Sink.readValvePolicy(spark, dir).isDefined)
       // explicit argument overrides the persisted tier
       Sink.deleteFromIvfIndex(spark, dir,
@@ -320,58 +320,6 @@ class VectorTombstoneValveSpec extends SparkSpec {
     } finally rm(dir)
   }
 
-  test("r17: the marker-census FALLBACK is an assertion, not a comment " +
-      "— with a `_p-` marker deleted (crash between record and marker, " +
-      "pre-r16 layout) the census reads IDENTICAL counts via the " +
-      "one-collect path and the valve still trips at threshold; " +
-      "r16-shape `_p-<n>-<adj>` markers still fast-path parse") {
-    val emb = Tables.embeddings(spark, sf)
-    val dir = tmp("valve_marker_fb")
-    try {
-      val built = Similarity.buildIvfIndexExact(emb, nlist = 4, iters = 1)
-      Sink.writeIvfIndex(built, dir)
-      built.unpersist()
-      Sink.deleteFromIvfIndex(spark, dir,
-        emb.filter(col("vec_id") === 3).select(col("vec_id")),
-        batchId = 0L)
-      Sink.deleteFromIvfIndex(spark, dir,
-        emb.filter(col("vec_id") === 4 || col("vec_id") === 5)
-          .select(col("vec_id")),
-        batchId = 1L)
-      def markerOf(batch: Long): java.io.File =
-        new java.io.File(s"$dir/tombstones_meta/batch_id=$batch")
-          .listFiles().filter(_.getName.startsWith("_p-")).head
-      // all markers present: the job-free fast path censuses (2, 3)
-      val (c0, _, _, m0) = Sink.compactIvfIndexIfNeeded(spark, dir)
-      assert(!c0 && m0 === 3L, "fast-path census: 3 masked ids")
-      // rewrite batch 1's marker into the r16 `_p-<n>-<adj>` shape —
-      // indexes deleted-from under r16 carry exactly this
-      val m1 = markerOf(1L)
-      assert(m1.getName === "_p-2", "r17 writes the narrowed shape")
-      assert(m1.renameTo(new java.io.File(m1.getParentFile, "_p-2-7")))
-      val (c1, _, _, mOld) = Sink.compactIvfIndexIfNeeded(spark, dir)
-      assert(!c1 && mOld === 3L,
-        "an r16-shape marker parses on the fast path: same census")
-      // delete batch 0's marker: the census must fall back to the
-      // one-collect commit-record read for the WHOLE census and return
-      // the SAME counts — correctness never rides the cache
-      assert(markerOf(0L).delete())
-      val (c2, _, _, mFb) = Sink.compactIvfIndexIfNeeded(spark, dir)
-      assert(!c2 && mFb === 3L,
-        "marker missing: fallback census returns identical counts")
-      // and the valve still TRIPS at threshold through the fallback
-      val before = ivfServed(dir)
-      val (c3, _, _, mTrip) =
-        Sink.compactIvfIndexIfNeeded(spark, dir, maxMaskedIds = 2L)
-      assert(c3 && mTrip === 3L,
-        "the fold decision rides the fallback census, not the markers")
-      assert(ivfServed(dir) === before,
-        "post-fold serve bit-identical (the standing fold contract)")
-      val (c4, _, _, m4) = Sink.compactIvfIndexIfNeeded(spark, dir)
-      assert(!c4 && m4 === 0L, "post-fold pressure reads zero")
-    } finally rm(dir)
-  }
-
   test("r17: valve-policy hygiene — negative fields reject at write AND " +
       "at read (a hand-edited -1 must not silently fold on every call); " +
       "non-sentinel negative threshold args reject; a policy rewrite is " +
@@ -383,27 +331,24 @@ class VectorTombstoneValveSpec extends SparkSpec {
           Sink.ValvePolicy(64L, -1L, 100000L))
       }
       assert(eW.getMessage.contains(">= 0"))
-      assert(!new java.io.File(s"$dir/_valve_policy.json").exists(),
+      assert(!new java.io.File(s"$dir/_log").exists(),
         "a rejected policy writes nothing")
       Sink.writeValvePolicy(spark, dir, Sink.ValvePolicy(1L, 2L, 3L))
       assert(Sink.readValvePolicy(spark, dir)
         .contains(Sink.ValvePolicy(1L, 2L, 3L)))
-      // rewrite in place: rename-over leaves no tmp file and the new
-      // value serves (the pre-r17 delete+rename pair had a window where
-      // a concurrent valve read NO policy and fell back to built-ins)
+      // a later declaration appends a new log entry: the rename into
+      // place leaves no tmp file and the new value serves
       Sink.writeValvePolicy(spark, dir, Sink.ValvePolicy(4L, 5L, 6L))
       assert(Sink.readValvePolicy(spark, dir)
         .contains(Sink.ValvePolicy(4L, 5L, 6L)))
-      assert(!new java.io.File(s"$dir/._valve_policy.json.tmp").exists(),
-        "rename-over consumed the tmp file")
-      // a hand-edited negative value rejects LOUDLY on read
-      val pw = new java.io.PrintWriter(s"$dir/_valve_policy.json")
-      pw.write("""{"max_ingested_files":64,"max_batches":-1,""" +
-        """"max_masked_ids":100000}""")
+      assert(new java.io.File(s"$dir/_log").list()
+        .forall(n => !n.endsWith(".tmp") && !n.endsWith(".tmp.crc")),
+        "the rename consumed the tmp file")
+      // a hand-written negative value rejects LOUDLY on read
+      val pw = new java.io.PrintWriter(s"$dir/_log/${"0" * 19}9.json")
+      pw.write("""{"op":"policy","max_ingested_files":64,""" +
+        """"max_batches":-1,"max_masked_ids":100000}""")
       pw.close()
-      // a hand-edit bypasses Hadoop's ChecksumFileSystem — drop the
-      // stale .crc sidecar so the read reaches the field validation
-      new java.io.File(s"$dir/._valve_policy.json.crc").delete()
       val eR = intercept[IllegalArgumentException] {
         Sink.readValvePolicy(spark, dir)
       }
@@ -411,6 +356,7 @@ class VectorTombstoneValveSpec extends SparkSpec {
       // explicit args below the -1 sentinel are caller bugs, not
       // silent use-the-persisted-policy requests (valid policy back in
       // place first, so the arg check is what fires)
+      assert(new java.io.File(s"$dir/_log/${"0" * 19}9.json").delete())
       Sink.writeValvePolicy(spark, dir, Sink.ValvePolicy(4L, 5L, 6L))
       val eA = intercept[IllegalArgumentException] {
         Sink.compactIvfIndexIfNeeded(spark, dir, maxMaskedIds = -2L)
