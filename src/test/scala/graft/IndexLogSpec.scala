@@ -21,10 +21,9 @@ import graft.sinks.{IndexLog, Sink}
   * the batch once.
   *
   * Also pinned: a torn LSH or IVF append that a fold ran over is not
-  * absorbed, so its replay lands (before the commit log, the fold
-  * absorbed the batch from the directory listing and the replay was
-  * skipped for good), and an index path without a commit log fails
-  * fast.
+  * absorbed — a fold absorbs only batches with an entry, never what a
+  * listing finds — so its replay lands and every vector of the batch
+  * is served; and an index path without a commit log fails fast.
   */
 class IndexLogSpec extends SparkSpec {
   import spark.implicits._
