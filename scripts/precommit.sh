@@ -5,7 +5,8 @@
 # end-of-round snapshot that failed `sbt compile`, which blanked the
 # entire driver signal for the round — this hook makes that impossible.
 # A staged change under graft/sinks also runs the index crash-state specs,
-# and one to Bench, ScaleCheck or graft/metrics the measurement specs.
+# one to Bench, ScaleCheck or graft/metrics the measurement specs, and one
+# to the router, its config builder or the routed stream the routing specs.
 # Bypass (emergencies only): git commit --no-verify.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -58,4 +59,21 @@ if git diff --cached --name-only | grep -qE \
     exit 1
   fi
   echo "[precommit] measurement specs green" >&2
+fi
+
+# First-match routing: the router, the config that builds it and the
+# streaming epoch body that runs it. A staged change there also runs the
+# routing, plan-count and compile-guard specs and the specs that land
+# routed rows.
+if git diff --cached --name-only | grep -qE \
+    '^src/main/scala/graft/(operators/Router|config/EngineConfig|streaming/StreamRoutes)\.scala$'; then
+  echo "[precommit] router staged - running the routing specs" >&2
+  if ! sbt -batch "testOnly graft.RouterSpec graft.RouterPlanSpec graft.ConfigExprRouteSpec \
+      graft.StreamPiiRouteSpec graft.MqttFunctionsSpec graft.SinkSpec graft.EdgeCaseSpec" \
+      >/tmp/precommit-router.log 2>&1; then
+    echo "[precommit] ROUTING SPECS FAILED - commit refused. Tail of log:" >&2
+    tail -30 /tmp/precommit-router.log >&2
+    exit 1
+  fi
+  echo "[precommit] routing specs green" >&2
 fi

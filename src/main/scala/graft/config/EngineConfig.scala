@@ -1,6 +1,6 @@
 package graft.config
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 
 import graft.operators.{Route, Router}
 import graft.schema.{Catalog => SchemaCatalog}
@@ -111,7 +111,9 @@ final case class EngineConfig(
     *   - `select` (+ optional `where`): Spark SQL expression strings
     *     compiled via `expr()` — deployable by editing config alone, the
     *     full scalar-function surface with zero recompilation (Catalyst
-    *     sees plain expressions: pushdown, pruning, codegen all apply);
+    *     sees plain expressions: pushdown, pruning, codegen all apply).
+    *     They reach the Router as expressions (`Route.select`), not as a
+    *     function, so the select routes of one table share one plan;
     *   - `script`: a name resolved against the precompiled transform
     *     registry (for logic beyond a select list — typed fan-out, UDAFs);
     *   - neither: passthrough capture.
@@ -130,9 +132,9 @@ final case class EngineConfig(
         s"route $i: `script` and `select` are mutually exclusive")
       require(rc.records.isEmpty || (rc.script.isEmpty && rc.select.isEmpty),
         s"route $i: `records` is mutually exclusive with `script`/`select`")
-      val where = rc.where // parse errors surface at fanOut, per call
-      val applyWhere: DataFrame => DataFrame =
-        df => if (where.isEmpty) df else df.filter(expr(where))
+      // the Router applies `where` before the route's transform, emits or
+      // passthrough capture; parse errors surface at fanOut
+      val where = Option.when(rc.where.nonEmpty)(expr(rc.where))
       if (rc.records.nonEmpty) {
         // multi-record fan-out from pure TOML: each group is its own
         // (predicate, select list, target table) — one matched message
@@ -142,35 +144,23 @@ final case class EngineConfig(
             s"route $i records[$j]: `table` is required")
           require(g.select.nonEmpty,
             s"route $i records[$j]: `select` is required")
-          val gWhere = g.where
-          val gSelect = g.select
-          g.table -> ((df: DataFrame) => {
-            val base = applyWhere(df)
-            val kept = if (gWhere.isEmpty) base else base.filter(expr(gWhere))
-            kept.select(gSelect.map(expr): _*)
-          })
+          // parsed once, on first use: a malformed expression fails the
+          // fan-out that uses it
+          lazy val gWhere = Option.when(g.where.nonEmpty)(GraftShims.parsed(expr(g.where)))
+          lazy val gSelect = g.select.map(s => GraftShims.parsed(expr(s)))
+          g.table -> ((df: DataFrame) => gWhere.fold(df)(df.filter).select(gSelect: _*))
         }
-        Route(s"route_$i", rc.filter, rc.table, None, emits)
-      } else {
-      val t: Option[DataFrame => DataFrame] =
-        if (rc.select.nonEmpty) {
-          val selects = rc.select
-          Some(df => applyWhere(df).select(selects.map(expr): _*))
-        } else rc.script match {
-          case "" if where.isEmpty => None
-          case "" =>
-            // where-only route: filter, THEN the canonical passthrough
-            // capture — a declared predicate must apply even without a
-            // select list (silently capturing everything would be a
-            // config-deployment footgun).
-            Some(df => graft.model.Envelope.passthrough(applyWhere(df)))
-          case s =>
-            val fn = transforms.getOrElse(s,
-              throw new IllegalArgumentException(s"unknown transform script: $s"))
-            if (where.isEmpty) Some(fn)
-            else Some(df => fn(applyWhere(df)))
-        }
-      Route(s"route_$i", rc.filter, rc.table, t)
+        Route(s"route_$i", rc.filter, rc.table, emits = emits, where = where)
+      } else if (rc.select.nonEmpty)
+        Route(s"route_$i", rc.filter, rc.table,
+          select = rc.select.map(expr), where = where)
+      else {
+        // neither select nor script: passthrough capture — of the where-
+        // filtered rows when a where is declared (a declared predicate is
+        // never silently dropped)
+        val t = Option.when(rc.script.nonEmpty)(transforms.getOrElse(rc.script,
+          throw new IllegalArgumentException(s"unknown transform script: ${rc.script}")))
+        Route(s"route_$i", rc.filter, rc.table, t, where = where)
       }
     }
     new Router(rs, catalog, validation.strictTypes)

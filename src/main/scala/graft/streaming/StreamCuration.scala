@@ -40,8 +40,9 @@ final case class CuratedHit(
   *      document's routing metadata carried ALONGSIDE the probe rows —
   *      state itself stays signatures-only, so the carry widens the
   *      exchange by one small JSON string and the store by nothing;
-  *   4. sink: per-epoch first-match routing (ordered AND-NOT branch
-  *      chain, [[graft.operators.Router]] semantics) into per-table
+  *   4. sink: per-epoch first-match routing (one route tag per row from
+  *      the ordered predicates, then one filter per target table — the
+  *      [[graft.operators.Router]] one-index design) into per-table
   *      writers inside `foreachBatch` — the A9 multi-table fan-out with
   *      the batchId available for idempotent writes.
   *

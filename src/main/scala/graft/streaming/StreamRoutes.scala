@@ -40,21 +40,20 @@ object StreamRoutes {
         count(lit(1)).as("n"))
 
   /** First-match route + multi-table fan-out as a streaming sink: each
-    * micro-batch is routed with the same batch Router (one plan, evaluated
-    * incrementally) and every target table's slice handed to `write`.
-    * `foreachBatch` is the idiomatic multi-sink shape — one pass per epoch,
-    * back-pressured by the trigger.
+    * micro-batch is routed with the same batch Router and every target
+    * table's slice handed to `write`. `foreachBatch` is the idiomatic
+    * multi-sink shape — one pass per epoch, back-pressured by the trigger.
     */
   def routedWriter(
       messages: DataFrame,
       router: Router)(
       write: (String, DataFrame) => Unit): DataStreamWriter[Row] =
     messages.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // one materialization per epoch, N sink writes: without the
-      // persist every table's write re-evaluates the batch's routing
-      // pipeline (sibling subtrees never share work plan-side)
-      val shared = batch.persist()
-      try router.fanOut(shared).foreach { case (table, df) =>
+      // the first-match route index is computed once per epoch and
+      // persisted with the batch; each table's plan (one per table) then
+      // filters that cached index instead of re-matching topics
+      val shared = router.withIndex(batch).persist()
+      try router.fanOutIndexed(shared).foreach { case (table, df) =>
         write(table, df)
       } finally {
         shared.unpersist()

@@ -12,6 +12,12 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `c` with its SQL text parsed now (`expr(...)` columns otherwise parse
+    * again in every plan that uses them), by the active session's parser.
+    */
+  def parsed(c: Column): Column =
+    column(classic.ColumnNodeToExpressionConverter(c.node))
+
   /** Block until every listener event posted so far has been delivered
     * (`listenerBus` is `private[spark]`), so counters read afterwards
     * include every job and task that ran before the call.

@@ -2,8 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
 import org.apache.spark.sql.functions._
 
+import graft.functions.MqttFunctions
 import graft.model.{Envelope, Message}
 import graft.operators.{Route, Router, Transforms}
 import graft.schema.{CatalogBuilder, TableSchema}
@@ -34,15 +39,17 @@ class RouterSpec extends SparkSpec {
     assert(tagged("other/x") === (null, Router.RawTable))
   }
 
-  test("branch predicates partition the stream (AND-NOT chain)") {
+  test("fanOut partitions the stream: a catch-all after takes the rest") {
     val r = Router(
-      Route("a", "sensors/#"),
-      Route("b", "#")) // catch-all after
-    val n0 = messages.filter(r.branchPredicate(0)).count()
-    val n1 = messages.filter(r.branchPredicate(1)).count()
+      Route("a", "sensors/#", table = "t_a"),
+      Route("b", "#", table = "t_b")) // catch-all after
+    val out = r.fanOut(messages)
+    val n0 = out("t_a").count()
+    val n1 = out("t_b").count()
     assert(n0 === 2)
     assert(n1 === 2) // everything not sensors/#
     assert(n0 + n1 === messages.count())
+    assert(out(Router.RawTable).count() === 0)
   }
 
   test("passthrough canonical format: 6 fields, json null for non-JSON (router_test.go:38-86)") {
@@ -123,8 +130,7 @@ class RouterSpec extends SparkSpec {
     val r = new Router(Seq(
       Route("m", "sensors/#", table = "sensor_readings",
         transform = Some(Transforms.multiTable))))
-    val branches = r.branches(messages)
-    val m = branches("m")
+    val m = r.fanOut(messages)("sensor_readings")
     assert(m.filter(col("table") === "sensor_readings").count() === 2)
     // non-JSON and non-matching topics excluded
     assert(m.count() === 2)
@@ -237,5 +243,64 @@ class RouterSpec extends SparkSpec {
     assert(out("devices/d1/telemetry") === 1.5)
     assert(out("sensors/hum1") === 0.0) // no temperature, no value -> 0
     assert(!out.contains("other/x")) // non-JSON filtered (if msg.json)
+  }
+
+  test("fanOut equals a plain first-match reference over every route kind") {
+    def tagged(src: String)(df: DataFrame): DataFrame =
+      df.select(col("topic"), col("qos"), lit(src).as("src"))
+    // two select routes (one with a where) fold into one plan of `mix`; a
+    // script route and a records emit land there too, each as its own plan
+    val routes = Seq(
+      Route("sel_where", "a/+/x", table = "mix",
+        select = Seq(col("topic"), col("qos"), lit("sel_where").as("src")),
+        where = Some(col("qos") > 0)),
+      Route("sel", "a/#", table = "mix",
+        select = Seq(expr("topic"), expr("qos"), expr("'sel' as src"))),
+      Route("script", "b/+", table = "mix", transform = Some(tagged("script"))),
+      Route("records", "c/#", emits = Seq(
+        "mix" -> (df => tagged("records")(df.filter(col("qos") =!= 1))),
+        "rec_only" -> tagged("rec_only"))),
+      Route("raw", "+/raw", table = Router.RawTable),
+      Route("kept", "d/#", table = "kept", where = Some(expr("qos < 2"))))
+    val levels = Seq("a", "b", "c", "d", "z", "raw", "x", "")
+    val topics = for (a <- levels; b <- levels :+ "-"; c <- Seq("-", "x", "raw"))
+      yield Seq(a, b, c).filter(_ != "-").mkString("/")
+    // the envelope's topic is nullable: a null topic matches no filter and
+    // is not unmatched either, so it lands in no table
+    val msgs = (topics :+ null).zipWithIndex.map { case (t, i) =>
+      Message(t, (if (i % 4 == 0) "raw" else s"""{"i":$i}""").getBytes("UTF-8"),
+        i % 3, retain = false, new Timestamp(i * 1000L))
+    }
+    val expected = mutable.Map[String, Vector[(String, Int, String)]]()
+      .withDefaultValue(Vector.empty)
+    def add(t: String, m: Message, src: String): Unit =
+      expected(t) = expected(t) :+ ((m.topic, m.qos, src))
+    msgs.filter(_.topic != null).foreach { m =>
+      routes.indexWhere(r => MqttFunctions.topicMatches(r.filter, m.topic)) match {
+        case -1 | 4 => add(Router.RawTable, m, null)
+        case 0 => if (m.qos > 0) add("mix", m, "sel_where")
+        case 1 => add("mix", m, "sel")
+        case 2 => add("mix", m, "script")
+        case 3 =>
+          if (m.qos != 1) add("mix", m, "records")
+          add("rec_only", m, "rec_only")
+        case 5 => if (m.qos < 2) add("kept", m, null)
+      }
+    }
+    val out = new Router(routes).fanOut(msgs.toDS().toDF())
+    assert(out.keySet === Set("mix", "rec_only", "kept", Router.RawTable))
+    def counted(rows: Seq[(String, Int, String)]) =
+      rows.groupBy(identity).view.mapValues(_.size).toMap
+    out.foreach { case (t, df) =>
+      val src = if (df.columns.contains("src")) col("src") else lit(null).cast("string")
+      val got = df.select(col("topic"), col("qos"), src)
+        .as[(String, Int, String)].collect().toSeq
+      assert(counted(got) === counted(expected(t)), s"table $t")
+    }
+    def leaves(p: LogicalPlan): Int = p match {
+      case u: Union => u.children.map(leaves).sum
+      case _ => 1
+    }
+    assert(leaves(out("mix").queryExecution.analyzed) === 3)
   }
 }
